@@ -459,7 +459,7 @@ object SparkEntry {
     * whole embedding rows reduced by the spillable `vec_sum` aggregate
     * ([[Graph.propagateVec]]) instead of two scalar-row shuffles. Same
     * oracle as g3; the scalar/vector crossover by embedding width is
-    * recorded in PLANS.md (BenchSpmm). */
+    * recorded in PLANS.md ("SpMM width crossover"). */
   private val g8PropagateVec: Q = (s, dir) => {
     val edges = Tables.lineitem(s, dir)
       .select(col("l_suppkey").as("src"), col("l_partkey").as("dst")).distinct()
@@ -3236,21 +3236,13 @@ object SparkEntry {
     // broadcast-scores mode (zero |E| exchanges per round — the r13
     // A/B: warm 3.0-3.3 s vs 3.5-5.1 s at sf0.1, oracle-exact, both
     // core counts) is only safe while the node-score frames fit the
-    // broadcast budget. The gate lives INSIDE Graph.hits now (r13
-    // ADVICE + verdict item 5): auto mode counts the pinned frame's
-    // distinct nodes — the quantity the broadcast actually ships, not
-    // an edge-count proxy that permits multi-100MB score frames — in
-    // ONE agg job that doubles as the pin's materialization, and
+    // broadcast budget. The gate lives INSIDE Graph.hits (r13 ADVICE +
+    // verdict item 5): auto mode estimates the distinct node counts —
+    // the quantity the broadcast actually ships, not an edge-count
+    // proxy that permits multi-100MB score frames — with a separate HLL
+    // `approx_count_distinct` job over the already-pinned frame, and
     // degrades the SAME query to the shuffling plan at cluster scale.
-    // SPARK_GRAFT_HITS_BROADCAST=0 forces the shuffling plan, =1 the
-    // broadcast plan WITHOUT the gate's count job — the two A/B arms
-    // around the default auto gate.
-    Graph.hits(e, "src", "dst", rounds = 2,
-      broadcastScores = sys.env.get("SPARK_GRAFT_HITS_BROADCAST") match {
-        case Some("0") => Some(false)
-        case Some("1") => Some(true)
-        case _ => None
-      })
+    Graph.hits(e, "src", "dst", rounds = 2)
       .select(col("dst").as("part"),
         round(col("authority"), 6).as("authority"))
   }

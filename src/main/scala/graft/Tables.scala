@@ -19,7 +19,7 @@ object Tables {
     * `spark.read.parquet(path)` is NOT free: every call re-lists the
     * path and re-reads a parquet footer for schema inference — measured
     * 58-66 ms of driver time per call on the bench fixtures
-    * (ProbeTableCost), and the bench executes every query 3× (cold + 2
+    * (OPTIMIZATION_r15.md), and the bench executes every query 3× (cold + 2
     * warm), each execution re-calling the loaders for every table it
     * touches: ~0.1 s of pure metadata re-resolution inside every timed
     * warm run. Memoizing the RESOLVED DataFrame (an immutable analyzed

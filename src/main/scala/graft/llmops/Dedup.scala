@@ -1,6 +1,7 @@
 package graft.llmops
 
 import graft.functions.{MinHashFunctions, TextFunctions}
+import graft.ops.PairGen
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -261,16 +262,8 @@ object Dedup {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    // same degenerate-doc guard as the portable variant: every
-    // empty-token doc folds to signature 0 and would pair with every
-    // other at Hamming 0
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash64(col(text)).as("sig"))
-    val banded = sig.select(col("doc"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * width).bitwiseAND(mask).as("key"))): _*)).as("bk"))
+    val banded = bandStage(docs, id, text, 1, simHash64, sig =>
+      (0 until bands).map(b => shiftright(sig, b * width).bitwiseAND(mask)))
     bucketLocalPairStructs(banded, maxBucket)
       .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"),
         bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig"))).as("hamming"))
@@ -316,13 +309,8 @@ object Dedup {
     require(32 % bands == 0, s"bands must divide 32, got $bands")
     val width = 32 / bands
     val mask = (1L << width) - 1
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash32Portable(col(text)).as("sig"))
-    val banded = sig.select(col("doc"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * width).bitwiseAND(mask).as("key"))): _*)).as("bk"))
+    val banded = bandStage(docs, id, text, 1, simHash32Portable, sig =>
+      (0 until bands).map(b => shiftright(sig, b * width).bitwiseAND(mask)))
     bucketLocalPairStructs(banded, maxBucket)
       .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"),
         bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig")))
@@ -419,22 +407,20 @@ object Dedup {
   private def simHash128BandedAuto(docs: DataFrame, id: String,
       text: String, targetBucketSize: Long,
       precountedN: Option[Long] = None): DataFrame = {
-    // a zero/negative precount is always a caller bug: silently clamping
-    // it would pick a wrong band width and diverge from the DuckDB
-    // oracle's count(*) basis with no error — fail loudly instead
+    val width = SimSearch.autoWidth(corpusSize(docs, precountedN),
+      targetBucketSize)
+    val mask = (1L << width) - 1
+    bandStage(docs, id, text, 1, simHash128Portable, sig =>
+      (0 until 4).map(k => element_at(sig, k + 1).bitwiseAND(mask)))
+  }
+
+  /** n for the auto-width families: `precountedN`, else a count of ALL
+    * docs (the oracles' `count(*)` basis). A non-positive precount is a
+    * caller bug that would silently diverge the width — fail loudly. */
+  private def corpusSize(docs: DataFrame, precountedN: Option[Long]): Long = {
     require(precountedN.forall(_ > 0),
       s"precountedN must be positive when supplied, got $precountedN")
-    val n = math.max(1L, precountedN.getOrElse(docs.count()))
-    val width = SimSearch.autoWidth(n, targetBucketSize)
-    val mask = (1L << width) - 1
-    graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash128Portable(col(text)).as("sig"))
-      .select(col("doc"), col("sig"),
-        explode(array((0 until 4).map(k =>
-          struct(lit(k).as("band"),
-            element_at(col("sig"), k + 1).bitwiseAND(mask).as("key"))): _*))
-          .as("bk"))
+    math.max(1L, precountedN.getOrElse(docs.count()))
   }
 
   /** The scale re-family of [[simHashPairsPortable]] — the d22/d23
@@ -477,11 +463,7 @@ object Dedup {
     bucketLocalPairStructs(simHashBandedAuto(docs, id, text,
         targetBucketSize, precountedN), maxBucket)
       .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"),
-        (bit_count(element_at(col("p.a.sig"), 1)
-            .bitwiseXOR(element_at(col("p.b.sig"), 1)))
-          + bit_count(element_at(col("p.a.sig"), 2)
-            .bitwiseXOR(element_at(col("p.b.sig"), 2))))
-          .cast("long").as("hamming"))
+        hamming64(col("p.a.sig"), col("p.b.sig")).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
 
@@ -514,28 +496,48 @@ object Dedup {
     * (e.g. chaining the pair stage with its histogram audit). */
   private def simHashBandedAuto(docs: DataFrame, id: String, text: String,
       targetBucketSize: Long, precountedN: Option[Long] = None): DataFrame = {
-    // same loud-failure contract as simHash128BandedAuto: a bad precount
-    // silently diverging the width from the oracle's count(*) basis is
-    // worse than an exception
-    require(precountedN.forall(_ > 0),
-      s"precountedN must be positive when supplied, got $precountedN")
-    val n = math.max(1L, precountedN.getOrElse(docs.count()))
-    val width = math.min(16, SimSearch.autoWidth(n, targetBucketSize))
+    val width = math.min(16,
+      SimSearch.autoWidth(corpusSize(docs, precountedN), targetBucketSize))
     val mask = (1L << width) - 1
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash64Portable(col(text)).as("sig"))
-    sig.select(col("doc"), col("sig"),
-      explode(array(
-        struct(lit(0).as("band"),
-          element_at(col("sig"), 1).bitwiseAND(mask).as("key")),
-        struct(lit(1).as("band"),
-          shiftright(element_at(col("sig"), 1), 16).bitwiseAND(mask).as("key")),
-        struct(lit(2).as("band"),
-          element_at(col("sig"), 2).bitwiseAND(mask).as("key")),
-        struct(lit(3).as("band"),
-          shiftright(element_at(col("sig"), 2), 16).bitwiseAND(mask).as("key"))
-      )).as("bk"))
+    bandStage(docs, id, text, 1, simHash64Portable, sig => Seq(
+      element_at(sig, 1).bitwiseAND(mask),
+      shiftright(element_at(sig, 1), 16).bitwiseAND(mask),
+      element_at(sig, 2).bitwiseAND(mask),
+      shiftright(element_at(sig, 2), 16).bitwiseAND(mask)))
+  }
+
+  /** Hamming distance between two [[simHash64Portable]] fingerprints
+    * (popcount of both halves' XOR), as a long. */
+  private def hamming64(a: Column, b: Column): Column =
+    (bit_count(element_at(a, 1).bitwiseXOR(element_at(b, 1)))
+      + bit_count(element_at(a, 2).bitwiseXOR(element_at(b, 2))))
+      .cast("long")
+
+  /** (n, detection frame) of [[simHashPlanAudit]] and
+    * [[simHashWidenIfUndershot]]: exact pairs within `maxHamming`
+    * (brute self-join BY DESIGN, the d37 sample contract) as (doc_a,
+    * doc_b, __h), `__det` = 1 iff [[simHashBandedAuto]]'s capped
+    * buckets caught the pair. */
+  private def simHashDetection(docs: DataFrame, id: String, text: String,
+      maxHamming: Int, targetBucketSize: Long, maxBucket: Int,
+      precountedN: Option[Long]): (Long, DataFrame) = {
+    require(maxHamming >= 0 && maxHamming <= 64,
+      s"maxHamming must be in [0, 64], got $maxHamming")
+    val n = corpusSize(docs, precountedN)
+    val sig = signatures(docs, id, text, 1, simHash64Portable)
+    val exact = sig.select(col("doc").as("doc_a"), col("sig").as("__sa"))
+      .join(sig.select(col("doc").as("doc_b"), col("sig").as("__sb")),
+        col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        hamming64(col("__sa"), col("__sb")).as("__h"))
+      .where(col("__h") <= maxHamming)
+    val cand = bucketLocalPairStructs(
+        simHashBandedAuto(docs, id, text, targetBucketSize, Some(n)),
+        maxBucket)
+      .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"))
+      .distinct()
+      .withColumn("__det", lit(1L))
+    (n, exact.join(cand, Seq("doc_a", "doc_b"), "left"))
   }
 
   /** Analytic detection probability of a pair at Hamming distance `h`
@@ -611,37 +613,15 @@ object Dedup {
   def simHashPlanAudit(docs: DataFrame, id: String, text: String,
       maxHamming: Int = 12, targetBucketSize: Long = 50L,
       maxBucket: Int = 1000, precountedN: Option[Long] = None): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 64,
-      s"maxHamming must be in [0, 64], got $maxHamming")
-    require(precountedN.forall(_ > 0),
-      s"precountedN must be positive when supplied, got $precountedN")
-    val n = math.max(1L, precountedN.getOrElse(docs.count()))
+    val (n, detected) = simHashDetection(docs, id, text, maxHamming,
+      targetBucketSize, maxBucket, precountedN)
     val width = math.min(16, SimSearch.autoWidth(n, targetBucketSize))
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash64Portable(col(text)).as("sig"))
-    val exact = sig.select(col("doc").as("doc_a"), col("sig").as("__sa"))
-      .join(sig.select(col("doc").as("doc_b"), col("sig").as("__sb")),
-        col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (bit_count(element_at(col("__sa"), 1)
-            .bitwiseXOR(element_at(col("__sb"), 1)))
-          + bit_count(element_at(col("__sa"), 2)
-            .bitwiseXOR(element_at(col("__sb"), 2))))
-          .cast("long").as("__h"))
-      .where(col("__h") <= maxHamming)
-    val cand = bucketLocalPairStructs(
-        simHashBandedAuto(docs, id, text, targetBucketSize, Some(n)),
-        maxBucket)
-      .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"))
-      .distinct()
-      .withColumn("__det", lit(1L))
     // analytic curve per Hamming value as a literal lookup: the layout
     // is a plan-time constant, so the BigInt combinatorics run on the
     // driver and only the final quotients enter the plan
     val pred = array((0 to maxHamming).map(h =>
       lit(simHashDetectionProb(64, 4, width, h))): _*)
-    exact.join(cand, Seq("doc_a", "doc_b"), "left")
+    detected
       .groupBy(col("__h"))
       .agg(count(lit(1)).as("n_pairs"), count(col("__det")).as("n_detected"))
       .select(col("__h").as("h_bucket"), col("n_pairs"), col("n_detected"),
@@ -684,35 +664,13 @@ object Dedup {
       maxHamming: Int = 3, targetDetectPct: Int = 99,
       targetBucketSize: Long = 50L, maxBucket: Int = 1000,
       precountedN: Option[Long] = None): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 64,
-      s"maxHamming must be in [0, 64], got $maxHamming")
     require(targetDetectPct >= 0 && targetDetectPct <= 100,
       s"targetDetectPct is a percent, got $targetDetectPct")
-    require(precountedN.forall(_ > 0),
-      s"precountedN must be positive when supplied, got $precountedN")
     val spark = docs.sparkSession
-    val n = math.max(1L, precountedN.getOrElse(docs.count()))
+    val (n, detected) = simHashDetection(docs, id, text, maxHamming,
+      targetBucketSize, maxBucket, precountedN)
     val width = math.min(16, SimSearch.autoWidth(n, targetBucketSize))
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) > 0)
-      .select(col(id).as("doc"), simHash64Portable(col(text)).as("sig"))
-    val exact = sig.select(col("doc").as("doc_a"), col("sig").as("__sa"))
-      .join(sig.select(col("doc").as("doc_b"), col("sig").as("__sb")),
-        col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (bit_count(element_at(col("__sa"), 1)
-            .bitwiseXOR(element_at(col("__sb"), 1)))
-          + bit_count(element_at(col("__sa"), 2)
-            .bitwiseXOR(element_at(col("__sb"), 2))))
-          .cast("long").as("__h"))
-      .where(col("__h") <= maxHamming)
-    val cand = bucketLocalPairStructs(
-        simHashBandedAuto(docs, id, text, targetBucketSize, Some(n)),
-        maxBucket)
-      .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"))
-      .distinct()
-      .withColumn("__det", lit(1L))
-    val d = exact.join(cand, Seq("doc_a", "doc_b"), "left")
+    val d = detected
       .groupBy(col("__h"))
       .agg(count(lit(1)).as("__n"), count(col("__det")).as("__d"))
       .agg(coalesce(sum(col("__n")), lit(0L)),
@@ -1059,9 +1017,7 @@ object Dedup {
   def minHashPairsPortableAuto(docs: DataFrame, id: String, text: String,
       shingleN: Int, numHashes: Int, minJaccardPct: Int,
       targetDetectPct: Int, maxBucket: Int = 200): DataFrame = {
-    require(minJaccardPct >= 0 && minJaccardPct <= 100,
-      s"minJaccardPct is a percent, got $minJaccardPct")
-    val (bands, rows) = bandPlan(numHashes, minJaccardPct / 100.0,
+    val (bands, rows) = plannedBands(numHashes, minJaccardPct,
       targetDetectPct)
     minHashPairsPortable(docs, id, text, shingleN, numHashes, bands,
         minJaccardPct / 100.0, maxBucket)
@@ -1080,10 +1036,7 @@ object Dedup {
   def minHashPairsAuto(docs: DataFrame, id: String, text: String,
       shingleN: Int, numHashes: Int, minJaccardPct: Int,
       targetDetectPct: Int, maxBucket: Int = 200): DataFrame = {
-    require(minJaccardPct >= 0 && minJaccardPct <= 100,
-      s"minJaccardPct is a percent, got $minJaccardPct")
-    val (bands, _) = bandPlan(numHashes, minJaccardPct / 100.0,
-      targetDetectPct)
+    val (bands, _) = plannedBands(numHashes, minJaccardPct, targetDetectPct)
     minHashPairs(docs, id, text, shingleN, numHashes, bands,
       minJaccardPct / 100.0, maxBucket)
   }
@@ -1098,12 +1051,18 @@ object Dedup {
       id: String, text: String, shingleN: Int, numHashes: Int,
       minJaccardPct: Int, targetDetectPct: Int,
       maxBucket: Int = 200): DataFrame = {
-    require(minJaccardPct >= 0 && minJaccardPct <= 100,
-      s"minJaccardPct is a percent, got $minJaccardPct")
-    val (bands, _) = bandPlan(numHashes, minJaccardPct / 100.0,
-      targetDetectPct)
+    val (bands, _) = plannedBands(numHashes, minJaccardPct, targetDetectPct)
     minHashMatchesAgainst(incoming, base, id, text, shingleN, numHashes,
       bands, minJaccardPct / 100.0, maxBucket)
+  }
+
+  /** [[bandPlan]] at an integer-PERCENT operating point — the chooser
+    * behind every `*Auto` MinHash entry point. */
+  private def plannedBands(numHashes: Int, minJaccardPct: Int,
+      targetDetectPct: Int): (Int, Int) = {
+    require(minJaccardPct >= 0 && minJaccardPct <= 100,
+      s"minJaccardPct is a percent, got $minJaccardPct")
+    bandPlan(numHashes, minJaccardPct / 100.0, targetDetectPct)
   }
 
   /** Band count for the SimHash Hamming-banded family — the planner's
@@ -1176,29 +1135,24 @@ object Dedup {
     * S-curve at the operating point (and ships the choice as columns). */
   def minHashPairsPortable(docs: DataFrame, id: String, text: String,
       shingleN: Int, numHashes: Int, bands: Int,
-      minJaccard: Double, maxBucket: Int = 200): DataFrame = {
+      minJaccard: Double, maxBucket: Int = 200): DataFrame =
+    bucketLocalPairs(minHashBands(docs, id, text, shingleN, numHashes,
+        bands, minHashSigPortable(_, shingleN, numHashes), bandKeyPortable),
+        numHashes, maxBucket)
+      .where(col("est_jaccard") >= minJaccard)
+      .distinct()
+
+  /** MinHash [[bandStage]]: `numHashes / bands` signature positions
+    * per band, band b keyed by `bandKey(sig, b, rows)`. */
+  private def minHashBands(docs: DataFrame, id: String, text: String,
+      shingleN: Int, numHashes: Int, bands: Int, sig: Column => Column,
+      bandKey: (Column, Int, Int) => Column): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) — a remainder " +
         "would silently exclude trailing signature positions from every band")
     val rows = numHashes / bands
-    // degenerate-doc guard on the CHEAP predicate: a doc has a non-null
-    // first signature position iff it has >= 1 shingle iff it has >=
-    // shingleN tokens (kernel scaladoc: empty/all-null input -> all-null
-    // positions). Filtering on the signature itself pushed TWO full
-    // minhash evaluations per row into the scan filter (size(sig)>0 and
-    // sig[0] notnull each substitute the kernel under predicate
-    // pushdown); the token-count form keeps the scan filter a tokenize.
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) >= shingleN)
-      .select(col(id).as("doc"),
-        minHashSigPortable(col(text), shingleN, numHashes).as("sig"))
-    val banded = sig.select(col("doc"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          bandKeyPortable(col("sig"), b, rows).as("key"))): _*)).as("bk"))
-    bucketLocalPairs(banded, numHashes, maxBucket)
-      .where(col("est_jaccard") >= minJaccard)
-      .distinct()
+    bandStage(docs, id, text, shingleN, sig,
+      s => (0 until bands).map(b => bandKey(s, b, rows)))
   }
 
   /** Portable band-bucket key for signature positions
@@ -1223,26 +1177,11 @@ object Dedup {
   def minHashMatchesAgainst(incoming: DataFrame, base: DataFrame,
       id: String, text: String, shingleN: Int, numHashes: Int, bands: Int,
       minJaccard: Double, maxBucket: Int = 200): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) — a remainder " +
-        "would silently exclude trailing signature positions from every band")
-    val rows = numHashes / bands
-    def banded(docs: DataFrame, docCol: String, sigCol: String): DataFrame = {
-      // token-count degenerate-doc guard — same equivalence argument as
-      // minHashPairsPortable (the sig-based form pushed two full kernel
-      // evaluations into the scan filter)
-      val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-        .where(size(TextFunctions.tokens(col(text))) >= shingleN)
-        .select(col(id).as(docCol),
-          minHashSigPortable(col(text), shingleN, numHashes).as(sigCol))
-      val sig2 = sig.select(col(docCol), col(sigCol),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            bandKeyPortable(col(sigCol), b, rows).as("key"))): _*)).as("bk"))
-      graft.ops.Par.byKey(sig2, col("bk"))
-        .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bk"))))
-        .where(col("__bc") <= maxBucket).drop("__bc")
-    }
+    def banded(docs: DataFrame, docCol: String, sigCol: String): DataFrame =
+      PairGen.capped(minHashBands(docs, id, text, shingleN, numHashes,
+          bands, minHashSigPortable(_, shingleN, numHashes),
+          bandKeyPortable), "bk", maxBucket)
+        .select(col("doc").as(docCol), col("sig").as(sigCol), col("bk"))
     banded(incoming, "doc_new", "__sn")
       .join(banded(base, "doc_base", "__sb"), "bk")
       .select(col("doc_new"), col("doc_base"),
@@ -1252,23 +1191,29 @@ object Dedup {
       .distinct()
   }
 
-  /** Shared candidate-pair generation: drop degenerate (hot) buckets,
-    * then group band-exploded rows by bucket key and emit all i<j member
-    * pairs *bucket-locally* from the collected member array.
-    *
-    * ONE pass over the upstream signature pipeline and ONE shuffle: a
-    * window `count` over the bucket key sizes every bucket, the filter
-    * drops hot (boilerplate) buckets, and the member-collect groupBy on
-    * the SAME key reuses the window's hash partitioning (no second
-    * exchange). The hot-bucket cap MUST be enforced before the collect:
-    * collect_list cannot spill within one group, so a million-member
-    * boilerplate bucket would OOM the executor; WindowExec, by contrast,
-    * buffers each bucket in a spillable sorter, so the sizing pass itself
-    * is safe on arbitrarily hot keys. Against a bucket-key SELF-JOIN the
-    * r8 banding A/B (PLANS.md) measured parity at fixture scale —
-    * ReusedExchange evaluates the signature pipeline once for both join
-    * sides — so this form is kept for its per-bucket memory bound, not
-    * for speed. */
+  /** The signature stage of every signature family: one (doc, sig) row
+    * per doc with at least `minTokens` tokens — fewer would all share
+    * one degenerate signature and pair at distance 0. The guard is the
+    * token count, not the signature: a signature predicate is pushed
+    * into the scan filter as extra full kernel evaluations per row. */
+  private def signatures(docs: DataFrame, id: String, text: String,
+      minTokens: Int, sig: Column => Column): DataFrame =
+    graft.ops.Par.spread(docs.select(col(id), col(text)))
+      .where(size(TextFunctions.tokens(col(text))) >= minTokens)
+      .select(col(id).as("doc"), sig(col(text)).as("sig"))
+
+  /** [[signatures]] banded: one (doc, sig, bk) row per (doc, band),
+    * `bk = struct(band, key)` with band b keyed by `bandKeys(sig)(b)`. */
+  private def bandStage(docs: DataFrame, id: String, text: String,
+      minTokens: Int, sig: Column => Column,
+      bandKeys: Column => Seq[Column]): DataFrame =
+    signatures(docs, id, text, minTokens, sig)
+      .select(col("doc"), col("sig"),
+        explode(array(bandKeys(col("sig")).zipWithIndex.map { case (k, b) =>
+          struct(lit(b).as("band"), k.as("key")) }: _*)).as("bk"))
+
+  /** [[bucketLocalPairStructs]] scored by the signature-estimated
+    * Jaccard (fraction of agreeing minhash positions). */
   private def bucketLocalPairs(banded: DataFrame, numHashes: Int,
       maxBucket: Int): DataFrame =
     bucketLocalPairStructs(banded, maxBucket).select(
@@ -1284,21 +1229,10 @@ object Dedup {
     * caller feeds duplicate doc ids. Works for any sig type — minhash
     * arrays and simhash longs share it. */
   private def bucketLocalPairStructs(banded: DataFrame,
-      maxBucket: Int): DataFrame = {
-    // pin the bucket exchange at the session shuffle width: AQE's
-    // byte-based coalescing reads a few hundred KB of banded rows and
-    // serializes the pair EXPLOSION below onto one core (Par.byKey doc)
-    val members = graft.ops.Par.byKey(banded, col("bk"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("bk"))))
-      .where(col("__bc") <= maxBucket)
-      .groupBy(col("bk"))
-      .agg(sort_array(collect_list(struct(col("doc"), col("sig")))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    // two-level pair explode (PairGen: O(cap) per-row memory, not
-    // C(cap, 2)-structs-in-one-row — the r8 100× ScaleSmoke OOM)
-    graft.ops.PairGen.pairs(members, "ms", "a", "b")
+      maxBucket: Int): DataFrame =
+    PairGen.pairs(PairGen.members(banded, "bk",
+        struct(col("doc"), col("sig")), maxBucket), "ms", "a", "b")
       .where(col("p.a.doc") =!= col("p.b.doc"))
-  }
 
   /** MinHash LSH near-dup pairs: signature → `bands` bands of
     * `numHashes/bands` rows → bucket join on (band, bandHash) → verify with
@@ -1310,31 +1244,10 @@ object Dedup {
   def minHashPairs(docs: DataFrame, id: String, text: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 200): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) — a remainder " +
-        "would silently exclude trailing signature positions from every band")
-    val rows = numHashes / bands
-    // docs with < shingleN tokens have an empty shingle set: every seed's
-    // min folds to the Long.MaxValue zero element, so ALL such docs would
-    // share one degenerate signature and be reported as mutual near-dups
-    // with est_jaccard 1.0 — drop them (nothing to compare).
-    // token-count form of the degenerate-doc guard: sig[0] ==
-    // Long.MaxValue iff the shingle set is empty iff tokens < shingleN
-    // (kernel scaladoc) — the sig-based predicate pushed a full extra
-    // minhash evaluation per row into the scan filter
-    val sig = graft.ops.Par.spread(docs.select(col(id), col(text)))
-      .where(size(TextFunctions.tokens(col(text))) >= shingleN)
-      .select(col(id).as("doc"),
-        minHashSig(col(text), shingleN, numHashes).as("sig"))
-    val banded = sig.select(col("doc"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          xxhash64(concat_ws(",",
-            transform(slice(col("sig"), b * rows + 1, rows), _.cast("string")))).as("key"))): _*)).as("bk"))
-    // Degenerate buckets (every member would pairwise-join every other)
-    // are boilerplate clusters; the bucket-local pair generation caps them
-    // (maxBucket) so the expansion stays linear in the cap instead of
-    // quadratic in the hottest bucket.
+    val banded = minHashBands(docs, id, text, shingleN, numHashes, bands,
+      minHashSig(_, shingleN, numHashes), (sig, b, rows) =>
+        xxhash64(concat_ws(",",
+          transform(slice(sig, b * rows + 1, rows), _.cast("string")))))
     bucketLocalPairs(banded, numHashes, maxBucket)
       .where(col("est_jaccard") >= minJaccard)
       .distinct()
@@ -1388,20 +1301,9 @@ object Dedup {
     val inv = sets.select(col("doc"), size(col("sh")).as("n"),
       explode(col("sh")).as("__s"))
       .select(col("doc"), col("n"), xxhash64(col("__s")).as("shingle"))
-    // bucket-local pair generation (see bucketLocalPairs for the memory
-    // argument): hot shingles are dropped BEFORE the collect — via the
-    // same single-pass spillable window count — so no aggregation buffer
-    // exceeds maxBucket members; members sorted so doc_a < doc_b
-    val members = graft.ops.Par.byKey(inv, col("shingle"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .where(col("__bc") <= maxBucket)
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(struct(col("doc"), col("n")))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    // two-level pair explode (PairGen: O(cap) per-row memory, not
-    // C(cap, 2)-structs-in-one-row — the r8 100× ScaleSmoke OOM at the
-    // 10k cap d7 carried before r8 lowered it to the 1000 default)
-    graft.ops.PairGen.pairs(members, "ms", "a", "b")
+    // members sorted so doc_a < doc_b
+    PairGen.pairs(PairGen.members(inv, "shingle",
+        struct(col("doc"), col("n")), maxBucket), "ms", "a", "b")
       .groupBy(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"),
         col("p.a.n").as("na"), col("p.b.n").as("nb"))
       .agg(count(lit(1)).as("inter"))

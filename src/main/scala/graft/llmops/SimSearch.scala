@@ -131,9 +131,8 @@ object SimSearch {
   /** Banded LSH near-dup PAIRS (corpus self-join) — the scale form of
     * [[cosinePairs]]: `nBits` sign bits from the md5-portable hyperplanes
     * are cut into `bands` bands; rows sharing any full band land in the
-    * same bucket, pairs are generated BUCKET-LOCALLY (same mechanics as
-    * `Dedup.bucketLocalPairs`: spillable window count caps hot buckets
-    * BEFORE the non-spillable collect_list) and verified with exact
+    * same bucket, pairs are generated BUCKET-LOCALLY (hot buckets
+    * capped by [[graft.ops.PairGen.capped]]) and verified with exact
     * cosine ≥ `minCosine`. Candidate cost is O(bands × bucketCap × rows),
     * never O(n²), and no side is broadcast — the shuffle key is the
     * (band, key) signature, so this is the form that survives a 100 TB
@@ -189,14 +188,7 @@ object SimSearch {
     // member buckets → ~860 MB rows) long before the maxBucket cap
     // (2000) bound anything. A sort-merge self-join on the band key
     // spills, and the cap still bounds per-bucket candidate count.
-    // pin the bucket exchange at the session shuffle width — AQE's
-    // byte-based coalescing would serialize the bucket self-join's
-    // candidate explosion onto one core (Par.byKey doc)
-    val capped = graft.ops.Par.byKey(banded, col("bk"))
-      .withColumn("__bc", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("bk"))))
-      .where(col("__bc") <= maxBucket)
-      .select(col("bk"), col("__id"), col("__v"))
+    val capped = graft.ops.PairGen.capped(banded, "bk", maxBucket)
     capped.as("l").join(capped.as("r"),
         col("l.bk") === col("r.bk") && col("l.__id") < col("r.__id"))
       .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),

@@ -509,23 +509,16 @@ object TextAnalysis {
 
   /** Fingerprint-overlap pairs: docs sharing ≥ `minShared` winnowed
     * fingerprints, by the same inverted-index shape as
-    * [[Dedup.ngramJaccardPairs]] — explode (doc, fp), cap hot
-    * fingerprints with a spillable window count BEFORE the non-spillable
-    * collect, generate i<j pairs bucket-locally, count per pair. Shuffle
-    * keys are 32-char md5 strings; candidate cost is O(cap × rows), not
-    * O(n²). */
+    * [[Dedup.ngramJaccardPairs]] — explode (doc, fp), then the capped
+    * bucket-pair step ([[graft.ops.PairGen]]) over fingerprints, count
+    * per pair. Shuffle keys are 32-char md5 strings; candidate cost is
+    * O(cap × rows), not O(n²). */
   def winnowOverlapPairs(docs: DataFrame, id: String, text: String,
       k: Int, w: Int, minShared: Long, maxBucket: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val fps = graft.ops.Par.spread(docs.select(col(id), col(text)))
       .select(col(id).as("doc"),
         explode(winnowFingerprints(col(text), k, w)).as("fp"))
-    val members = graft.ops.Par.byKey(fps, col("fp"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("fp"))))
-      .where(col("__bc") <= maxBucket)
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("doc"))).as("ms"))
-      .where(size(col("ms")) >= 2)
+    val members = graft.ops.PairGen.members(fps, "fp", col("doc"), maxBucket)
     graft.ops.PairGen.pairs(members, "ms", "doc_a", "doc_b")
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))

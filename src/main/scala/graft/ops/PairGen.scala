@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Bucket-local i<j pair generation — the shared quadratic step behind
@@ -22,8 +23,30 @@ import org.apache.spark.sql.functions._
   * on `d7_dup_clusters`. With the two-level form no intermediate row
   * ever holds more than |members| structs, so per-row memory stays
   * O(cap) at any corpus scale while the emitted pair set is identical
-  * (same sorted order, same i<j coverage). */
+  * (same sorted order, same i<j coverage). The hot-bucket policy
+  * ([[capped]] / [[members]]) lives here once for every caller. */
 object PairGen {
+
+  /** The rows of `df` whose `key` bucket holds at most `cap` rows; a
+    * hot bucket is dropped WHOLE, never truncated. The exchange is
+    * [[Par.byKey]], pinned at session width because AQE's byte-based
+    * coalescing would put the ~|bucket|²/2 pairs downstream on one
+    * core; the size is a window count (spillable, safe on any hot key);
+    * work keyed the same way downstream reuses the exchange. */
+  def capped(df: DataFrame, key: String, cap: Int): DataFrame =
+    Par.byKey(df, col(key))
+      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col(key))))
+      .where(col("__bc") <= cap)
+      .drop("__bc")
+
+  /** One (`key`, `ms`) row per [[capped]] bucket, `ms` the sorted
+    * `member`s — [[pairs]]' input. The cap MUST precede the collect:
+    * `collect_list` cannot spill, so a hot bucket would OOM. */
+  def members(df: DataFrame, key: String, member: Column,
+      cap: Int): DataFrame =
+    capped(df, key, cap)
+      .groupBy(col(key))
+      .agg(sort_array(collect_list(member)).as("ms"))
 
   /** Explode `ms` (a pre-sorted array column of `members`) into all i<j
     * pairs as a `p` struct with fields `a`/`b`; `carry` columns (by

@@ -1,8 +1,7 @@
 package graft.recall
 
-import graft.ops.TopK
+import graft.ops.{PairGen, TopK}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Item-item co-occurrence collaborative filtering — the classic
@@ -15,13 +14,23 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the only quadratic step — within-basket pair
   * generation — is bucket-local over each basket's collected member
-  * list, with hyperactive baskets capped by a spillable window count
-  * BEFORE the non-spillable `collect_list` (the d4/t16 inverted-index
-  * shape; a 10k-item basket would otherwise emit 5·10⁷ pairs from one
-  * task). Everything else is plain keyed aggregation: candidate cost is
+  * list, with hyperactive baskets capped ([[PairGen.members]]; a 10k-item
+  * basket would otherwise emit 5·10⁷ pairs from one task). Everything
+  * else is plain keyed aggregation: candidate cost is
   * O(maxBasket × baskets), never O(items²).
   */
 object ItemCf {
+
+  /** Distinct non-null (basket, item) rows as (`__b`, `__i`) — the one
+    * definition every miner uses. Nulls (no CF signal) are dropped
+    * EXPLICITLY: joins infer isnotnull but windows don't, and that
+    * asymmetry made a miner's uses of this distinct differ — one basket
+    * shuffle each where ReuseExchange now serves one (r8 audit of m9). */
+  private def basketItems(baskets: DataFrame, basket: String,
+      item: String): DataFrame =
+    baskets.select(col(basket).as("__b"), col(item).as("__i"))
+      .where(col("__b").isNotNull && col("__i").isNotNull)
+      .distinct()
 
   /** Undirected co-occurrence pairs with cosine normalization:
     * `co / sqrt(deg_a · deg_b)` where deg = number of baskets containing
@@ -29,26 +38,10 @@ object ItemCf {
     * 6 dp for cross-engine-stable downstream ranking). */
   def cooccurrence(baskets: DataFrame, basket: String, item: String,
       maxBasket: Int = 1000, minCo: Long = 1L): DataFrame = {
-    // null keys dropped EXPLICITLY (they carry no CF signal): the deg
-    // joins infer isnotnull on their side of the plan but the window
-    // side doesn't, and that constraint asymmetry made the three uses
-    // of this distinct canonically different — three full basket
-    // shuffles where ReuseExchange now serves two of them from one
-    // (r8 plan audit of m9; same pattern in the other basket miners)
-    val ui = baskets.select(col(basket).as("__b"), col(item).as("__i"))
-      .where(col("__b").isNotNull && col("__i").isNotNull)
-      .distinct()
+    val ui = basketItems(baskets, basket, item)
     val deg = ui.groupBy(col("__i")).agg(count(lit(1)).as("__deg"))
-    // pin the basket exchange at the session shuffle width: AQE's
-    // byte-based coalescing underestimates the pair EXPLOSION downstream
-    // (Par.byKey doc) and would serialize it
-    val members = graft.ops.Par.byKey(ui, col("__b"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("__b"))))
-      .where(col("__bc") <= maxBasket)
-      .groupBy(col("__b"))
-      .agg(sort_array(collect_list(col("__i"))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    val pairs = graft.ops.PairGen.pairs(members, "ms", "item_a", "item_b")
+    val members = PairGen.members(ui, "__b", col("__i"), maxBasket)
+    val pairs = PairGen.pairs(members, "ms", "item_a", "item_b")
       .groupBy(col("p.item_a").as("item_a"), col("p.item_b").as("item_b"))
       .agg(count(lit(1)).as("co"))
       .where(col("co") >= minCo)
@@ -91,24 +84,12 @@ object ItemCf {
   def associationRules(baskets: DataFrame, basket: String, item: String,
       maxBasket: Int = 1000, minCo: Long = 1L,
       minConfidence: Double = 0.0): DataFrame = {
-    // explicit null-drop: canonicalizes every use of the distinct so the
-    // basket shuffle is computed once and reused (see [[cooccurrence]])
-    val ui = baskets.select(col(basket).as("__b"), col(item).as("__i"))
-      .where(col("__b").isNotNull && col("__i").isNotNull)
-      .distinct()
+    val ui = basketItems(baskets, basket, item)
     val deg = ui.groupBy(col("__i")).agg(count(lit(1)).as("__deg"))
     val nB = ui.select(col("__b")).distinct()
       .agg(count(lit(1)).as("__n"))
-    // pin the basket exchange at the session shuffle width: AQE's
-    // byte-based coalescing underestimates the pair EXPLOSION downstream
-    // (Par.byKey doc) and would serialize it
-    val members = graft.ops.Par.byKey(ui, col("__b"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("__b"))))
-      .where(col("__bc") <= maxBasket)
-      .groupBy(col("__b"))
-      .agg(sort_array(collect_list(col("__i"))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    val pairs = graft.ops.PairGen.pairs(members, "ms", "a", "b")
+    val members = PairGen.members(ui, "__b", col("__i"), maxBasket)
+    val pairs = PairGen.pairs(members, "ms", "a", "b")
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("co"))
       .where(col("co") >= minCo)
@@ -141,21 +122,11 @@ object ItemCf {
     * bound is unchanged. Output rounded to 6 dp (float sum order). */
   def adamicAdar(baskets: DataFrame, basket: String, item: String,
       maxBasket: Int = 1000, minCo: Long = 1L): DataFrame = {
-    // explicit null-drop: same shuffle-reuse canonicalization as
-    // [[cooccurrence]]
-    val ui = baskets.select(col(basket).as("__b"), col(item).as("__i"))
-      .where(col("__b").isNotNull && col("__i").isNotNull)
-      .distinct()
-    // pin the basket exchange at the session shuffle width: AQE's
-    // byte-based coalescing underestimates the pair EXPLOSION downstream
-    // (Par.byKey doc) and would serialize it
-    val members = graft.ops.Par.byKey(ui, col("__b"))
-      .withColumn("__bc", count(lit(1)).over(Window.partitionBy(col("__b"))))
-      .where(col("__bc") <= maxBasket)
-      .groupBy(col("__b"))
-      .agg(sort_array(collect_list(col("__i"))).as("ms"))
+    // size >= 2 before the weight: a 1-item basket's ln(1) = 0 divides
+    val members = PairGen.members(basketItems(baskets, basket, item),
+        "__b", col("__i"), maxBasket)
       .where(size(col("ms")) >= 2)
-    graft.ops.PairGen.pairs(
+    PairGen.pairs(
         members.withColumn("__w",
           lit(1.0) / log(size(col("ms")).cast("double"))),
         "ms", "item_a", "item_b", "__w")
@@ -188,19 +159,11 @@ object ItemCf {
   def swingPairs(baskets: DataFrame, user: String, item: String,
       alpha: Double = 1.0, maxUsersPerItem: Int = 1000,
       maxItemsShared: Int = 1000): DataFrame = {
-    // explicit null-drop: same shuffle-reuse canonicalization as
-    // [[cooccurrence]] (userPairs feeds both sides of the supported
-    // self-join through cuv)
-    val ui = baskets.select(col(user).as("__u"), col(item).as("__i"))
-      .where(col("__u").isNotNull && col("__i").isNotNull)
-      .distinct()
-    val userPairs = graft.ops.Par.byKey(ui, col("__i"))
-      .withColumn("__ic", count(lit(1)).over(Window.partitionBy(col("__i"))))
-      .where(col("__ic") <= maxUsersPerItem)
-      .groupBy(col("__i"))
-      .agg(sort_array(collect_list(col("__u"))).as("us"))
-      .where(size(col("us")) >= 2)
-      .transform(m => graft.ops.PairGen.pairs(m, "us", "u", "v", "__i"))
+    // the user rides in basketItems' basket column `__b`
+    val userPairs = PairGen.pairs(
+        PairGen.members(basketItems(baskets, user, item), "__i",
+          col("__b"), maxUsersPerItem),
+        "ms", "u", "v", "__i")
       .select(col("p.u").as("__pu"), col("p.v").as("__pv"), col("__i"))
     val cuv = userPairs.groupBy(col("__pu"), col("__pv"))
       .agg(count(lit(1)).as("__c"))

@@ -49,4 +49,44 @@ class PairGenSpec extends AnyFunSuite {
       .select($"p.a.doc", $"p.b.doc").as[(Long, Long)].collect().sorted.toSeq
     assert(got == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
   }
+
+  // bucket sizes 2, 3 and 4 around a cap of 3
+  private def keyed = Seq(
+    (1L, 20L, "x"), (1L, 10L, "y"),
+    (2L, 30L, "x"), (2L, 10L, "y"), (2L, 20L, "z"),
+    (3L, 40L, "w"), (3L, 10L, "x"), (3L, 30L, "y"), (3L, 20L, "z")
+  ).toDF("bk", "doc", "tag")
+
+  test("members: a bucket of exactly cap rows is kept whole, sorted") {
+    val got = PairGen.members(keyed, "bk", $"doc", 3)
+      .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, Seq(10L, 20L)), (2L, Seq(10L, 20L, 30L))))
+  }
+
+  test("members: a bucket of cap + 1 rows is dropped whole, never truncated") {
+    val got = PairGen.members(keyed, "bk", $"doc", 3)
+      .select($"bk").as[Long].collect().toSet
+    assert(!got.contains(3L))
+    val all = PairGen.members(keyed, "bk", $"doc", 4)
+      .where($"bk" === 3L).select($"ms").as[Seq[Long]].collect().toSeq
+    assert(all == Seq(Seq(10L, 20L, 30L, 40L)))
+  }
+
+  test("members: struct members come back ordered by their first field") {
+    val got = PairGen.members(keyed, "bk",
+        struct($"doc", $"tag"), 4)
+      .where($"bk" === 3L)
+      .select(transform($"ms", m => m.getField("doc")).as("docs"),
+        transform($"ms", m => m.getField("tag")).as("tags"))
+      .as[(Seq[Long], Seq[String])].collect().toSeq
+    assert(got == Seq((Seq(10L, 20L, 30L, 40L), Seq("x", "z", "y", "w"))))
+  }
+
+  test("capped keeps every input column except the count") {
+    val c = PairGen.capped(keyed, "bk", 3)
+    assert(c.columns.toSeq == keyed.columns.toSeq)
+    val got = c.as[(Long, Long, String)].collect().sorted.toSeq
+    assert(got == keyed.where($"bk" =!= 3L)
+      .as[(Long, Long, String)].collect().sorted.toSeq)
+  }
 }
