@@ -536,8 +536,7 @@ object Dedup {
         maxBucket)
       .select(col("p.a.doc").as("doc_a"), col("p.b.doc").as("doc_b"))
       .distinct()
-      .withColumn("__det", lit(1L))
-    (n, exact.join(cand, Seq("doc_a", "doc_b"), "left"))
+    (n, IndexMaintenance.detected(exact, cand, Seq("doc_a", "doc_b")))
   }
 
   /** Analytic detection probability of a pair at Hamming distance `h`
@@ -621,17 +620,9 @@ object Dedup {
     // driver and only the final quotients enter the plan
     val pred = array((0 to maxHamming).map(h =>
       lit(simHashDetectionProb(64, 4, width, h))): _*)
-    detected
-      .groupBy(col("__h"))
-      .agg(count(lit(1)).as("n_pairs"), count(col("__det")).as("n_detected"))
-      .select(col("__h").as("h_bucket"), col("n_pairs"), col("n_detected"),
-        (col("n_detected").cast("double") / col("n_pairs"))
-          .as("detect_rate"),
-        // 6-dp round: the oracle rebuilds the binomials via lgamma and
-        // its quotient may differ in the last ulp (the d33 rule)
-        round(element_at(pred, col("__h").cast("int") + 1), 6)
-          .as("predicted_prob"),
-        lit(4L).as("bands"), lit(width.toLong).as("width"))
+    IndexMaintenance.bucketAudit(detected, col("__h"), "h_bucket",
+      element_at(pred, col("h_bucket").cast("int") + 1),
+      "bands" -> 4L, "width" -> width.toLong)
   }
 
   /** The SimHash family's ACT stage — [[bandReplanIfUndershot]]'s
@@ -664,38 +655,20 @@ object Dedup {
       maxHamming: Int = 3, targetDetectPct: Int = 99,
       targetBucketSize: Long = 50L, maxBucket: Int = 1000,
       precountedN: Option[Long] = None): DataFrame = {
-    require(targetDetectPct >= 0 && targetDetectPct <= 100,
-      s"targetDetectPct is a percent, got $targetDetectPct")
-    val spark = docs.sparkSession
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
     val (n, detected) = simHashDetection(docs, id, text, maxHamming,
       targetBucketSize, maxBucket, precountedN)
     val width = math.min(16, SimSearch.autoWidth(n, targetBucketSize))
-    val d = detected
-      .groupBy(col("__h"))
-      .agg(count(lit(1)).as("__n"), count(col("__det")).as("__d"))
-      .agg(coalesce(sum(col("__n")), lit(0L)),
-        coalesce(sum(col("__d")), lit(0L)),
-        coalesce(sum(when(col("__d") * 100L
-          < lit(targetDetectPct.toLong) * col("__n"), 1L)
-          .otherwise(0L)), lit(0L)))
-      .head()
-    val nPairs = d.getLong(0)
-    val nDet = d.getLong(1)
-    val nBelow = d.getLong(2)
-    val widen = nPairs > 0L && nBelow > 0L
+    val (nPairs, nDet, nBelow, widen) =
+      IndexMaintenance.undershoot(detected, col("__h"), targetDetectPct)
     val newWidth =
       if (widen) SimSearch.autoWidth(n, targetBucketSize) else width
-    spark.range(1).select(
-      lit(if (widen) 1L else 0L).as("widen"),
-      lit(nPairs).as("n_pairs"),
-      lit(nDet).as("n_detected"),
-      lit(nBelow).as("n_buckets_below"),
-      lit(64L).as("sig_bits"),
-      lit(4L).as("bands"),
-      lit(width.toLong).as("band_width"),
-      lit(if (widen) 128L else 64L).as("new_sig_bits"),
-      lit(4L).as("new_bands"),
-      lit(newWidth.toLong).as("new_band_width"))
+    IndexMaintenance.decisionRow(docs.sparkSession,
+      "widen" -> (if (widen) 1L else 0L), "n_pairs" -> nPairs,
+      "n_detected" -> nDet, "n_buckets_below" -> nBelow,
+      "sig_bits" -> 64L, "bands" -> 4L, "band_width" -> width.toLong,
+      "new_sig_bits" -> (if (widen) 128L else 64L), "new_bands" -> 4L,
+      "new_band_width" -> newWidth.toLong)
   }
 
   /** Detection probability of a pair with true Jaccard `j` under
@@ -725,17 +698,15 @@ object Dedup {
   def bandPlan(numHashes: Int, minJaccard: Double,
       targetDetectPct: Int): (Int, Int) = {
     require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
-    require(targetDetectPct >= 0 && targetDetectPct <= 100,
-      s"targetDetectPct is a percent, got $targetDetectPct")
-    val divisors = (1 to numHashes).filter(numHashes % _ == 0)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
     // first qualifying in ascending band order IS the minimum because
     // P(b) is monotone increasing in b for fixed numHashes (splitting
     // bands grows the OR-power faster than shorter rows lose per-band
     // match probability) — pinned over generated (n, j) by
     // PropertiesSpec, not assumed
-    divisors
-      .find(b => detectionProb(minJaccard, b, numHashes / b)
-        >= targetDetectPct / 100.0)
+    IndexMaintenance.firstQualifying(
+        (1 to numHashes).filter(numHashes % _ == 0),
+        b => detectionProb(minJaccard, b, numHashes / b), targetDetectPct)
       .map(b => (b, numHashes / b))
       .getOrElse((numHashes, 1))
   }
@@ -829,33 +800,31 @@ object Dedup {
       shingleN: Int, numHashes: Int, minJaccardPct: Int,
       targetDetectPct: Int, jaccardFloor: Double = 0.05,
       maxBucket: Int = 1000): DataFrame = {
-    val (bands, rows) = bandPlan(numHashes, minJaccardPct / 100.0,
+    val (bands, rows) = plannedBands(numHashes, minJaccardPct,
       targetDetectPct)
-    val exact = ngramJaccardPairs(docs, id, text, shingleN,
-      jaccardFloor, maxBucket)
-    val cand = minHashPairsPortable(docs, id, text, shingleN, numHashes,
-        bands, minJaccard = 0.0, maxBucket)
-      .select(col("doc_a"), col("doc_b"), lit(1L).as("__det"))
     val mid = (col("j_bucket").cast("double") + 0.5) / 10.0
-    // bucket 9 is closed-top ([0.9, 1.0]): exact duplicates (j = 1)
-    // would otherwise mint a bucket 10 whose midpoint 1.05 is outside
-    // the S-curve's domain
-    exact.join(cand, Seq("doc_a", "doc_b"), "left")
-      .select(least(floor(col("jaccard") * 10), lit(9L)).cast("long")
-          .as("j_bucket"),
-        col("__det"))
-      .groupBy(col("j_bucket"))
-      .agg(count(lit(1)).as("n_pairs"), count(col("__det")).as("n_detected"))
-      .select(col("j_bucket"), col("n_pairs"), col("n_detected"),
-        (col("n_detected").cast("double") / col("n_pairs"))
-          .as("detect_rate"),
-        // rounded: pow() is not correctly-rounded, so unlike the pure
-        // divisions above its last ulp may differ between engines; the
-        // 6-dp round absorbs that (midpoint margins audited in the spec)
-        round(lit(1.0) - pow(lit(1.0) - pow(mid, lit(rows.toDouble)),
-          lit(bands.toDouble)), 6).as("predicted_prob"),
-        lit(bands.toLong).as("bands"), lit(rows.toLong).as("rows_per_band"))
+    IndexMaintenance.bucketAudit(
+      minHashDetection(docs, id, text, shingleN, numHashes, bands,
+        jaccardFloor, maxBucket),
+      IndexMaintenance.closedDecile(col("jaccard")), "j_bucket",
+      lit(1.0) - pow(lit(1.0) - pow(mid, lit(rows.toDouble)),
+        lit(bands.toDouble)),
+      "bands" -> bands.toLong, "rows_per_band" -> rows.toLong)
   }
+
+  /** Detection frame of [[bandPlanAudit]] and [[bandReplanIfUndershot]]:
+    * exact n-gram Jaccard pairs ≥ `jFloor` ([[ngramJaccardPairs]]),
+    * flagged `__det` when the banding stage at (numHashes, bands) emits
+    * them (threshold 0 — detection is sharing ≥ 1 band, before any
+    * estimate filter). */
+  private def minHashDetection(docs: DataFrame, id: String, text: String,
+      shingleN: Int, numHashes: Int, bands: Int, jFloor: Double,
+      maxBucket: Int): DataFrame =
+    IndexMaintenance.detected(
+      ngramJaccardPairs(docs, id, text, shingleN, jFloor, maxBucket),
+      minHashPairsPortable(docs, id, text, shingleN, numHashes, bands,
+        minJaccard = 0.0, maxBucket),
+      Seq("doc_a", "doc_b"))
 
   /** The banding lifecycle's ACT stage — the [[bandPlanAudit]] twin of
     * [[SimSearch.refitIfDrifted]]: measure the CURRENT (numHashes,
@@ -916,25 +885,10 @@ object Dedup {
     * Returns (numHashes, bands, rowsPerBand). */
   def bandReplanLadder(curNumHashes: Int, curBands: Int,
       minJaccard: Double, targetDetectPct: Int,
-      maxDoublings: Int): (Int, Int, Int) = {
-    require(curNumHashes >= 1 && curBands >= 1, "layout must be positive")
-    require(maxDoublings >= 0 && (curNumHashes.toLong << maxDoublings)
-      <= Int.MaxValue, s"maxDoublings out of range: $maxDoublings")
-    (0 to maxDoublings).iterator
-      .map { k =>
-        val nh = curNumHashes << k
-        val (b, r) = bandPlan(nh, minJaccard, targetDetectPct)
-        (nh, b, r)
-      }
-      .find { case (nh, b, r) =>
-        detectionProb(minJaccard, b, r) >= targetDetectPct / 100.0 &&
-          (nh != curNumHashes || b != curBands)
-      }
-      .getOrElse {
-        val nh = curNumHashes << maxDoublings
-        (nh, nh, 1)
-      }
-  }
+      maxDoublings: Int): (Int, Int, Int) =
+    IndexMaintenance.doublingLadder(curNumHashes, curBands,
+      bandPlan(_, minJaccard, targetDetectPct),
+      detectionProb(minJaccard, _, _), targetDetectPct, maxDoublings)
 
   def bandReplanIfUndershot(docs: DataFrame, id: String, text: String,
       shingleN: Int, numHashes: Int, bands: Int, minJaccardPct: Int,
@@ -942,59 +896,20 @@ object Dedup {
       maxDoublings: Int = 6): DataFrame = {
     require(numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes, got ($numHashes, $bands)")
-    require(minJaccardPct >= 0 && minJaccardPct <= 100,
-      s"minJaccardPct is a percent, got $minJaccardPct")
-    require(targetDetectPct >= 0 && targetDetectPct <= 100,
-      s"targetDetectPct is a percent, got $targetDetectPct")
+    IndexMaintenance.requirePercent("minJaccardPct", minJaccardPct)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
     require(maxDoublings >= 0 && (numHashes.toLong << maxDoublings)
       <= Int.MaxValue, s"maxDoublings out of range: $maxDoublings")
-    val spark = docs.sparkSession
     val j = minJaccardPct / 100.0
     // the operating-point filter IS the exact-pair floor: pairs below
     // the declared threshold carry no evidence about the target
-    val exact = ngramJaccardPairs(docs, id, text, shingleN, j, maxBucket)
-    val cand = minHashPairsPortable(docs, id, text, shingleN, numHashes,
-        bands, minJaccard = 0.0, maxBucket)
-      .select(col("doc_a"), col("doc_b"), lit(1L).as("__det"))
-    // per-bucket counts (≤ 10 rows), then the 1-row any-bucket decision
-    // aggregate — a bounded collect, the refitIfDrifted discipline
-    val d = exact.join(cand, Seq("doc_a", "doc_b"), "left")
-      .select(least(floor(col("jaccard") * 10), lit(9L)).cast("long")
-          .as("__jb"),
-        col("__det"))
-      .groupBy(col("__jb"))
-      .agg(count(lit(1)).as("__n"), count(col("__det")).as("__d"))
-      .agg(coalesce(sum(col("__n")), lit(0L)),
-        coalesce(sum(col("__d")), lit(0L)),
-        coalesce(sum(when(col("__d") * 100L
-          < lit(targetDetectPct.toLong) * col("__n"), 1L)
-          .otherwise(0L)), lit(0L)))
-      .head()
-    val nPairs = d.getLong(0)
-    val nDet = d.getLong(1)
-    val nBelow = d.getLong(2)
-    val replan = nPairs > 0L && nBelow > 0L
-    val (newNh, newBands, newRows) =
-      if (!replan) (numHashes, bands, numHashes / bands)
-      else bandReplanLadder(numHashes, bands, j, targetDetectPct,
-        maxDoublings)
-    val action = if (!replan) 0L else if (newNh == numHashes) 1L else 2L
-    spark.range(1).select(
-      lit(if (replan) 1L else 0L).as("replan"),
-      lit(action).as("action"),
-      lit(nPairs).as("n_pairs"),
-      lit(nDet).as("n_detected"),
-      lit(nBelow).as("n_buckets_below"),
-      lit(numHashes.toLong).as("num_hashes"),
-      lit(bands.toLong).as("bands"),
-      lit((numHashes / bands).toLong).as("rows_per_band"),
-      lit(newNh.toLong).as("new_num_hashes"),
-      lit(newBands.toLong).as("new_bands"),
-      lit(newRows.toLong).as("new_rows_per_band"),
-      // Spark-side round, the d33 precedent (pow is not
-      // correctly-rounded; the 6-dp round absorbs the last ulp)
-      round(lit(detectionProb(j, newBands, newRows)), 6)
-        .as("new_detect_prob"))
+    IndexMaintenance.replanIfUndershot(
+      minHashDetection(docs, id, text, shingleN, numHashes, bands, j,
+        maxBucket),
+      IndexMaintenance.closedDecile(col("jaccard")), targetDetectPct,
+      ("num_hashes", "bands", "rows_per_band"), numHashes, bands,
+      bandReplanLadder(numHashes, bands, j, targetDetectPct, maxDoublings),
+      detectionProb(j, _, _))
   }
 
   /** [[minHashPairsPortable]] with the band count chosen by [[bandPlan]]
@@ -1060,8 +975,7 @@ object Dedup {
     * behind every `*Auto` MinHash entry point. */
   private def plannedBands(numHashes: Int, minJaccardPct: Int,
       targetDetectPct: Int): (Int, Int) = {
-    require(minJaccardPct >= 0 && minJaccardPct <= 100,
-      s"minJaccardPct is a percent, got $minJaccardPct")
+    IndexMaintenance.requirePercent("minJaccardPct", minJaccardPct)
     bandPlan(numHashes, minJaccardPct / 100.0, targetDetectPct)
   }
 

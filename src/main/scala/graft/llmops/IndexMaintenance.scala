@@ -1,22 +1,21 @@
 package graft.llmops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The single operational entry point for approximate-index upkeep —
-  * the plan → audit → act → enforce lifecycle that every banded/
-  * clustered/quantized index family in this engine shares. Each family
-  * implements the same four stages; this facade names them in one
-  * place so an operator of a 100 TB deployment can find the whole
-  * story without reading five modules:
+/** The owner of approximate-index upkeep policy — the plan → audit →
+  * act → enforce lifecycle that every banded/clustered/quantized index
+  * family in this engine shares. The table names each family's stages
+  * in one place so an operator of a 100 TB deployment can find the
+  * whole story without reading five modules:
   *
   * | Family | PLAN (layout math) | AUDIT (measure detection) | ACT (1-row decision) | Streaming face |
   * |---|---|---|---|---|
-  * | MinHash-LSH bands | [[Dedup.bandPlan]] / `bandPlanDf` (d31, d33) | detection per Jaccard bucket inside the ACT query (d33) | [[minhashReplan]] (d34 REPLAN / d35 KEEP / d36 REBAND) | foreachBatch caller (StreamingSpec) + [[graft.streaming.StreamingDedup.nearDupsPlanned]] |
-  * | Sign-LSH bands | [[SimSearch.signBandPlan]] | [[SimSearch.signBandPlanAudit]] (d37) | [[signReplan]] (d39 REBAND / d40 KEEP) | foreachBatch caller (StreamingSpec) |
-  * | SimHash width | 4-lane pigeonhole by construction | recall audit (d38) | [[simhashWiden]] (d41 WIDEN / d42 KEEP) | foreachBatch caller (StreamingSpec) |
-  * | IVF cells | [[SimSearch.autoCells]] (sim15) | [[SimSearch.ivfDriftAudit]] (sim19) | [[ivfRefit]] (sim22 REFIT / sim23 KEEP) | [[graft.streaming.IndexMonitor.cellDriftStream]] (sim26 twin) |
-  * | PQ codebooks | md5-pull / [[graft.functions.VectorOps.pqTrain]] | distortion compare (v4/v9) | [[pqRefit]] (sim24 REFIT / sim25 KEEP) | [[graft.streaming.IndexMonitor.pqDistortionStream]] |
+  * | MinHash-LSH bands | [[Dedup.bandPlan]] / `bandPlanDf` (d31) | [[Dedup.bandPlanAudit]] (d33, d47) | [[Dedup.bandReplanIfUndershot]] (d34 REPLAN / d35 KEEP / d36 REBAND) | foreachBatch caller (StreamingSpec) + [[graft.streaming.StreamingDedup.nearDupsPlanned]] |
+  * | Sign-LSH bands | [[SimSearch.signBandPlan]] / [[SimSearch.signBandsFor]] | [[SimSearch.signBandPlanAudit]] (d37) | [[SimSearch.signReplanIfUndershot]] (d39 REBAND / d40 KEEP) | foreachBatch caller (StreamingSpec) |
+  * | SimHash width | 4-lane pigeonhole by construction | [[Dedup.simHashPlanAudit]] (d38) | [[Dedup.simHashWidenIfUndershot]] (d41 WIDEN / d42 KEEP) | foreachBatch caller (StreamingSpec) |
+  * | IVF cells | [[SimSearch.autoCells]] (sim15) | [[SimSearch.ivfDriftAudit]] (sim19) | [[SimSearch.refitIfDrifted]] (sim22 REFIT / sim23 KEEP) | [[graft.streaming.IndexMonitor.cellDriftStream]] (sim26 twin) |
+  * | PQ codebooks | md5-pull / [[graft.functions.VectorOps.pqTrain]] | distortion compare (v4/v9) | [[SimSearch.pqRefitIfDistorted]] (sim24 REFIT / sim25 KEEP) | [[graft.streaming.IndexMonitor.pqDistortionStream]] |
   *
   * The residual IVF-PQ serving layout ([[SimSearch.ivfPqResidualTopK]],
   * sim33) is the COMPOSITION of the last two rows, not a sixth family:
@@ -30,7 +29,7 @@ import org.apache.spark.sql.functions._
   * the incoherent half-update on reconstruction error AND a serving
   * recall floor (the [[SimSearch.ivfPqResidualTopKWithCents]] face).
   *
-  * ENFORCE — the stage this facade adds a shared core for — is the
+  * ENFORCE — the stage this object holds the shared core for — is the
   * recall floor: an integer-math guarantee that the approximate result
   * still covers ≥ floorPct of an oracle-replayable truth set
   * (registered: sim27 LSH, sim28 IVF, sim29 k-means auto-probe, d43
@@ -49,74 +48,146 @@ import org.apache.spark.sql.functions._
   * remedies are driver-side ladder math; refits re-pull only the
   * ≤ 4096 index-source ROWS.
   *
-  * These methods DELEGATE to the family modules (no behavior change —
-  * the registered queries and their oracles are the ground truth);
-  * they exist so the operational surface is one import.
+  * The three BANDED families (MinHash bands, sign-LSH bands, SimHash
+  * lanes) run plan → audit → act through ONE policy core below and
+  * supply only their exact/candidate frames, bucket expression and
+  * analytic curve: [[firstQualifying]] (fewest-bands scan),
+  * [[doublingLadder]] (remedy), [[detected]] + [[bucketAudit]]
+  * (audit), [[undershoot]] (any-bucket trigger), [[replanIfUndershot]]
+  * and [[decisionRow]] (act). IVF and PQ keep their own ACT stages:
+  * their triggers are skew and distortion, not per-bucket detection.
   *
   * END-TO-END REHEARSALS (StreamingSpec, round 15): four of the five
   * families are driven through the WHOLE lifecycle in sequence over
   * streams — plan → quiet KEEP → injected drift → audit fires → ACT →
   * the serving face ADOPTS the emitted layout/index/codebooks → the
-  * enforce/detection check re-passes (IVF via [[ivfRefit]] →
+  * enforce/detection check re-passes (IVF via `refitIfDrifted` →
   * `ivfTopKWithCents` → [[recallFloor]]; MinHash bands via
-  * [[minhashReplan]] → `minHashPairsPortable`; sign-LSH via
-  * [[signReplan]] → `lshPairs`; PQ via [[pqRefit]] → re-derived
-  * codebooks beating the stale ones on the served corpus). SimHash
-  * width has the decision-flip test only: its WIDEN remedy shrinks
-  * boilerplate lane-collision buckets, a condition an exact-dup
-  * fixture cannot model (exact dups collide in every lane at ANY
-  * width), so its consumer face is pinned by the registered
+  * `bandReplanIfUndershot` → `minHashPairsPortable`; sign-LSH via
+  * `signReplanIfUndershot` → `lshPairs`; PQ via `pqRefitIfDistorted`
+  * → re-derived codebooks beating the stale ones on the served
+  * corpus). SimHash width has the decision-flip test only: its WIDEN
+  * remedy shrinks boilerplate lane-collision buckets, a condition an
+  * exact-dup fixture cannot model (exact dups collide in every lane at
+  * ANY width), so its consumer face is pinned by the registered
   * d29/d41/d42 queries instead. */
 object IndexMaintenance {
 
-  /** MinHash-LSH band family ACT: replan the (numHashes, bands) layout
-    * when any Jaccard bucket of exact pairs undershoots the detection
-    * target. Delegates to [[Dedup.bandReplanIfUndershot]] (d34/d35/d36;
-    * ladder: [[Dedup.bandReplanLadder]]). */
-  def minhashReplan(docs: DataFrame, id: String, text: String,
-      shingleN: Int, numHashes: Int, bands: Int, minJaccardPct: Int,
-      targetDetectPct: Int, maxBucket: Int = 1000,
-      maxDoublings: Int = 6): DataFrame =
-    Dedup.bandReplanIfUndershot(docs, id, text, shingleN, numHashes,
-      bands, minJaccardPct, targetDetectPct, maxBucket, maxDoublings)
+  /** Input contract of every percent-valued knob: fail loudly, never
+    * clamp an out-of-range percent into a plan. */
+  private[graft] def requirePercent(name: String, v: Int, lo: Int = 0): Unit =
+    require(v >= lo && v <= 100, s"$name is a percent, got $v")
 
-  /** Sign-LSH band family ACT: reband/widen the (nBits, bands) layout
-    * when any cosine bucket of exact pairs undershoots. Delegates to
-    * [[SimSearch.signReplanIfUndershot]] (d39/d40; ladder:
-    * [[SimSearch.signReplanLadder]]). */
-  def signReplan(embs: DataFrame, id: String, vec: String, dim: Int,
-      nBits: Int, bands: Int, minCosinePct: Int, targetDetectPct: Int,
-      maxBucket: Int = 2000, maxDoublings: Int = 6): DataFrame =
-    SimSearch.signReplanIfUndershot(embs, id, vec, dim, nBits, bands,
-      minCosinePct, targetDetectPct, maxBucket, maxDoublings)
+  /** PLAN: the first candidate band count whose analytic detection
+    * meets `targetDetectPct`; each caller keeps its own fallback. */
+  private[graft] def firstQualifying(candidates: Seq[Int],
+      detect: Int => Double, targetDetectPct: Int): Option[Int] =
+    candidates.find(b => detect(b) >= targetDetectPct / 100.0)
 
-  /** SimHash width family ACT: mandate the 128-bit fingerprint when
-    * the 64-bit layout's capped buckets eat pigeonhole-qualifying
-    * pairs. Delegates to [[Dedup.simHashWidenIfUndershot]] (d41/d42). */
-  def simhashWiden(docs: DataFrame, id: String, text: String,
-      maxHamming: Int = 3, targetDetectPct: Int = 99,
-      targetBucketSize: Long = 50L, maxBucket: Int = 1000,
-      precountedN: Option[Long] = None): DataFrame =
-    Dedup.simHashWidenIfUndershot(docs, id, text, maxHamming,
-      targetDetectPct, targetBucketSize, maxBucket, precountedN)
+  /** REMEDY: the first `cur · 2^k` (k = 0..maxDoublings) whose planned
+    * (bands, perBand) qualifies analytically AND differs from the
+    * failing layout — a planned layout that undershoots empirically
+    * must lengthen, not re-band to itself; ladder-max honest fallback
+    * `(n_max, n_max, 1)`. Returns (length, bands, perBand). */
+  private[graft] def doublingLadder(cur: Int, curBands: Int,
+      plan: Int => (Int, Int), detect: (Int, Int) => Double,
+      targetDetectPct: Int, maxDoublings: Int): (Int, Int, Int) = {
+    require(cur >= 1 && curBands >= 1, "layout must be positive")
+    require(maxDoublings >= 0 && (cur.toLong << maxDoublings)
+      <= Int.MaxValue, s"maxDoublings out of range: $maxDoublings")
+    (0 to maxDoublings).iterator
+      .map { k =>
+        val n = cur << k
+        val (b, per) = plan(n)
+        (n, b, per)
+      }
+      .find { case (n, b, per) =>
+        detect(b, per) >= targetDetectPct / 100.0 &&
+          (n != cur || b != curBands)
+      }
+      .getOrElse {
+        val n = cur << maxDoublings
+        (n, n, 1)
+      }
+  }
 
-  /** IVF cell family ACT: refit the serving centroids on incoming-load
-    * skew or assignment-cosine drift. Delegates to
-    * [[SimSearch.refitIfDrifted]] (sim22/sim23). */
-  def ivfRefit(fit: DataFrame, incoming: DataFrame, id: String,
-      vec: String, targetCellSize: Long, skewFactor: Int = 4,
-      driftMilli: Int = 50, minCellN: Long = 5L): DataFrame =
-    SimSearch.refitIfDrifted(fit, incoming, id, vec, targetCellSize,
-      skewFactor, driftMilli, minCellN)
+  /** 0.1-wide similarity bucket, closed-top: 1.0 lands in bucket 9, not
+    * a bucket 10 whose midpoint is outside the curve's domain. */
+  private[graft] def closedDecile(sim: Column): Column =
+    least(floor(sim * 10), lit(9L)).cast("long")
 
-  /** PQ codebook family ACT: re-pull the codebook source when the
-    * incoming side quantizes ≥ ratioPct/100 worse than the fit side.
-    * Delegates to [[SimSearch.pqRefitIfDistorted]] (sim24/sim25). */
-  def pqRefit(fit: DataFrame, incoming: DataFrame, id: String,
-      vec: String, dim: Int, m: Int, k: Int,
-      ratioPct: Int = 150): DataFrame =
-    SimSearch.pqRefitIfDistorted(fit, incoming, id, vec, dim, m, k,
-      ratioPct)
+  /** AUDIT: every exact pair, `__det` = 1 iff a candidate (else null). */
+  private[graft] def detected(exact: DataFrame, cand: DataFrame,
+      keys: Seq[String]): DataFrame =
+    exact.join(cand.select(keys.map(col) :+ lit(1L).as("__det"): _*),
+      keys, "left")
+
+  /** AUDIT: per bucket — (`bucketName`, n_pairs, n_detected,
+    * detect_rate, predicted_prob, layout…). detect_rate is a quotient of
+    * exact counts (bit-identical in any engine); the `predicted` curve
+    * is 6-dp rounded, as pow/acos/lgamma are not correctly rounded. */
+  private[graft] def bucketAudit(detected: DataFrame, bucket: Column,
+      bucketName: String, predicted: Column,
+      layout: (String, Long)*): DataFrame =
+    detected
+      .select(bucket.as(bucketName), col("__det"))
+      .groupBy(col(bucketName))
+      .agg(count(lit(1)).as("n_pairs"), count(col("__det")).as("n_detected"))
+      .select(Seq(col(bucketName), col("n_pairs"), col("n_detected"),
+        (col("n_detected").cast("double") / col("n_pairs"))
+          .as("detect_rate"),
+        round(predicted, 6).as("predicted_prob")) ++
+        layout.map { case (name, v) => lit(v).as(name) }: _*)
+
+  /** ACT trigger: (n_pairs, n_detected, n_buckets_below, fire) from one
+    * bounded 1-row collect. A bucket is below when `n_detected·100 <
+    * targetDetectPct·n_pairs` (exact integers, no float knife edge); the
+    * test is per-bucket, not aggregate, because dup mass would mask a
+    * dead mid-similarity band. No evidence is a KEEP (quiet interval). */
+  private[graft] def undershoot(detected: DataFrame, bucket: Column,
+      targetDetectPct: Int): (Long, Long, Long, Boolean) = {
+    val d = detected
+      .select(bucket.as("__b"), col("__det"))
+      .groupBy(col("__b"))
+      .agg(count(lit(1)).as("__n"), count(col("__det")).as("__d"))
+      .agg(coalesce(sum(col("__n")), lit(0L)),
+        coalesce(sum(col("__d")), lit(0L)),
+        coalesce(sum(when(col("__d") * 100L
+          < lit(targetDetectPct.toLong) * col("__n"), 1L)
+          .otherwise(0L)), lit(0L)))
+      .head()
+    val (nPairs, nDet, nBelow) = (d.getLong(0), d.getLong(1), d.getLong(2))
+    (nPairs, nDet, nBelow, nPairs > 0L && nBelow > 0L)
+  }
+
+  /** ACT for the divisor-layout families: [[undershoot]], and on fire
+    * the `ladder` remedy. One row — (replan, action 0 keep / 1 reband /
+    * 2 lengthen, n_pairs, n_detected, n_buckets_below, the `layout`
+    * columns, their `new_` twins, new_detect_prob). */
+  private[graft] def replanIfUndershot(detected: DataFrame, bucket: Column,
+      targetDetectPct: Int, layout: (String, String, String), cur: Int,
+      curBands: Int, ladder: => (Int, Int, Int),
+      detect: (Int, Int) => Double): DataFrame = {
+    val (nPairs, nDet, nBelow, replan) =
+      undershoot(detected, bucket, targetDetectPct)
+    val (newN, newBands, newPer) =
+      if (!replan) (cur, curBands, cur / curBands) else ladder
+    val action = if (!replan) 0L else if (newN == cur) 1L else 2L
+    val (nName, bName, perName) = layout
+    decisionRow(detected.sparkSession,
+      "replan" -> (if (replan) 1L else 0L), "action" -> action,
+      "n_pairs" -> nPairs, "n_detected" -> nDet, "n_buckets_below" -> nBelow,
+      nName -> cur.toLong, bName -> curBands.toLong,
+      perName -> (cur / curBands).toLong, s"new_$nName" -> newN.toLong,
+      s"new_$bName" -> newBands.toLong, s"new_$perName" -> newPer.toLong,
+      // Spark-side 6-dp round, the d33 precedent (pow's last ulp)
+      "new_detect_prob" -> round(lit(detect(newBands, newPer)), 6))
+  }
+
+  /** The 1-row decision frame, one literal column per `(name, value)`. */
+  private[graft] def decisionRow(spark: SparkSession,
+      cols: (String, Any)*): DataFrame =
+    spark.range(1).select(cols.map { case (name, v) => lit(v).as(name) }: _*)
 
   /** EXTRACT: the deterministic md5 sample slice every sampled-audit
     * caller shares — `md5(id)`'s hex prefix compared against
@@ -163,8 +234,7 @@ object IndexMaintenance {
     * pair would run it twice (Catalyst does not CSE across joins). */
   def recallFloor(approx: DataFrame, truth: DataFrame,
       keys: Seq[String], floorPct: Int): DataFrame = {
-    require(floorPct >= 0 && floorPct <= 100,
-      s"floorPct is a percent, got $floorPct")
+    requirePercent("floorPct", floorPct)
     truth.join(approx.select(keys.map(col): _*).distinct()
         .withColumn("__hit", lit(1)), keys, "left")
       .agg(count(lit(1)).as("n_truth"), count(col("__hit")).as("__h"))

@@ -245,7 +245,7 @@ object SimSearch {
     * S-curve with the position-agreement probability swapped for the
     * hyperplane bound. */
   def signDetectionProb(cos: Double, bands: Int, width: Int): Double =
-    1.0 - math.pow(1.0 - math.pow(signCollisionProb(cos), width), bands)
+    Dedup.detectionProb(signCollisionProb(cos), bands, width)
 
   /** [[graft.llmops.Dedup.bandPlan]]'s divisor scan for FIXED-width
     * sign-LSH signatures: fewest bands b dividing `nBits` whose
@@ -261,13 +261,11 @@ object SimSearch {
   def signBandPlan(nBits: Int, minCosinePct: Int,
       targetDetectPct: Int): (Int, Int) = {
     require(nBits >= 1, s"nBits must be >= 1, got $nBits")
-    require(minCosinePct >= -100 && minCosinePct <= 100,
-      s"minCosinePct is a percent, got $minCosinePct")
-    require(targetDetectPct >= 0 && targetDetectPct <= 100,
-      s"targetDetectPct is a percent, got $targetDetectPct")
-    (1 to nBits).filter(nBits % _ == 0)
-      .find(b => signDetectionProb(minCosinePct / 100.0, b, nBits / b)
-        >= targetDetectPct / 100.0)
+    IndexMaintenance.requirePercent("minCosinePct", minCosinePct, -100)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
+    IndexMaintenance.firstQualifying((1 to nBits).filter(nBits % _ == 0),
+        b => signDetectionProb(minCosinePct / 100.0, b, nBits / b),
+        targetDetectPct)
       .map(b => (b, nBits / b))
       .getOrElse((nBits, 1))
   }
@@ -298,37 +296,36 @@ object SimSearch {
   def signBandPlanAudit(embs: DataFrame, id: String, vec: String,
       dim: Int, nBits: Int, minCosinePct: Int, targetDetectPct: Int,
       cosineFloorPct: Int = 10, maxBucket: Int = 2000): DataFrame = {
-    require(cosineFloorPct >= -100 && cosineFloorPct <= 100,
-      s"cosineFloorPct is a percent, got $cosineFloorPct")
+    IndexMaintenance.requirePercent("cosineFloorPct", cosineFloorPct, -100)
     val (bands, width) = signBandPlan(nBits, minCosinePct,
       targetDetectPct)
-    val exact = cosinePairs(embs, id, vec, minCosine = -1.0)
-      .select(col("id_a"), col("id_b"),
-        round(col("cosine"), 6).as("__c"))
-      .where(col("__c") >= lit(cosineFloorPct / 100.0))
-    val cand = lshPairs(embs, id, vec, dim, minCosine = -1.0, nBits,
-        bands, maxBucket)
-      .select(col("id_a"), col("id_b"), lit(1L).as("__det"))
     val mid = (col("c_bucket").cast("double") + 0.5) / 10.0
-    exact.join(cand, Seq("id_a", "id_b"), "left")
-      // closed-top bucket 9 (cosine 1.0 must not mint a bucket 10
-      // whose midpoint is outside the curve's domain) — the d33 rule
-      .select(least(floor(col("__c") * 10), lit(9L)).cast("long")
-          .as("c_bucket"),
-        col("__det"))
-      .groupBy(col("c_bucket"))
-      .agg(count(lit(1)).as("n_pairs"), count(col("__det")).as("n_detected"))
-      .select(col("c_bucket"), col("n_pairs"), col("n_detected"),
-        (col("n_detected").cast("double") / col("n_pairs"))
-          .as("detect_rate"),
-        // rounded: acos and pow are not correctly-rounded; the 6-dp
-        // round absorbs the last ulp (midpoint margins audited in the
-        // spec, the d33 discipline)
-        round(lit(1.0) - pow(lit(1.0) -
-          pow(lit(1.0) - acos(mid) / lit(math.Pi), lit(width.toDouble)),
-          lit(bands.toDouble)), 6).as("predicted_prob"),
-        lit(bands.toLong).as("bands"), lit(width.toLong).as("width"))
+    IndexMaintenance.bucketAudit(
+      signDetection(embs, id, vec, dim, nBits, bands, cosineFloorPct,
+        maxBucket),
+      IndexMaintenance.closedDecile(col("__c")), "c_bucket",
+      lit(1.0) - pow(lit(1.0) -
+        pow(lit(1.0) - acos(mid) / lit(math.Pi), lit(width.toDouble)),
+        lit(bands.toDouble)),
+      "bands" -> bands.toLong, "width" -> width.toLong)
   }
+
+  /** Detection frame of [[signBandPlanAudit]] and
+    * [[signReplanIfUndershot]]: exact pairwise cosines ([[cosinePairs]],
+    * 6-dp rounded as `__c` so both engines bucket identically) ≥
+    * `floorPct/100`, flagged `__det` when the banding stage at
+    * (nBits, bands) emits them (threshold −1 — detection is sharing ≥ 1
+    * band, before any cosine filter). */
+  private def signDetection(embs: DataFrame, id: String, vec: String,
+      dim: Int, nBits: Int, bands: Int, floorPct: Int,
+      maxBucket: Int): DataFrame =
+    IndexMaintenance.detected(
+      cosinePairs(embs, id, vec, minCosine = -1.0)
+        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("__c"))
+        .where(col("__c") >= lit(floorPct / 100.0)),
+      lshPairs(embs, id, vec, dim, minCosine = -1.0, nBits, bands,
+        maxBucket),
+      Seq("id_a", "id_b"))
 
   /** The remedy ladder behind [[signReplanIfUndershot]] — the
     * [[graft.llmops.Dedup.bandReplanLadder]] discipline applied to
@@ -340,26 +337,11 @@ object SimSearch {
     * (PropertiesSpec pins it over generated inputs, like the MinHash
     * ladder). Returns (nBits, bands, width). */
   def signReplanLadder(curNBits: Int, curBands: Int, minCosinePct: Int,
-      targetDetectPct: Int, maxDoublings: Int): (Int, Int, Int) = {
-    require(curNBits >= 1 && curBands >= 1, "layout must be positive")
-    require(maxDoublings >= 0 && (curNBits.toLong << maxDoublings)
-      <= Int.MaxValue, s"maxDoublings out of range: $maxDoublings")
-    (0 to maxDoublings).iterator
-      .map { k =>
-        val nb = curNBits << k
-        val (b, w) = signBandPlan(nb, minCosinePct, targetDetectPct)
-        (nb, b, w)
-      }
-      .find { case (nb, b, w) =>
-        signDetectionProb(minCosinePct / 100.0, b, w) >=
-          targetDetectPct / 100.0 &&
-          (nb != curNBits || b != curBands)
-      }
-      .getOrElse {
-        val nb = curNBits << maxDoublings
-        (nb, nb, 1)
-      }
-  }
+      targetDetectPct: Int, maxDoublings: Int): (Int, Int, Int) =
+    IndexMaintenance.doublingLadder(curNBits, curBands,
+      signBandPlan(_, minCosinePct, targetDetectPct),
+      signDetectionProb(minCosinePct / 100.0, _, _), targetDetectPct,
+      maxDoublings)
 
   /** The sign-LSH banding lifecycle's ACT stage —
     * [[graft.llmops.Dedup.bandReplanIfUndershot]]'s embedding-family
@@ -394,56 +376,20 @@ object SimSearch {
       maxDoublings: Int = 6): DataFrame = {
     require(nBits >= 1 && bands >= 1 && nBits % bands == 0,
       s"bands must divide nBits, got ($nBits, $bands)")
-    require(minCosinePct >= -100 && minCosinePct <= 100,
-      s"minCosinePct is a percent, got $minCosinePct")
-    require(targetDetectPct >= 0 && targetDetectPct <= 100,
-      s"targetDetectPct is a percent, got $targetDetectPct")
+    IndexMaintenance.requirePercent("minCosinePct", minCosinePct, -100)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
     require(maxDoublings >= 0 && (nBits.toLong << maxDoublings)
       <= Int.MaxValue, s"maxDoublings out of range: $maxDoublings")
-    val spark = embs.sparkSession
     // the operating-point filter IS the exact-pair floor (the d34
     // rule): pairs below the declared threshold carry no evidence
-    val exact = cosinePairs(embs, id, vec, minCosine = -1.0)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("__c"))
-      .where(col("__c") >= lit(minCosinePct / 100.0))
-    val cand = lshPairs(embs, id, vec, dim, minCosine = -1.0, nBits,
-        bands, maxBucket)
-      .select(col("id_a"), col("id_b"), lit(1L).as("__det"))
-    val d = exact.join(cand, Seq("id_a", "id_b"), "left")
-      .select(least(floor(col("__c") * 10), lit(9L)).cast("long")
-          .as("__cb"),
-        col("__det"))
-      .groupBy(col("__cb"))
-      .agg(count(lit(1)).as("__n"), count(col("__det")).as("__d"))
-      .agg(coalesce(sum(col("__n")), lit(0L)),
-        coalesce(sum(col("__d")), lit(0L)),
-        coalesce(sum(when(col("__d") * 100L
-          < lit(targetDetectPct.toLong) * col("__n"), 1L)
-          .otherwise(0L)), lit(0L)))
-      .head()
-    val nPairs = d.getLong(0)
-    val nDet = d.getLong(1)
-    val nBelow = d.getLong(2)
-    val replan = nPairs > 0L && nBelow > 0L
-    val (newNb, newBands, newWidth) =
-      if (!replan) (nBits, bands, nBits / bands)
-      else signReplanLadder(nBits, bands, minCosinePct, targetDetectPct,
-        maxDoublings)
-    val action = if (!replan) 0L else if (newNb == nBits) 1L else 2L
-    spark.range(1).select(
-      lit(if (replan) 1L else 0L).as("replan"),
-      lit(action).as("action"),
-      lit(nPairs).as("n_pairs"),
-      lit(nDet).as("n_detected"),
-      lit(nBelow).as("n_buckets_below"),
-      lit(nBits.toLong).as("n_bits"),
-      lit(bands.toLong).as("bands"),
-      lit((nBits / bands).toLong).as("width"),
-      lit(newNb.toLong).as("new_n_bits"),
-      lit(newBands.toLong).as("new_bands"),
-      lit(newWidth.toLong).as("new_width"),
-      round(lit(signDetectionProb(minCosinePct / 100.0, newBands,
-        newWidth)), 6).as("new_detect_prob"))
+    IndexMaintenance.replanIfUndershot(
+      signDetection(embs, id, vec, dim, nBits, bands, minCosinePct,
+        maxBucket),
+      IndexMaintenance.closedDecile(col("__c")), targetDetectPct,
+      ("n_bits", "bands", "width"), nBits, bands,
+      signReplanLadder(nBits, bands, minCosinePct, targetDetectPct,
+        maxDoublings),
+      signDetectionProb(minCosinePct / 100.0, _, _))
   }
 
   /** Minimum band count at a GIVEN per-band width — the auto-width
@@ -465,9 +411,10 @@ object SimSearch {
       maxBands: Int = 64): Int = {
     require(width >= 1, s"width must be >= 1, got $width")
     require(maxBands >= 1, s"maxBands must be >= 1, got $maxBands")
-    (1 to maxBands)
-      .find(b => signDetectionProb(minCosinePct / 100.0, b, width)
-        >= targetDetectPct / 100.0)
+    IndexMaintenance.requirePercent("minCosinePct", minCosinePct, -100)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
+    IndexMaintenance.firstQualifying(1 to maxBands,
+        signDetectionProb(minCosinePct / 100.0, _, width), targetDetectPct)
       .getOrElse(maxBands)
   }
 
@@ -811,7 +758,7 @@ object SimSearch {
   }
 
   /** Serving face of the residual layout against an EXPLICIT centroid
-    * set — the consumer of an [[graft.llmops.IndexMaintenance.ivfRefit]]
+    * set — the consumer of a [[refitIfDrifted]]
     * emission, mirroring [[ivfTopKWithCents]] for plain IVF. The
     * codebooks MUST be fit on residuals w.r.t. THESE centroids (a cell
     * refit invalidates the residual space, so the maintenance caller
@@ -878,8 +825,7 @@ object SimSearch {
       ladder: Seq[Int] = Seq(1, 2, 4, 8)): Int = {
     require(ladder.nonEmpty && ladder == ladder.sorted,
       s"ladder must be ascending, got $ladder")
-    require(recallPctTarget >= 0 && recallPctTarget <= 100,
-      s"recallPctTarget is a percent, got $recallPctTarget")
+    IndexMaintenance.requirePercent("recallPctTarget", recallPctTarget)
     val pmax = ladder.max
     val c = corpus.select(col(cId).as("item_id"),
       col(cVec).cast("array<double>").as("__cv"))

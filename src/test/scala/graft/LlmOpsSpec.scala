@@ -1767,4 +1767,49 @@ class LlmOpsSpec extends AnyFunSuite {
       IndexMaintenance.md5Sample(docs, "doc_id", "2G")
     }
   }
+
+  test("plan/audit input contract: out-of-range percents fail loudly") {
+    // a percent outside its range must throw, not clamp into a plan
+    // (cos 1.5 clamps to 1.0 → 1 band → an empty pair frame, no error)
+    intercept[IllegalArgumentException] {
+      SimSearch.signBandsFor(4, minCosinePct = 150, targetDetectPct = 80)
+    }
+    intercept[IllegalArgumentException] {
+      SimSearch.signBandsFor(4, minCosinePct = 40, targetDetectPct = 150)
+    }
+    val embs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException] {
+      SimSearch.lshPairsAutoPlanned(embs, "vec_id", "embedding", dim = 2,
+        minCosinePct = 150, targetBucketSize = 50L, targetDetectPct = 80)
+    }
+    val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.bandPlanAudit(docs, "doc_id", "text", shingleN = 2,
+        numHashes = 16, minJaccardPct = 101, targetDetectPct = 80)
+    }
+    assert(e.getMessage.contains("percent"), e.getMessage)
+  }
+
+  test("undershoot trigger: integer boundary, any-bucket, quiet interval") {
+    import graft.llmops.IndexMaintenance
+    // hand-built detection frames: one row per exact pair, `__det` = 1
+    // when the banding caught it, null otherwise
+    def frame(buckets: (Long, Int, Int)*) =
+      buckets.flatMap { case (b, n, d) =>
+        Seq.tabulate(n)(i => (b, if (i < d) Some(1L) else None))
+      }.toDF("b", "__det")
+    def fire(buckets: (Long, Int, Int)*) =
+      IndexMaintenance.undershoot(frame(buckets: _*), $"b",
+        targetDetectPct = 80)
+    // exactly on target: 8·100 == 80·10 is not below → KEEP
+    assert(fire((3L, 10, 8)) == ((10L, 8L, 0L, false)))
+    // one detection fewer: 7·100 < 80·10 → fires
+    assert(fire((3L, 10, 7)) == ((10L, 7L, 1L, true)))
+    // any-bucket, not aggregate: 97/100 overall, but bucket 5 is at 1/2
+    assert(fire((3L, 10, 10), (5L, 2, 1), (9L, 88, 86))
+      == ((100L, 97L, 1L, true)))
+    // quiet interval: no evidence rows is a KEEP with zero counts
+    assert(fire() == ((0L, 0L, 0L, false)))
+  }
 }

@@ -916,7 +916,7 @@ class StreamingSpec extends AnyFunSuite {
     // PLAN: bootstrap the serving index through the SAME policy a
     // maintenance loop runs — a quiet (empty) interval is a KEEP that
     // emits the fit-time md5-pulled centroid source at autoCells size
-    val bootstrap = IndexMaintenance.ivfRefit(fit, fit.limit(0),
+    val bootstrap = SimSearch.refitIfDrifted(fit, fit.limit(0),
       "item_id", "vec", targetCell, skewFactor = 4, driftMilli = 50,
       minCellN = 2).collect()
     assert(bootstrap.head.getLong(0) == 0L &&
@@ -937,7 +937,7 @@ class StreamingSpec extends AnyFunSuite {
     val maint = ingest.toDF().toDF("item_id", "vec").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          val rows = IndexMaintenance.ivfRefit(corpusNow, batch,
+          val rows = SimSearch.refitIfDrifted(corpusNow, batch,
             "item_id", "vec", targetCell, skewFactor = 4,
             driftMilli = 50, minCellN = 2).collect()
           val h = rows.head
@@ -1030,7 +1030,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.functions.GraftFunctions.rankCells
     // The IndexMaintenance matrix documents the residual layout (sim33)
     // as the COMPOSITION of the IVF and PQ rows: cell drift is detected
-    // and acted on by ivfRefit, and because codes store y − c(y), a cell
+    // and acted on by refitIfDrifted, and because codes store y − c(y), a cell
     // REFIT invalidates the residual space — the maintenance caller must
     // re-derive codebooks against the NEW cells in the same step. This
     // scenario makes that executable: same fit/iid geometry as the IVF
@@ -1082,7 +1082,7 @@ class StreamingSpec extends AnyFunSuite {
       rows.sortBy(_.getLong(4)).map(r => idToVec(r.getLong(5))).toSeq
 
     // PLAN: bootstrap (cents, codebooks) TOGETHER through a quiet KEEP
-    val bootstrap = IndexMaintenance.ivfRefit(fit, fit.limit(0),
+    val bootstrap = SimSearch.refitIfDrifted(fit, fit.limit(0),
       "item_id", "vec", 2, skewFactor = 4, driftMilli = 50,
       minCellN = 2).collect()
     assert(bootstrap.head.getLong(0) == 0L)
@@ -1097,7 +1097,7 @@ class StreamingSpec extends AnyFunSuite {
     val maint = ingest.toDF().toDF("item_id", "vec").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          val rows = IndexMaintenance.ivfRefit(corpusNow, batch,
+          val rows = SimSearch.refitIfDrifted(corpusNow, batch,
             "item_id", "vec", 2, skewFactor = 4, driftMilli = 50,
             minCellN = 2).collect()
           acts += rows.head.getLong(0)
