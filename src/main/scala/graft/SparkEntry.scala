@@ -1191,6 +1191,15 @@ object SparkEntry {
     * order are bit-identical doubles on both engines (the 6-dp round
     * tried first actually CAUSED mismatches — the two engines disagree
     * on exact .5 boundaries, which power-of-two weights make common). */
+  private val w8Ewma: Q = (s, dir) => {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id")).rowsBetween(-49, 0)
+    Tables.events(s, dir).where(col("value").isNotNull)
+      .withColumn("__vals", collect_list(col("value")).over(w))
+      .select(col("user_id"), col("event_id"),
+        Features.decayedSum(col("__vals"), 0.5).as("ewma"))
+  }
+
   /** W9: event-time ROLLING aggregate — trailing-7-day event count and
     * value sum per user at each event, a RANGE frame over epoch-nanos
     * `ts` (the frame is defined by TIME, not row count — w8's
@@ -1916,15 +1925,6 @@ object SparkEntry {
       TextFunctions.urlHost(col("url")).as("host"))
   }
 
-  private val w8Ewma: Q = (s, dir) => {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id")).rowsBetween(-49, 0)
-    Tables.events(s, dir).where(col("value").isNotNull)
-      .withColumn("__vals", collect_list(col("value")).over(w))
-      .select(col("user_id"), col("event_id"),
-        Features.decayedSum(col("__vals"), 0.5).as("ewma"))
-  }
-
   /** LLM-X11: exact-N PER-GROUP deterministic sample — each source keeps
     * exactly min(N, |source|) docs, picked by md5 hash order, computed
     * with the native k-capped-heap aggregate ([[TopK.perGroupAgg]]): one
@@ -1940,9 +1940,6 @@ object SparkEntry {
       Seq(col("source")), Seq(col("pick_key")), Seq(col("doc_id")), 30)
       .select(col("source"), col("rank"), col("doc_id"))
 
-  /** LLM-X13: deterministic shard assignment + within-shard order
-    * ([[Sampling.shardAssign]], 8 shards over doc_id) — the reproducible
-    * global shuffle a distributed dataloader reads. */
   /** LLM-X14: preference-pair mining ([[Sampling.preferencePairs]]) —
     * the DPO/RLHF pairwise training-data build: per user, the 3
     * strongest-signal events paired against the 3 weakest, kept when
@@ -1954,6 +1951,9 @@ object SparkEntry {
       Tables.events(s, dir).where(col("value").isNotNull),
       "user_id", "event_id", "value", k = 3, minGap = 200.0)
 
+  /** LLM-X13: deterministic shard assignment + within-shard order
+    * ([[Sampling.shardAssign]], 8 shards over doc_id) — the reproducible
+    * global shuffle a distributed dataloader reads. */
   private val x13ShardAssign: Q = (s, dir) =>
     Sampling.shardAssign(
         Tables.documents(s, dir).select(col("doc_id")), col("doc_id"), 8)
@@ -2098,8 +2098,6 @@ object SparkEntry {
           "zh" -> 0.15), targetFrac = 0.5)
       .select(col("doc_id"), col("lang"))
 
-  /** LLM-V2: per-vector affine int8 quantization + max reconstruction
-    * error (the 4× storage-reduction path for 100 TB embedding tables). */
   /** SIM6: PQ asymmetric-distance top-k (the IVF-PQ scan): corpus stored
     * as 4-byte PQ codes, each query builds a 4×4 lookup table of
     * subspace distances once ([[VectorOps.pqAdcLut]]), and ranking reads
@@ -2110,12 +2108,8 @@ object SparkEntry {
   private val sim6PqAdc: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val corpus = emb.where(col("vec_id") >= 10)
-    val full: Seq[Seq[Double]] = corpus
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    val cb: Seq[Seq[Seq[Double]]] =
-      (0 until 4).map(sub => full.map(_.slice(sub * 16, sub * 16 + 16)))
+    val (_, cb) = SimSearch.mdCodebooks(corpus, "vec_id", "embedding",
+      dim = 64, m = 4, k = 4)
     val codes = corpus.select(col("vec_id").as("item_id"),
       VectorOps.pqCodes(VectorOps.pqAssign(col("embedding"), cb))
         .as("__codes"))
@@ -2131,12 +2125,6 @@ object SparkEntry {
         col("rank").cast("long").as("rank"))
   }
 
-  /** SIM7: composed IVF-PQ ANN ([[SimSearch.ivfPqTopKPortable]], 8 cells
-    * probe 4, 4×16-dim codebooks) — cell pruning bounds which items are
-    * scored, PQ codes bound what is read per item; the layout a
-    * billion-vector deployment stores on disk. Same corpus/query split
-    * and codebook derivation as sim6, so the oracle reuses its proven
-    * SQL machinery plus sim5's cell logic. */
   /** SIM8: MMR diversified re-ranking ([[SimSearch.mmrRerank]], 20
     * candidates → 5 picks, λ = 0.5) — the rerank stage after BM25/ANN
     * recall; greedy steps are driver-side plan steps, never data
@@ -2148,15 +2136,17 @@ object SparkEntry {
       "vec_id", "embedding", nCand = 20, k = 5, lam = 0.5)
   }
 
+  /** SIM7: composed IVF-PQ ANN ([[SimSearch.ivfPqTopKPortable]], 8 cells
+    * probe 4, 4×16-dim codebooks) — cell pruning bounds which items are
+    * scored, PQ codes bound what is read per item; the layout a
+    * billion-vector deployment stores on disk. Same corpus/query split
+    * and codebook derivation as sim6, so the oracle reuses its proven
+    * SQL machinery plus sim5's cell logic. */
   private val sim7IvfPq: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val corpus = emb.where(col("vec_id") >= 10)
-    val full: Seq[Seq[Double]] = corpus
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    val cb: Seq[Seq[Seq[Double]]] =
-      (0 until 4).map(sub => full.map(_.slice(sub * 16, sub * 16 + 16)))
+    val (_, cb) = SimSearch.mdCodebooks(corpus, "vec_id", "embedding",
+      dim = 64, m = 4, k = 4)
     SimSearch.ivfPqTopKPortable(emb.where(col("vec_id") < 10), corpus,
         "vec_id", "embedding", "vec_id", "embedding",
         k = 5, nCells = 8, nProbe = 4, codebooks = cb)
@@ -2179,27 +2169,17 @@ object SparkEntry {
   private val sim33IvfPqResidual: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val corpus = emb.where(col("vec_id") >= 10)
-    val c = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("__cv"))
-    val cents: Seq[Seq[Double]] = c
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(8).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    val centArr = array(cents.map(cv => array(cv.map(lit): _*)): _*)
-    import graft.functions.GraftFunctions.rankCells
+    val cents = SimSearch.mdPull(corpus, "vec_id", "embedding", 8)
     // residuals of the first 4 md5-ordered corpus vectors w.r.t. their
     // OWN assigned cells — the same data-derived-literal trick as
     // sim6/sim7, shifted to residual space so the codebooks quantize
-    // what the codes actually store
-    val res4: Seq[Seq[Double]] = c
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4)
-      .select(zip_with(col("__cv"),
-        element_at(centArr,
-          element_at(rankCells(col("__cv"), cents, 1), 1) + 1),
-        (a, b) => a - b).as("__r"))
+    // what the codes actually store (the 4-row pull is the 8-row one's head)
+    import s.implicits._
+    val res4: Seq[Seq[Double]] = cents.take(4).toDF("__cv")
+      .select(SimSearch.residual(col("__cv"),
+        SimSearch.assignCell(col("__cv"), cents), cents))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val cb: Seq[Seq[Seq[Double]]] =
-      (0 until 4).map(sub => res4.map(_.slice(sub * 16, sub * 16 + 16)))
+    val cb = SimSearch.pqSplit(res4, dim = 64, m = 4)
     SimSearch.ivfPqResidualTopK(emb.where(col("vec_id") < 10), corpus,
         "vec_id", "embedding", "vec_id", "embedding",
         k = 5, nCells = 8, nProbe = 4, codebooks = cb)
@@ -2216,12 +2196,8 @@ object SparkEntry {
     * [[VectorOps.pqTrain]] (MiscApiSpec covers it). */
   private val v3PqEncode: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val full: Seq[Seq[Double]] = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    val cb: Seq[Seq[Seq[Double]]] =
-      (0 until 4).map(sub => full.map(_.slice(sub * 16, sub * 16 + 16)))
+    val (_, cb) = SimSearch.mdCodebooks(emb, "vec_id", "embedding",
+      dim = 64, m = 4, k = 4)
     val assigned = VectorOps.pqAssign(col("embedding"), cb)
     emb.select(col("vec_id"), assigned.as("__a"))
       .select(col("vec_id"), VectorOps.pqCodes(col("__a")).as("__codes"),
@@ -2269,6 +2245,8 @@ object SparkEntry {
           round(element_at(col("__y"), j + 1), 6).as(s"r$j")): _*)
   }
 
+  /** LLM-V2: per-vector affine int8 quantization + max reconstruction
+    * error (the 4× storage-reduction path for 100 TB embedding tables). */
   private val v2QuantizeEmb: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = VectorOps.quantizeInt8(col("embedding"))
@@ -2724,10 +2702,6 @@ object SparkEntry {
     Tables.documents(s, dir).select(col("doc_id"),
       round(TextFunctions.hashedClassifierScore(col("text")), 6).as("quality"))
 
-  /** G5: personalized PageRank (2 rounds, damping 0.5) on the
-    * bidirectional supplier↔part interaction graph, seeded at suppliers
-    * 0-9 — the model-free random-walk recall signal complementing g4's
-    * LightGCN forward. */
   /** G6: item-item co-occurrence CF recall — per-item top-5 neighbor
     * lists over "parts ordered together" baskets (lineitem), cosine over
     * binary basket membership ([[ItemCf]]). The neighborhood twin of the
@@ -2788,10 +2762,6 @@ object SparkEntry {
     Validate.profile(Tables.orders(s, dir),
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
 
-  /** Q4: two-snapshot profile drift ([[Validate.profileDrift]]) — the
-    * even/odd order-key halves stand in for yesterday/today partitions;
-    * per-column null-rate, cardinality and range comparison in two
-    * scans. */
   /** Q5: duplicate-rate monitor — per-source exact-dup health gauge
     * (share of docs whose content digest repeats within the source):
     * the number a curation pipeline alerts on between full d1 runs.
@@ -2860,6 +2830,10 @@ object SparkEntry {
         col("version_id"), col("valid_from"))
   }
 
+  /** Q4: two-snapshot profile drift ([[Validate.profileDrift]]) — the
+    * even/odd order-key halves stand in for yesterday/today partitions;
+    * per-column null-rate, cardinality and range comparison in two
+    * scans. */
   private val q4ProfileDrift: Q = (s, dir) => {
     val o = Tables.orders(s, dir)
     Validate.profileDrift(
@@ -2883,6 +2857,10 @@ object SparkEntry {
         Tables.customer(s, dir), "c_custkey", "custkey_in_customer"))
   }
 
+  /** G5: personalized PageRank (2 rounds, damping 0.5) on the
+    * bidirectional supplier↔part interaction graph, seeded at suppliers
+    * 0-9 — the model-free random-walk recall signal complementing g4's
+    * LightGCN forward. */
   private val g5PageRank: Q = (s, dir) => {
     val e = Tables.lineitem(s, dir)
       .select(col("l_suppkey").cast("long").as("sk"),
@@ -3462,10 +3440,7 @@ object SparkEntry {
     * engines average identical values. */
   private val a33Ild: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val top = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
+    val top = annTruth(emb)
       .join(emb.select(col("vec_id").as("item_id"), col("embedding")),
         "item_id")
     val a = top.select(col("query_id"), col("item_id").as("i"),
@@ -3539,20 +3514,10 @@ object SparkEntry {
     * everything still reports recall 0 rather than vanishing. */
   private val sim11AnnRecall: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val approx = SimSearch.lshTopKPortable(
+    perQueryRecall(emb, SimSearch.lshTopKPortable(
         emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
         "vec_id", "embedding", "vec_id", "embedding",
-        k = 5, dim = 64, nBits = 8)
-      .select(col("query_id"), col("item_id"), lit(1).as("__hit"))
-    val exact = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    exact.join(approx, Seq("query_id", "item_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"))
-      .withColumn("recall",
-        round(col("n_hit") * lit(1.0) / col("n_exact"), 6))
+        k = 5, dim = 64, nBits = 8))
   }
 
   /** W19: inter-event gap statistics per user — median / p90 / max gap
@@ -4292,19 +4257,9 @@ object SparkEntry {
     val emb = Tables.embeddings(s, dir)
     val sliced = emb.select(col("vec_id"),
       slice(col("embedding"), 1, 16).as("embedding"))
-    val approx = SimSearch.bruteForceTopK(
+    perQueryRecall(emb, SimSearch.bruteForceTopK(
         sliced.where(col("vec_id") < 10), sliced.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"), lit(1).as("__hit"))
-    val exact = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    exact.join(approx, Seq("query_id", "item_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"))
-      .withColumn("recall",
-        round(col("n_hit") * lit(1.0) / col("n_exact"), 6))
+        "vec_id", "embedding", "vec_id", "embedding", k = 5))
   }
 
   /** SIM13: nearest-centroid classification — per-label mean embedding
@@ -4457,20 +4412,24 @@ object SparkEntry {
     * ships. Four probe depths re-run the probe stage only conceptually;
     * at fixture scale the four pipelines re-execute and stay cheap —
     * a production sweep would snapshot the assignment stage once. */
-  private val sim14NprobeCurve: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
+  private val sim14NprobeCurve: Q = (s, dir) =>
+    nProbeRecallCurve(Tables.embeddings(s, dir), c =>
+      SimSearch.mdPull(c, "vec_id", "embedding", 8))
+
+  /** sim14/sim16's curve over the portable index whose centroids
+    * `centsOf` pulls once for all four depths. */
+  private def nProbeRecallCurve(emb: DataFrame,
+      centsOf: DataFrame => Seq[Seq[Double]]): DataFrame = {
     val q = emb.where(col("vec_id") < 10)
     val c = emb.where(col("vec_id") >= 10)
-    val exact = SimSearch.bruteForceTopK(q, c,
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
+    val cents = centsOf(c)
     val approx = Seq(1, 2, 4, 8).map { p =>
-      SimSearch.ivfTopKPortable(q, c, "vec_id", "embedding",
-          "vec_id", "embedding", k = 5, nCells = 8, nProbe = p)
+      SimSearch.ivfTopKWithCents(q, c, "vec_id", "embedding",
+          "vec_id", "embedding", k = 5, cents = cents, nProbe = p)
         .select(lit(p.toLong).as("n_probe"), col("query_id"),
           col("item_id"), lit(1).as("__hit"))
     }.reduce(_ unionAll _)
-    exact
+    annTruth(emb)
       .withColumn("n_probe",
         explode(array(lit(1L), lit(2L), lit(4L), lit(8L))))
       .join(approx, Seq("n_probe", "query_id", "item_id"), "left")
@@ -4494,29 +4453,10 @@ object SparkEntry {
     * before the index ships (at the gate fixture nc = 8 and the curve
     * coincides with sim14's; at 100× nc = 3,125 and the same query
     * reports the shrunken-fraction recall — see PLANS.md round 9). */
-  private val sim16AutoRecallCurve: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val q = emb.where(col("vec_id") < 10)
-    val c = emb.where(col("vec_id") >= 10)
-    val exact = SimSearch.bruteForceTopK(q, c,
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    val approx = Seq(1, 2, 4, 8).map { p =>
-      SimSearch.ivfTopKPortableAuto(q, c, "vec_id", "embedding",
-          "vec_id", "embedding", k = 5, targetCellSize = 64L, nProbe = p)
-        .select(lit(p.toLong).as("n_probe"), col("query_id"),
-          col("item_id"), lit(1).as("__hit"))
-    }.reduce(_ unionAll _)
-    exact
-      .withColumn("n_probe",
-        explode(array(lit(1L), lit(2L), lit(4L), lit(8L))))
-      .join(approx, Seq("n_probe", "query_id", "item_id"), "left")
-      .groupBy(col("n_probe"), col("query_id"))
-      .agg(count(lit(1)).as("__ne"), count(col("__hit")).as("__nh"))
-      .groupBy(col("n_probe"))
-      .agg(round(avg(col("__nh") * lit(1.0) / col("__ne")), 6)
-        .as("mean_recall"), count(lit(1)).as("n_queries"))
-  }
+  private val sim16AutoRecallCurve: Q = (s, dir) =>
+    nProbeRecallCurve(Tables.embeddings(s, dir), c =>
+      SimSearch.mdPull(c, "vec_id", "embedding",
+        SimSearch.autoCellsOf(c, 64L)))
 
   /** SIM17: recall-TARGETED auto-nProbe IVF top-k
     * ([[SimSearch.ivfTopKAutoProbePortable]]) — the round-9 verdict's
@@ -4638,9 +4578,9 @@ object SparkEntry {
   /** SIM23: the refit policy's NO-OP branch, cross-engine-verified —
     * sim22's twin at a conservative drift threshold (0.10 cosine vs
     * 0.02): on this corpus the audit's worst populated-cell drift is
-    * −0.0227, so sim22 refits (marginal drift fire — the RefitAudit
-    * calibration finding in the scaladoc) while this query correctly
-    * KEEPS the fit-time index (refit=0, fit-only centroid set). With
+    * −0.0227, so sim22 refits (marginal drift fire — the calibration
+    * finding in the scaladoc, PLANS.md "Round 11: the engine's own new
+    * surface closed") while this query correctly KEEPS the fit-time index (refit=0, fit-only centroid set). With
     * both registered, BOTH decision branches — and the fact that the
     * threshold alone flips them — are pinned by the DuckDB replay,
     * not just by specs. */
@@ -4785,6 +4725,25 @@ object SparkEntry {
   // still flips the row and fails the gate, but the oracle does not
   // independently re-derive the approximation.
 
+  /** The ANN registry's ground truth: the brute-force top-5 (query_id,
+    * item_id) of the queries vec_id < 10 over the other embeddings. */
+  private def annTruth(emb: DataFrame): DataFrame =
+    SimSearch.bruteForceTopK(
+        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
+        "vec_id", "embedding", "vec_id", "embedding", k = 5)
+      .select(col("query_id"), col("item_id"))
+
+  /** Per-query recall@5 of `approx` against [[annTruth]]; a query whose
+    * approximate list misses everything still reports recall 0. */
+  private def perQueryRecall(emb: DataFrame, approx: DataFrame): DataFrame =
+    annTruth(emb)
+      .join(approx.select(col("query_id"), col("item_id"), lit(1).as("__hit")),
+        Seq("query_id", "item_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"))
+      .withColumn("recall",
+        round(col("n_hit") * lit(1.0) / col("n_exact"), 6))
+
   /** One-row recall floor of an approximate result against an
     * oracle-replayable truth set — the ENFORCE stage of the index
     * lifecycle, now shared via [[graft.llmops.IndexMaintenance
@@ -4888,41 +4847,23 @@ object SparkEntry {
     * replayable). The 8-bit single-probe layout is candidate-starved
     * BY DESIGN (measured 12% — the trade sim4/sim6 document), so the
     * floor pins it above collapse (10%), not at ANN-grade recall. */
-  private val sim27LshRecallFloor: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val truth = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    recallFloor(sim2LshTopk(s, dir), truth,
+  private val sim27LshRecallFloor: Q = (s, dir) =>
+    recallFloor(sim2LshTopk(s, dir), annTruth(Tables.embeddings(s, dir)),
       Seq("query_id", "item_id"), 10)
-  }
 
   /** SIM28: IVF top-k recall floor (sim3's comparison, ONE-SIDED) —
     * measured 74% at (8 cells, 4 probes); floor 60. */
-  private val sim28IvfRecallFloor: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val truth = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    recallFloor(sim3IvfTopk(s, dir), truth,
+  private val sim28IvfRecallFloor: Q = (s, dir) =>
+    recallFloor(sim3IvfTopk(s, dir), annTruth(Tables.embeddings(s, dir)),
       Seq("query_id", "item_id"), 60)
-  }
 
   /** SIM29: k-means auto-probe recall floor (sim20's comparison,
     * ONE-SIDED) — the recall-targeted policy on the PRODUCTION index
     * against brute truth; measured 100% at the 80%-recall-target
     * depth; floor 80 (the policy's own declared target). */
-  private val sim29KmeansRecallFloor: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val truth = SimSearch.bruteForceTopK(
-        emb.where(col("vec_id") < 10), emb.where(col("vec_id") >= 10),
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
-    recallFloor(sim20KmeansAutoProbe(s, dir), truth,
+  private val sim29KmeansRecallFloor: Q = (s, dir) =>
+    recallFloor(sim20KmeansAutoProbe(s, dir), annTruth(Tables.embeddings(s, dir)),
       Seq("query_id", "item_id"), 80)
-  }
 
   /** SIM32: cosine range search ([[SimSearch.lshRangeSearchPortable]])
     * — the vector-DB query shape top-k cannot express: every corpus
@@ -5048,12 +4989,8 @@ object SparkEntry {
     * flag, since MLlib k-means is not oracle-replayable. */
   private val v9PqTrainedBound: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val full: Seq[Seq[Double]] = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    val cbU: Seq[Seq[Seq[Double]]] =
-      (0 until 4).map(sub => full.map(_.slice(sub * 16, sub * 16 + 16)))
+    val (_, cbU) = SimSearch.mdCodebooks(emb, "vec_id", "embedding",
+      dim = 64, m = 4, k = 4)
     val cbT = VectorOps.pqTrain(emb, "embedding", dim = 64, m = 4, k = 4)
     def micros(cb: Seq[Seq[Seq[Double]]]): DataFrame = emb
       .select(VectorOps.pqSqError(

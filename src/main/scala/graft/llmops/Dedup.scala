@@ -826,6 +826,21 @@ object Dedup {
         minJaccard = 0.0, maxBucket),
       Seq("doc_a", "doc_b"))
 
+  /** The remedy ladder behind [[bandReplanIfUndershot]], exposed as
+    * pure math (the [[bandPlan]] discipline — PropertiesSpec pins it
+    * over generated inputs, not just the registered points): the first
+    * `curNumHashes · 2^k` (k = 0..maxDoublings) whose [[bandPlan]]
+    * layout qualifies ANALYTICALLY at the operating point AND differs
+    * from the failing `(curNumHashes, curBands)` layout; ladder-max
+    * honest fallback `(nh_max, nh_max, 1)` when nothing qualifies.
+    * Returns (numHashes, bands, rowsPerBand). */
+  def bandReplanLadder(curNumHashes: Int, curBands: Int,
+      minJaccard: Double, targetDetectPct: Int,
+      maxDoublings: Int): (Int, Int, Int) =
+    IndexMaintenance.doublingLadder(curNumHashes, curBands,
+      bandPlan(_, minJaccard, targetDetectPct),
+      detectionProb(minJaccard, _, _), targetDetectPct, maxDoublings)
+
   /** The banding lifecycle's ACT stage — the [[bandPlanAudit]] twin of
     * [[SimSearch.refitIfDrifted]]: measure the CURRENT (numHashes,
     * bands) layout's detection per exact-Jaccard bucket at/above the
@@ -875,21 +890,6 @@ object Dedup {
     * 6-dp) — the decision ships with the layout it mandates; on KEEP
     * the new_* columns re-state the current layout and its analytic
     * detection at the operating point. */
-  /** The remedy ladder behind [[bandReplanIfUndershot]], exposed as
-    * pure math (the [[bandPlan]] discipline — PropertiesSpec pins it
-    * over generated inputs, not just the registered points): the first
-    * `curNumHashes · 2^k` (k = 0..maxDoublings) whose [[bandPlan]]
-    * layout qualifies ANALYTICALLY at the operating point AND differs
-    * from the failing `(curNumHashes, curBands)` layout; ladder-max
-    * honest fallback `(nh_max, nh_max, 1)` when nothing qualifies.
-    * Returns (numHashes, bands, rowsPerBand). */
-  def bandReplanLadder(curNumHashes: Int, curBands: Int,
-      minJaccard: Double, targetDetectPct: Int,
-      maxDoublings: Int): (Int, Int, Int) =
-    IndexMaintenance.doublingLadder(curNumHashes, curBands,
-      bandPlan(_, minJaccard, targetDetectPct),
-      detectionProb(minJaccard, _, _), targetDetectPct, maxDoublings)
-
   def bandReplanIfUndershot(docs: DataFrame, id: String, text: String,
       shingleN: Int, numHashes: Int, bands: Int, minJaccardPct: Int,
       targetDetectPct: Int, maxBucket: Int = 1000,
@@ -1282,6 +1282,20 @@ object Dedup {
     SimSearch.lshPairsAutoPlanned(embs, id, vec, dim, minCosinePct,
       targetBucketSize, targetDetectPct, maxBucket)
 
+  /** [[semDedup]] with the cell count auto-sized from the corpus count
+    * ([[SimSearch.autoCells]]): expected cell size stays ≈
+    * `targetCellSize` as the corpus grows, so the per-cell pair stage's
+    * quadratic stays bounded by the TARGET, not by n/nCells — with a
+    * fixed nCells, cells grow linearly with the corpus until they cross
+    * `maxCell` and their rows silently stop being deduped (the same
+    * wall shape as fixed-width LSH banding, in cap clothing). Pure
+    * integer sizing the DuckDB twin replays. */
+  def semDedupAuto(embs: DataFrame, id: String, vec: String,
+      targetCellSize: Long, minCosine: Double,
+      maxCell: Int = 100000): DataFrame =
+    semDedup(embs, id, vec, SimSearch.autoCellsOf(embs, targetCellSize),
+      minCosine, maxCell)
+
   /** SemDeDup (Abbas et al., arXiv:2303.09540): semantic dedup by
     * k-clustering the embedding space and dropping all but one member of
     * every near-duplicate pair WITHIN a cluster — the pruning recipe
@@ -1314,38 +1328,16 @@ object Dedup {
     * centroid-fit problem to solve upstream (more cells), not a
     * license for a quadratic task. Output: every input row as
     * (id, cell, keep). */
-  /** [[semDedup]] with the cell count auto-sized from the corpus count
-    * ([[SimSearch.autoCells]]): expected cell size stays ≈
-    * `targetCellSize` as the corpus grows, so the per-cell pair stage's
-    * quadratic stays bounded by the TARGET, not by n/nCells — with a
-    * fixed nCells, cells grow linearly with the corpus until they cross
-    * `maxCell` and their rows silently stop being deduped (the same
-    * wall shape as fixed-width LSH banding, in cap clothing). Pure
-    * integer sizing the DuckDB twin replays. */
-  def semDedupAuto(embs: DataFrame, id: String, vec: String,
-      targetCellSize: Long, minCosine: Double,
-      maxCell: Int = 100000): DataFrame = {
-    val n = math.max(1L, embs.count())
-    semDedup(embs, id, vec, SimSearch.autoCells(n, targetCellSize),
-      minCosine, maxCell)
-  }
-
   def semDedup(embs: DataFrame, id: String, vec: String,
       nCells: Int, minCosine: Double, maxCell: Int = 100000): DataFrame = {
     import graft.functions.GraftFunctions
     val v = graft.ops.Par.spread(embs.select(col(id), col(vec)))
       .select(col(id).as("__id"),
         col(vec).cast("array<double>").as("__v"))
-    val cents: Seq[Seq[Double]] = v
-      .orderBy(md5(col("__id").cast("string")), col("__id"))
-      .limit(nCells).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    // native RankCells argmax (cosine DESC, cell ASC — bit-pinned to
-    // the composed array_sort form): at auto-sized cell counts the
-    // composed form's per-centroid struct expressions blow the codegen
-    // method limit; cast back to long to keep the public `cell` type
+    val cents = SimSearch.mdPull(v, "__id", "__v", nCells)
+    // cast back to long to keep the public `cell` type
     val assigned = v.withColumn("__cell",
-      element_at(GraftFunctions.rankCells(col("__v"), cents, 1), 1)
-        .cast("long"))
+      SimSearch.assignCell(col("__v"), cents).cast("long"))
     val inPlay = assigned
       .withColumn("__cn",
         count(lit(1)).over(Window.partitionBy(col("__cell"))))

@@ -2,7 +2,7 @@ package graft.llmops
 
 import graft.functions.VectorOps
 import graft.ops.TopK
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (charter extension).
@@ -151,6 +151,28 @@ object SimSearch {
     * (16 bits, 4 bands) is sized for 10³–10⁵ rows; a 10⁹-row corpus
     * wants ~64 bits over 4 bands. ScaleSmoke measures this family at
     * 10× to catch capacity regressions. */
+  def lshPairs(embs: DataFrame, id: String, vec: String, dim: Int,
+      minCosine: Double, nBits: Int = 16, bands: Int = 4,
+      maxBucket: Int = 2000): DataFrame = {
+    val banded = bandedFrame(embs, id, vec, dim, nBits, bands)
+    // Pair generation is a bucket-keyed SELF-JOIN (the d13 semDedup
+    // shape), not collect_list + flatten: members here carry the full
+    // vector (~0.5 KB each), so the old one-row-per-bucket pair array
+    // allocated ~|bucket|² × 1 KB in a single non-spillable task
+    // row — ScaleSmoke measured an executor OOM at 10× sf0.1 (1250-
+    // member buckets → ~860 MB rows) long before the maxBucket cap
+    // (2000) bound anything. A sort-merge self-join on the band key
+    // spills, and the cap still bounds per-bucket candidate count.
+    val capped = graft.ops.PairGen.capped(banded, "bk", maxBucket)
+    capped.as("l").join(capped.as("r"),
+        col("l.bk") === col("r.bk") && col("l.__id") < col("r.__id"))
+      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),
+        graft.functions.GraftFunctions.cosine(col("l.__v"), col("r.__v"))
+          .as("cosine"))
+      .where(col("cosine") >= minCosine)
+      .distinct()
+  }
+
   /** One row per (vector, band): `__id`, `__v`, and `bk = struct(band,
     * key)` — the signature stage shared by [[lshPairs]] and
     * [[lshBucketHistogram]] (bit j of a band key is the sign of the
@@ -174,28 +196,6 @@ object SimSearch {
     }
     v.select(col("__id"), col("__v"),
       explode(array(bandKeys: _*)).as("bk"))
-  }
-
-  def lshPairs(embs: DataFrame, id: String, vec: String, dim: Int,
-      minCosine: Double, nBits: Int = 16, bands: Int = 4,
-      maxBucket: Int = 2000): DataFrame = {
-    val banded = bandedFrame(embs, id, vec, dim, nBits, bands)
-    // Pair generation is a bucket-keyed SELF-JOIN (the d13 semDedup
-    // shape), not collect_list + flatten: members here carry the full
-    // vector (~0.5 KB each), so the old one-row-per-bucket pair array
-    // allocated ~|bucket|² × 1 KB in a single non-spillable task
-    // row — ScaleSmoke measured an executor OOM at 10× sf0.1 (1250-
-    // member buckets → ~860 MB rows) long before the maxBucket cap
-    // (2000) bound anything. A sort-merge self-join on the band key
-    // spills, and the cap still bounds per-bucket candidate count.
-    val capped = graft.ops.PairGen.capped(banded, "bk", maxBucket)
-    capped.as("l").join(capped.as("r"),
-        col("l.bk") === col("r.bk") && col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),
-        graft.functions.GraftFunctions.cosine(col("l.__v"), col("r.__v"))
-          .as("cosine"))
-      .where(col("cosine") >= minCosine)
-      .distinct()
   }
 
   /** [[lshPairs]] with the signature width derived from the corpus
@@ -426,9 +426,8 @@ object SimSearch {
   def lshPairsAutoPlanned(embs: DataFrame, id: String, vec: String,
       dim: Int, minCosinePct: Int, targetBucketSize: Long,
       targetDetectPct: Int, maxBucket: Int = 2000): DataFrame = {
-    val n = math.max(1L, embs.count())
-    val width = autoWidth(n, targetBucketSize)
-    val bands = signBandsFor(width, minCosinePct, targetDetectPct)
+    val (bands, width) = plannedSignLayout(embs, minCosinePct,
+      targetBucketSize, targetDetectPct)
     lshPairs(embs, id, vec, dim, minCosinePct / 100.0,
       nBits = bands * width, bands = bands, maxBucket = maxBucket)
   }
@@ -439,11 +438,20 @@ object SimSearch {
   def lshBucketHistogramAutoPlanned(embs: DataFrame, id: String,
       vec: String, dim: Int, minCosinePct: Int, targetBucketSize: Long,
       targetDetectPct: Int): DataFrame = {
-    val n = math.max(1L, embs.count())
-    val width = autoWidth(n, targetBucketSize)
-    val bands = signBandsFor(width, minCosinePct, targetDetectPct)
+    val (bands, width) = plannedSignLayout(embs, minCosinePct,
+      targetBucketSize, targetDetectPct)
     lshBucketHistogram(embs, id, vec, dim, nBits = bands * width,
       bands = bands)
+  }
+
+  /** The planned forms' (bands, width); both percents are checked
+    * before the count job, so a bad input never scans the corpus. */
+  private def plannedSignLayout(embs: DataFrame, minCosinePct: Int,
+      targetBucketSize: Long, targetDetectPct: Int): (Int, Int) = {
+    IndexMaintenance.requirePercent("minCosinePct", minCosinePct, -100)
+    IndexMaintenance.requirePercent("targetDetectPct", targetDetectPct)
+    val width = autoWidth(math.max(1L, embs.count()), targetBucketSize)
+    (signBandsFor(width, minCosinePct, targetDetectPct), width)
   }
 
   /** Capacity audit for the banded-LSH signature: the bucket-size
@@ -494,16 +502,18 @@ object SimSearch {
     math.min(4096L, m).toInt
   }
 
+  /** [[autoCells]] over `df`'s row count — one count job. */
+  private[graft] def autoCellsOf(df: DataFrame, targetCellSize: Long): Int =
+    autoCells(math.max(1L, df.count()), targetCellSize)
+
   /** [[ivfIndex]] with the cell count auto-sized from the corpus count
     * ([[autoCells]]) — the production k-means path's growing-corpus
     * form; costs one count job (a metadata read on parquet at scale). */
   def ivfIndexAuto(corpus: DataFrame, cId: String, cVec: String,
       targetCellSize: Long, seed: Long = 42L,
-      kmeansIter: Int = 3): (DataFrame, DataFrame) = {
-    val n = math.max(1L, corpus.count())
-    ivfIndex(corpus, cId, cVec, autoCells(n, targetCellSize), seed,
+      kmeansIter: Int = 3): (DataFrame, DataFrame) =
+    ivfIndex(corpus, cId, cVec, autoCellsOf(corpus, targetCellSize), seed,
       kmeansIter)
-  }
 
   /** One-shot auto-sized IVF ANN ([[ivfIndexAuto]] + [[ivfProbe]]). */
   def ivfTopKAuto(queries: DataFrame, corpus: DataFrame,
@@ -515,15 +525,6 @@ object SimSearch {
     ivfProbe(queries, assigned, centDf, qId, qVec, k, nProbe)
   }
 
-  /** IVF (inverted-file) ANN top-k: the corpus is clustered once with
-    * k-means; each corpus row is assigned to its nearest centroid cell and
-    * a query scores only the rows in its `nProbe` nearest cells — the scan
-    * becomes a partition-pruned fraction (~nProbe/nCells) of the corpus.
-    * Returns (model-assigned) exact cosine over the probed subset.
-    *
-    * At 100 TB the cell id is the physical partition key (write the
-    * corpus bucketed by cell); probing is then partition pruning, not a
-    * filter. */
   /** IVF index build, split from the probe so one index serves many query
     * batches (the real ANN lifecycle: fit once per corpus snapshot,
     * persist/write `assigned`, probe per request batch). Returns
@@ -558,12 +559,8 @@ object SimSearch {
     * cosine, search the nProbe nearest cells only. */
   def ivfProbe(queries: DataFrame, assigned: DataFrame, centDf: DataFrame,
       qId: String, qVec: String, k: Int, nProbe: Int): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"))
-      .crossJoin(broadcast(centDf))
-      .withColumn("__dist", -graft.functions.GraftFunctions.cosine(
-        col("__qv").cast("array<double>"), col("__centroid")))
-    val probed = TopK.perGroup(q, Seq(col("query_id")),
-        Seq(col("__dist"), col("__cell")), nProbe, "__cellrank")
+    val probed = rankedCells(queries, centDf, qId, qVec, nProbe,
+        "__cellrank")
       .select(col("query_id"), col("__qv"), col("__cell"))
     val scored = assigned.join(broadcast(probed), Seq("__cell"))
       .withColumn("cosine", graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")))
@@ -572,7 +569,29 @@ object SimSearch {
       Seq(col("cosine").desc, col("item_id")), k)
   }
 
-  /** One-shot IVF ANN: [[ivfIndex]] + [[ivfProbe]] composed (the
+  /** Each query's `depth` nearest cells of a centroid frame by
+    * (−cosine, cell), ranked in `rankCol`. */
+  private def rankedCells(queries: DataFrame, centDf: DataFrame,
+      qId: String, qVec: String, depth: Int, rankCol: String): DataFrame =
+    TopK.perGroup(
+      queries.select(col(qId).as("query_id"), col(qVec).as("__qv"))
+        .crossJoin(broadcast(centDf))
+        .withColumn("__dist", -graft.functions.GraftFunctions.cosine(
+          col("__qv").cast("array<double>"), col("__centroid"))),
+      Seq(col("query_id")), Seq(col("__dist"), col("__cell")), depth,
+      rankCol)
+
+  /** IVF (inverted-file) ANN top-k: the corpus is clustered once with
+    * k-means; each corpus row is assigned to its nearest centroid cell and
+    * a query scores only the rows in its `nProbe` nearest cells — the scan
+    * becomes a partition-pruned fraction (~nProbe/nCells) of the corpus.
+    * Returns (model-assigned) exact cosine over the probed subset.
+    *
+    * At 100 TB the cell id is the physical partition key (write the
+    * corpus bucketed by cell); probing is then partition pruning, not a
+    * filter.
+    *
+    * One-shot IVF ANN: [[ivfIndex]] + [[ivfProbe]] composed (the
     * registered-query form; production callers split the two and persist
     * the index across query batches). */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
@@ -606,19 +625,27 @@ object SimSearch {
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, nBits: Int,
       bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+    val scored = hammingOneCandidates(queries, corpus, qId, qVec, cId,
+        cVec, nBits, bucketOf)
+      .withColumn("cosine", graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")))
+      .select(col("query_id"), col("item_id"), col("cosine"))
+    TopK.perGroup(scored, Seq(col("query_id")),
+      Seq(col("cosine").desc, col("item_id")), k)
+  }
+
+  /** Each query probes its bucket plus all Hamming-1 neighbours; the
+    * query batch is the broadcast build side. */
+  private def hammingOneCandidates(queries: DataFrame, corpus: DataFrame,
+      qId: String, qVec: String, cId: String, cVec: String, nBits: Int,
+      bucketOf: Column => Column): DataFrame = {
     val c = corpus.select(col(cId).as("item_id"), col(cVec).as("__cv"),
       bucketOf(col(cVec)).as("__bucket"))
-    // query probes its bucket + all Hamming-1 buckets
     val q = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"),
         bucketOf(col(qVec)).as("__b0"))
       .withColumn("__bucket", explode(array(
         col("__b0") +: (0 until nBits).map(b =>
           col("__b0").bitwiseXOR(shiftleft(lit(1L), b))): _*)))
-    val scored = c.join(broadcast(q), Seq("__bucket"))
-      .withColumn("cosine", graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")))
-      .select(col("query_id"), col("item_id"), col("cosine"))
-    TopK.perGroup(scored, Seq(col("query_id")),
-      Seq(col("cosine").desc, col("item_id")), k)
+    c.join(broadcast(q), Seq("__bucket"))
   }
 
   /** LSH-bucketed cosine RANGE search — the vector-DB query shape
@@ -651,18 +678,97 @@ object SimSearch {
       qId: String, qVec: String, cId: String, cVec: String,
       minCosine: Double, nBits: Int,
       bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    val c = corpus.select(col(cId).as("item_id"), col(cVec).as("__cv"),
-      bucketOf(col(cVec)).as("__bucket"))
-    val q = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"),
-        bucketOf(col(qVec)).as("__b0"))
-      .withColumn("__bucket", explode(array(
-        col("__b0") +: (0 until nBits).map(b =>
-          col("__b0").bitwiseXOR(shiftleft(lit(1L), b))): _*)))
-    c.join(broadcast(q), Seq("__bucket"))
+    hammingOneCandidates(queries, corpus, qId, qVec, cId, cVec, nBits,
+        bucketOf)
       .withColumn("cosine", round(
         graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")), 6))
       .where(col("cosine") >= minCosine)
       .select(col("query_id"), col("item_id"), col("cosine"))
+  }
+
+  /** The portable fit's order: every portable index (IVF centroids, PQ
+    * codebooks, SemDeDup cells) is fitted from the first rows in it, a
+    * deterministic sample the DuckDB oracles replay with their md5. */
+  private[graft] def mdOrder(id: Column): Seq[Column] =
+    Seq(md5(id.cast("string")), id)
+
+  /** The portable fit: the first `n` [[mdOrder]] rows of `df` as (id,
+    * vec as array<double>) — a distributed top-n, ≤ 4096 driver rows
+    * under the [[autoCells]] clamp. */
+  private[graft] def mdRows(df: DataFrame, id: String, vec: String,
+      n: Int): Array[Row] =
+    df.select(col(id), col(vec).cast("array<double>"))
+      .orderBy(mdOrder(col(id)): _*).limit(n).collect()
+
+  /** [[mdRows]]' vectors: portable centroids. */
+  private[graft] def mdPull(df: DataFrame, id: String, vec: String,
+      n: Int): Seq[Seq[Double]] =
+    mdRows(df, id, vec, n).map(_.getSeq[Double](1).toSeq).toSeq
+
+  /** Portable PQ codebooks: the `k` [[mdRows]] of `df` split m ways,
+    * with the source rows (the ACT stage emits their ids). */
+  private[graft] def mdCodebooks(df: DataFrame, id: String, vec: String,
+      dim: Int, m: Int, k: Int): (Array[Row], Seq[Seq[Seq[Double]]]) = {
+    require(m >= 1 && dim % m == 0, s"m must divide dim, got ($dim, $m)")
+    require(k >= 1, s"k must be >= 1, got $k")
+    val rows = mdRows(df, id, vec, k)
+    require(rows.length == k,
+      s"fit must hold >= k=$k rows to derive codebooks, got ${rows.length}")
+    (rows, pqSplit(rows.map(_.getSeq[Double](1).toSeq).toSeq, dim, m))
+  }
+
+  /** Codebook `sub` of m holds every vector's `sub`-th dim/m slice. */
+  private[graft] def pqSplit(vecs: Seq[Seq[Double]], dim: Int,
+      m: Int): Seq[Seq[Seq[Double]]] = {
+    val subDim = dim / m
+    (0 until m).map(sub =>
+      vecs.map(_.slice(sub * subDim, sub * subDim + subDim)))
+  }
+
+  /** The 0-based nearest literal centroid (cosine, ties to the lower
+    * cell): the native RankCells kernel — the composed form blows the
+    * codegen method limit at auto-sized cell counts. Never shuffles. */
+  private[graft] def assignCell(v: Column, cents: Seq[Seq[Double]]): Column =
+    element_at(graft.functions.GraftFunctions.rankCells(v, cents, 1), 1)
+
+  /** The IVFADC residual `v − cents(cell)` (cells are 0-based,
+    * element_at is 1-based). */
+  private[graft] def residual(v: Column, cell: Column,
+      cents: Seq[Seq[Double]]): Column =
+    zip_with(v, element_at(array(cents.map(cv => array(cv.map(lit): _*)): _*),
+      cell + 1), (a, b) => a - b)
+
+  /** `df` as (idAs, vecAs as array<double>). */
+  private def vectors(df: DataFrame, id: String, vec: String, idAs: String,
+      vecAs: String): DataFrame =
+    df.select(col(id).as(idAs), col(vec).cast("array<double>").as(vecAs))
+
+  /** The corpus as (item_id, __cv, __cell) against literal centroids. */
+  private def assignedCorpus(corpus: DataFrame, cId: String, cVec: String,
+      cents: Seq[Seq[Double]]): DataFrame =
+    vectors(corpus, cId, cVec, "item_id", "__cv")
+      .withColumn("__cell", assignCell(col("__cv"), cents))
+
+  /** Each query as (query_id, __qv), exploded over its `nProbe` nearest
+    * literal cells as __cell. */
+  private def probeCells(queries: DataFrame, qId: String, qVec: String,
+      cents: Seq[Seq[Double]], nProbe: Int): DataFrame =
+    vectors(queries, qId, qVec, "query_id", "__qv").withColumn("__cell",
+      explode(graft.functions.GraftFunctions.rankCells(col("__qv"), cents,
+        nProbe)))
+
+  /** `df` as (keep…, __cell, __cos): assignment, broadcast centroid join
+    * and 6-dp cosine, shared by the batch and streaming drift monitors. */
+  private[graft] def cellCosine(df: DataFrame, v: Column,
+      cents: Seq[Seq[Double]], keep: Column*): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val centDf = cents.zipWithIndex
+      .map { case (c, i) => (i, c) }.toDF("__cell", "__centroid")
+    df.withColumn("__cell", assignCell(v, cents))
+      .join(broadcast(centDf), Seq("__cell"))
+      .select(keep :+ col("__cell") :+ round(graft.functions.GraftFunctions
+        .cosine(v, col("__centroid")), 6).as("__cos"): _*)
   }
 
   /** Portable IVF top-k: centroids are the `nCells` corpus rows with the
@@ -678,6 +784,12 @@ object SimSearch {
     * assigned cell and probing becomes partition pruning (same note as
     * [[ivfTopK]]).
     */
+  def ivfTopKPortable(queries: DataFrame, corpus: DataFrame,
+      qId: String, qVec: String, cId: String, cVec: String,
+      k: Int, nCells: Int, nProbe: Int): DataFrame =
+    ivfTopKWithCents(queries, corpus, qId, qVec, cId, cVec, k,
+      mdPull(corpus, cId, cVec, nCells), nProbe)
+
   /** IVF-PQ ANN top-k — the composed billion-scale layout (Jégou et al.
     * TPAMI 2011; every production vector store's disk format): IVF cell
     * pruning bounds WHICH items are scored (~nProbe/nCells of the
@@ -700,21 +812,12 @@ object SimSearch {
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, nCells: Int, nProbe: Int,
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    val cents: Seq[Seq[Double]] = c
-      .orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(nCells).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    // native RankCells kernel — see ivfTopKPortable for the rationale
-    import graft.functions.GraftFunctions.rankCells
-    val assigned = c.select(col("item_id"),
-      element_at(rankCells(col("__cv"), cents, 1), 1).as("__cell"),
-      VectorOps.pqCodes(VectorOps.pqAssign(col("__cv"), codebooks))
-        .as("__codes"))
-    val probed = queries.select(col(qId).as("query_id"),
-        col(qVec).cast("array<double>").as("__qv"))
-      .withColumn("__cell",
-        explode(rankCells(col("__qv"), cents, nProbe)))
+    val cents = mdPull(corpus, cId, cVec, nCells)
+    val assigned = assignedCorpus(corpus, cId, cVec, cents)
+      .select(col("item_id"), col("__cell"),
+        VectorOps.pqCodes(VectorOps.pqAssign(col("__cv"), codebooks))
+          .as("__codes"))
+    val probed = probeCells(queries, qId, qVec, cents, nProbe)
       .select(col("query_id"), col("__cell"),
         VectorOps.pqAdcLut(col("__qv"), codebooks).as("__lut"))
     val scored = assigned.join(broadcast(probed), Seq("__cell"))
@@ -747,15 +850,9 @@ object SimSearch {
   def ivfPqResidualTopK(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, nCells: Int, nProbe: Int,
-      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    val cents: Seq[Seq[Double]] = c
-      .orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(nCells).collect().map(_.getSeq[Double](1).toSeq).toSeq
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
     ivfPqResidualTopKWithCents(queries, corpus, qId, qVec, cId, cVec,
-      k, nProbe, cents, codebooks)
-  }
+      k, nProbe, mdPull(corpus, cId, cVec, nCells), codebooks)
 
   /** Serving face of the residual layout against an EXPLICIT centroid
     * set — the consumer of a [[refitIfDrifted]]
@@ -769,24 +866,13 @@ object SimSearch {
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, nProbe: Int, cents: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    import graft.functions.GraftFunctions.rankCells
-    // literal centroid table: cells are 0-based, element_at is 1-based
-    val centArr = array(cents.map(cv => array(cv.map(lit): _*)): _*)
-    val assigned = c
-      .withColumn("__cell", element_at(rankCells(col("__cv"), cents, 1), 1))
-      .withColumn("__res", zip_with(col("__cv"),
-        element_at(centArr, col("__cell") + 1), (a, b) => a - b))
+    val assigned = assignedCorpus(corpus, cId, cVec, cents)
+      .withColumn("__res", residual(col("__cv"), col("__cell"), cents))
       .select(col("item_id"), col("__cell"),
         VectorOps.pqCodes(VectorOps.pqAssign(col("__res"), codebooks))
           .as("__codes"))
-    val probed = queries.select(col(qId).as("query_id"),
-        col(qVec).cast("array<double>").as("__qv"))
-      .withColumn("__cell",
-        explode(rankCells(col("__qv"), cents, nProbe)))
-      .withColumn("__qres", zip_with(col("__qv"),
-        element_at(centArr, col("__cell") + 1), (a, b) => a - b))
+    val probed = probeCells(queries, qId, qVec, cents, nProbe)
+      .withColumn("__qres", residual(col("__qv"), col("__cell"), cents))
       .select(col("query_id"), col("__cell"),
         VectorOps.pqAdcLut(col("__qres"), codebooks).as("__lut"))
     val scored = assigned.join(broadcast(probed), Seq("__cell"))
@@ -818,33 +904,52 @@ object SimSearch {
     * brute-force pass |calib|·|corpus| (size the sample — at 100 TB
     * calibrate ~1k queries against the assigned index once per corpus
     * snapshot, then serve every query batch at the chosen depth).
-    * Ladder must be ascending. Returns the chosen nProbe. */
+    * Input contract: [[calibratedDepth]]'s. Returns the chosen nProbe. */
   def autoNProbePortable(calib: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, targetCellSize: Long, recallPctTarget: Int,
-      ladder: Seq[Int] = Seq(1, 2, 4, 8)): Int = {
-    require(ladder.nonEmpty && ladder == ladder.sorted,
-      s"ladder must be ascending, got $ladder")
-    IndexMaintenance.requirePercent("recallPctTarget", recallPctTarget)
-    val pmax = ladder.max
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    val nCells = autoCells(math.max(1L, c.count()), targetCellSize)
-    val cents: Seq[Seq[Double]] = c
-      .orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(nCells).collect().map(_.getSeq[Double](1).toSeq).toSeq
+      ladder: Seq[Int] = Seq(1, 2, 4, 8)): Int =
+    portableCalibration(calib, corpus, qId, qVec, cId, cVec, k,
+      targetCellSize, recallPctTarget, ladder)._1
+
+  /** [[autoNProbePortable]]'s depth and the centroids it pulled, which
+    * the serving forms reuse instead of pulling again. */
+  private def portableCalibration(calib: DataFrame, corpus: DataFrame,
+      qId: String, qVec: String, cId: String, cVec: String,
+      k: Int, targetCellSize: Long, recallPctTarget: Int,
+      ladder: Seq[Int]): (Int, Seq[Seq[Double]]) = {
+    lazy val cents = mdPull(corpus, cId, cVec,
+      autoCellsOf(corpus, targetCellSize))
     import graft.functions.GraftFunctions.rankCells
-    val assigned = c.withColumn("__cell",
-      element_at(rankCells(col("__cv"), cents, 1), 1))
     // one probe pass at the ladder MAX; depth-p hits are the subset
     // with probe rank ≤ p (posexplode gives the rank for free — the
     // same reuse the sim16 oracle's `pr <= n_probe` filter does)
-    val probed = calib.select(col(qId).as("query_id"),
-        col(qVec).cast("array<double>").as("__qv"))
-      .select(col("query_id"), col("__qv"),
-        posexplode(rankCells(col("__qv"), cents, pmax)))
-      .select(col("query_id"), col("__qv"),
-        (col("pos") + 1).as("__pr"), col("col").as("__cell"))
+    val p = calibratedDepth(
+      assignedCorpus(corpus, cId, cVec, cents),
+      vectors(calib, qId, qVec, "query_id", "__qv")
+        .select(col("query_id"), col("__qv"),
+          posexplode(rankCells(col("__qv"), cents, ladder.max)))
+        .select(col("query_id"), col("__qv"),
+          (col("pos") + 1).as("__pr"), col("col").as("__cell")),
+      bruteForceTopK(calib, corpus, qId, qVec, cId, cVec, k),
+      k, recallPctTarget, ladder)
+    (p, cents)
+  }
+
+  /** Both probe policies' calibration: per ladder depth p, the top-k of
+    * the `probed` (query_id, __qv, __cell, __pr) cells' `assigned`
+    * (item_id, __cv, __cell) rows with __pr ≤ p, scored against `exact`;
+    * the smallest p with `100·hits ≥ pct·truth`, else the ladder max.
+    * The frames are by-name, so the contract (ascending non-empty
+    * ladder, depths ≥ 1, a percent target) fails before any job. An
+    * empty sample would meet any target vacuously (100·0 ≥ pct·0). */
+  private[graft] def calibratedDepth(assigned: => DataFrame,
+      probed: => DataFrame, exact: => DataFrame, k: Int, pct: Int,
+      ladder: Seq[Int]): Int = {
+    require(ladder.nonEmpty && ladder == ladder.sorted,
+      s"ladder must be ascending, got $ladder")
+    require(ladder.head >= 1, s"ladder depths must be >= 1, got $ladder")
+    IndexMaintenance.requirePercent("recallPctTarget", pct)
     val scored = assigned.join(broadcast(probed), Seq("__cell"))
       .withColumn("cosine",
         graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")))
@@ -856,20 +961,16 @@ object SimSearch {
         Seq(col("n_probe"), col("query_id")),
         Seq(col("cosine").desc, col("item_id")), k)
       .select(col("n_probe"), col("query_id"), col("item_id"))
-    val exact = bruteForceTopK(calib, corpus, qId, qVec, cId, cVec, k)
-      .select(col("query_id"), col("item_id"))
+    val truthPairs = exact.select(col("query_id"), col("item_id"))
     val hits: Map[Int, Long] = approx
-      .join(exact, Seq("query_id", "item_id"))
+      .join(truthPairs, Seq("query_id", "item_id"))
       .groupBy(col("n_probe")).agg(count(lit(1)).as("h"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val truth = exact.count()
-    // an empty calibration would satisfy ANY target vacuously
-    // (100·0 ≥ pct·0) and silently ship the cheapest depth — refuse
+    val truth = truthPairs.count()
     require(truth > 0,
       "empty calibration sample: no ground-truth rows to target")
-    ladder.find(p =>
-        100L * hits.getOrElse(p, 0L) >= recallPctTarget.toLong * truth)
-      .getOrElse(pmax)
+    ladder.find(p => 100L * hits.getOrElse(p, 0L) >= pct.toLong * truth)
+      .getOrElse(ladder.max)
   }
 
   /** [[ivfTopKPortableAuto]] driven by the [[autoNProbePortable]]
@@ -881,10 +982,9 @@ object SimSearch {
       corpus: DataFrame, qId: String, qVec: String, cId: String,
       cVec: String, k: Int, targetCellSize: Long, recallPctTarget: Int,
       ladder: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val p = autoNProbePortable(calib, corpus, qId, qVec, cId, cVec, k,
-      targetCellSize, recallPctTarget, ladder)
-    ivfTopKPortableAuto(queries, corpus, qId, qVec, cId, cVec, k,
-        targetCellSize, nProbe = p)
+    val (p, cents) = portableCalibration(calib, corpus, qId, qVec, cId,
+      cVec, k, targetCellSize, recallPctTarget, ladder)
+    ivfTopKWithCents(queries, corpus, qId, qVec, cId, cVec, k, cents, p)
       .withColumn("n_probe", lit(p.toLong))
   }
 
@@ -900,10 +1000,10 @@ object SimSearch {
       corpus: DataFrame, qId: String, qVec: String, cId: String,
       cVec: String, k: Int, targetCellSize: Long, recallPctTarget: Int,
       ladder: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val p = autoNProbePortable(calib, corpus, qId, qVec, cId, cVec, k,
-      targetCellSize, recallPctTarget, ladder)
-    val approx = ivfTopKPortableAuto(holdout, corpus, qId, qVec, cId,
-        cVec, k, targetCellSize, nProbe = p)
+    val (p, cents) = portableCalibration(calib, corpus, qId, qVec, cId,
+      cVec, k, targetCellSize, recallPctTarget, ladder)
+    val approx = ivfTopKWithCents(holdout, corpus, qId, qVec, cId, cVec,
+        k, cents, p)
       .select(col("query_id"), col("item_id"))
     val exact = bruteForceTopK(holdout, corpus, qId, qVec, cId, cVec, k)
       .select(col("query_id"), col("item_id"))
@@ -930,45 +1030,13 @@ object SimSearch {
     * the same twin discipline as sim2→sim4. */
   def autoNProbeIndexed(calib: DataFrame, assigned: DataFrame,
       centDf: DataFrame, qId: String, qVec: String, k: Int,
-      recallPctTarget: Int, ladder: Seq[Int] = Seq(1, 2, 4, 8)): Int = {
-    require(ladder.nonEmpty && ladder == ladder.sorted,
-      s"ladder must be ascending, got $ladder")
-    val pmax = ladder.max
-    val q = calib.select(col(qId).as("query_id"), col(qVec).as("__qv"))
-    // same (−cosine, cell) ranking as ivfProbe, kept to the ladder max
-    // with the probe rank retained — depth-p candidates are pr ≤ p
-    val rankedCells = q.crossJoin(broadcast(centDf))
-      .withColumn("__dist", -graft.functions.GraftFunctions.cosine(
-        col("__qv").cast("array<double>"), col("__centroid")))
-    val probed = TopK.perGroup(rankedCells, Seq(col("query_id")),
-        Seq(col("__dist"), col("__cell")), pmax, "__pr")
-      .select(col("query_id"), col("__qv"), col("__cell"), col("__pr"))
-    val scored = assigned.join(broadcast(probed), Seq("__cell"))
-      .withColumn("cosine", graft.functions.GraftFunctions.cosine(
-        col("__qv"), col("__cv")))
-      .select(col("query_id"), col("item_id"), col("cosine"), col("__pr"))
-    val perDepth = ladder.map(p =>
-        scored.where(col("__pr") <= p)
-          .withColumn("n_probe", lit(p))).reduce(_ unionAll _)
-    val approx = TopK.perGroup(perDepth,
-        Seq(col("n_probe"), col("query_id")),
-        Seq(col("cosine").desc, col("item_id")), k)
-      .select(col("n_probe"), col("query_id"), col("item_id"))
-    val exact = bruteForceTopK(calib, assigned, qId, qVec,
-        "item_id", "__cv", k)
-      .select(col("query_id"), col("item_id"))
-    val hits: Map[Int, Long] = approx
-      .join(exact, Seq("query_id", "item_id"))
-      .groupBy(col("n_probe")).agg(count(lit(1)).as("h"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val truth = exact.count()
-    // same vacuous-satisfaction guard as autoNProbePortable
-    require(truth > 0,
-      "empty calibration sample: no ground-truth rows to target")
-    ladder.find(p =>
-        100L * hits.getOrElse(p, 0L) >= recallPctTarget.toLong * truth)
-      .getOrElse(pmax)
-  }
+      recallPctTarget: Int, ladder: Seq[Int] = Seq(1, 2, 4, 8)): Int =
+    calibratedDepth(assigned,
+      // ivfProbe's ranking, kept to the ladder max with the probe rank
+      rankedCells(calib, centDf, qId, qVec, ladder.max, "__pr")
+        .select(col("query_id"), col("__qv"), col("__cell"), col("__pr")),
+      bruteForceTopK(calib, assigned, qId, qVec, "item_id", "__cv", k),
+      k, recallPctTarget, ladder)
 
   /** One-shot production composition: [[ivfIndexAuto]] (real k-means,
     * auto-sized cells) + [[autoNProbeIndexed]] calibration +
@@ -1011,11 +1079,10 @@ object SimSearch {
     * (n counts 0). */
   def ivfDriftAudit(fit: DataFrame, incoming: DataFrame,
       id: String, vec: String, targetCellSize: Long): DataFrame = {
-    val f = fit.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val inc = incoming.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    ivfDriftAuditWith(f, inc, mdCentroids(f, targetCellSize))
+    val f = vectors(fit, id, vec, "item_id", "__v")
+    val inc = vectors(incoming, id, vec, "item_id", "__v")
+    ivfDriftAuditWith(f, inc,
+      mdPull(f, "item_id", "__v", autoCellsOf(f, targetCellSize)))
   }
 
   /** [[ivfDriftAudit]] body against PRECOMPUTED centroids — the overload
@@ -1034,44 +1101,15 @@ object SimSearch {
         round(col("mean_cos_new") - col("mean_cos_fit"), 6)
           .as("cos_drift"))
 
-  /** The portable index's centroid pull, shared by the drift/refit
-    * family: the [[autoCells]]-many corpus rows with the smallest
-    * `md5(id)` over `f` (columns `item_id`, `__v`), in md5 order — the
-    * deterministic pseudo-random "fit" every portable IVF variant and
-    * its DuckDB replay agree on. ≤ 4096 driver rows by the autoCells
-    * clamp (k-means's own centroids-fit-on-the-driver assumption). */
-  private def mdCentroids(f: DataFrame,
-      targetCellSize: Long): Seq[Seq[Double]] =
-    mdCentroidRows(f, autoCells(math.max(1L, f.count()), targetCellSize))
-      .map(_.getSeq[Double](1).toSeq).toSeq
-
-  /** The pull itself at a KNOWN cell count — full (item_id, __v) rows in
-    * md5 order, so callers that already counted the fit side ([[
-    * refitIfDrifted]]) reuse one collect for both the centroid vectors
-    * and the serving (cell, centroid_id) emission. */
-  private def mdCentroidRows(f: DataFrame, nCells: Int)
-      : Array[org.apache.spark.sql.Row] =
-    f.orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(nCells).collect()
-
   /** Per-cell population + mean assignment cosine of `df` (columns
     * `item_id`, `__v`) against literal `cents` — [[ivfDriftAudit]]'s
     * one-sided stats, reused by the windowed and refit forms. Zero
     * shuffle before the ≤-nCells-group aggregate. */
   private def cellAssignStats(df: DataFrame, cents: Seq[Seq[Double]],
-      nCol: String, mCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import graft.functions.GraftFunctions.rankCells
-    val centDf = cents.zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("__cell", "__centroid")
-    df.withColumn("__cell", element_at(rankCells(col("__v"), cents, 1), 1))
-      .join(broadcast(centDf), Seq("__cell"))
-      .select(col("__cell"), round(graft.functions.GraftFunctions
-        .cosine(col("__v"), col("__centroid")), 6).as("__cos"))
+      nCol: String, mCol: String): DataFrame =
+    cellCosine(df, col("__v"), cents)
       .groupBy(col("__cell"))
       .agg(count(lit(1)).as(nCol), round(avg(col("__cos")), 6).as(mCol))
-  }
 
   /** Event-time-windowed drift monitor — [[ivfDriftAudit]]'s per-window
     * form and the BATCH registry face of
@@ -1091,9 +1129,8 @@ object SimSearch {
       id: String, vec: String, ts: String, targetCellSize: Long,
       windowDur: String = "1 minute",
       watermarkDelay: String = "2 minutes"): DataFrame = {
-    val f = fit.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val cents = mdCentroids(f, targetCellSize)
+    val f = vectors(fit, id, vec, "item_id", "__v")
+    val cents = mdPull(f, "item_id", "__v", autoCellsOf(f, targetCellSize))
     val fitStats = cellAssignStats(f, cents, "n_fit", "mean_cos_fit")
       .select(col("__cell").cast("long").as("cell"),
         col("n_fit"), col("mean_cos_fit"))
@@ -1136,9 +1173,10 @@ object SimSearch {
     * (refit, skew_trigger, drift_trigger 0/1 longs, n_cells, cell,
     * centroid_id) — the decision ships with the re-emitted index.
     *
-    * Threshold calibration, measured at a 100× corpus (RefitAudit,
-    * round 11): the drift trigger is an ANY-CELL test, so at fine cell
-    * granularity (few incoming rows per cell) a tight `driftMilli` is
+    * Threshold calibration, measured at a 100× corpus (PLANS.md, "Round
+    * 11: the engine's own new surface closed"): the drift trigger is an
+    * ANY-CELL test, so at fine cell granularity (few incoming rows per
+    * cell) a tight `driftMilli` is
     * noise-sensitive — on a distributionally-IDENTICAL iid incoming
     * slice, driftMilli=20 fired off per-cell sampling noise while
     * driftMilli=100 was correctly quiet (refit=0, the no-op a stable
@@ -1153,17 +1191,15 @@ object SimSearch {
       minCellN: Long = 5L): DataFrame = {
     require(skewFactor >= 1, s"skewFactor must be >= 1, got $skewFactor")
     require(driftMilli >= 0, s"driftMilli must be >= 0, got $driftMilli")
-    val f = fit.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val inc = incoming.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
+    val f = vectors(fit, id, vec, "item_id", "__v")
+    val inc = vectors(incoming, id, vec, "item_id", "__v")
     // fit side is counted ONCE and its centroid rows pulled ONCE; the
     // collected rows serve both the audit's literal centroids and (on
     // the keep branch) the serving emission itself — a periodic
     // maintenance caller pays one fit count + one ≤-4096-row pull +
     // the two assignment passes, nothing scanned twice
-    val nCells = autoCells(math.max(1L, f.count()), targetCellSize)
-    val centRows = mdCentroidRows(f, nCells)
+    val nCells = autoCellsOf(f, targetCellSize)
+    val centRows = mdRows(f, "item_id", "__v", nCells)
     val audit = ivfDriftAuditWith(f, inc,
       centRows.map(_.getSeq[Double](1).toSeq).toSeq)
     // 1-row decision aggregate (bounded collect — the audit is ≤ nCells
@@ -1184,32 +1220,19 @@ object SimSearch {
     if (!refit) {
       // KEEP: the serving set IS the fit-time pull already on the
       // driver — emit it directly, no second scan of the fit side
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val spark = fit.sparkSession
-      val schema = StructType(Seq(
-        StructField("refit", LongType, nullable = false),
-        StructField("skew_trigger", LongType, nullable = false),
-        StructField("drift_trigger", LongType, nullable = false),
-        StructField("n_cells", LongType, nullable = false),
-        StructField("cell", LongType, nullable = false),
-        f.schema("item_id").copy(name = "centroid_id")))
-      val rows = centRows.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row(0L, 0L, 0L, nCells.toLong, i.toLong,
-          r.get(0))
-      }
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
+      pulledFrame(f, centRows, Seq("refit" -> 0L, "skew_trigger" -> 0L,
+        "drift_trigger" -> 0L, "n_cells" -> nCells.toLong), "cell",
+        "centroid_id")
     } else {
       val src = f.unionAll(inc)
-      val servingCells = autoCells(math.max(1L, src.count()), targetCellSize)
+      val servingCells = autoCellsOf(src, targetCellSize)
       // orderBy+limit lowers to TakeOrderedAndProject (distributed top-N,
       // never a global sort); the rank window then runs over the ≤ 4096
       // surviving rows only
-      val pulled = src
-        .orderBy(md5(col("item_id").cast("string")), col("item_id"))
+      val pulled = src.orderBy(mdOrder(col("item_id")): _*)
         .limit(servingCells)
       val w = org.apache.spark.sql.expressions.Window
-        .orderBy(md5(col("item_id").cast("string")), col("item_id"))
+        .orderBy(mdOrder(col("item_id")): _*)
       pulled
         .select(lit(1L).as("refit"),
           lit(if (skew) 1L else 0L).as("skew_trigger"),
@@ -1239,18 +1262,8 @@ object SimSearch {
       id: String, vec: String, ts: String, dim: Int, m: Int, k: Int,
       windowDur: String = "1 minute",
       watermarkDelay: String = "2 minutes"): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"m must divide dim, got ($dim, $m)")
-    require(k >= 1, s"k must be >= 1, got $k")
-    val f = fit.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val subDim = dim / m
-    val full = f
-      .orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(k).collect().map(_.getSeq[Double](1).toSeq)
-    require(full.length == k,
-      s"fit must hold >= k=$k rows to derive codebooks, got ${full.length}")
-    val cb: Seq[Seq[Seq[Double]]] = (0 until m).map(sub =>
-      full.map(_.slice(sub * subDim, sub * subDim + subDim)).toSeq).toSeq
+    val f = vectors(fit, id, vec, "item_id", "__v")
+    val (_, cb) = mdCodebooks(f, "item_id", "__v", dim, m, k)
     val fitStats = f
       .select(VectorOps.pqSqError(VectorOps.pqAssign(col("__v"), cb))
         .as("__e"))
@@ -1301,27 +1314,10 @@ object SimSearch {
   def pqRefitIfDistorted(fit: DataFrame, incoming: DataFrame,
       id: String, vec: String, dim: Int, m: Int, k: Int,
       ratioPct: Int = 150): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"m must divide dim, got ($dim, $m)")
-    require(k >= 1, s"k must be >= 1, got $k")
     require(ratioPct >= 1, s"ratioPct is a percent, got $ratioPct")
-    val spark = fit.sparkSession
-    val f = fit.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val inc = incoming.select(col(id).as("item_id"),
-      col(vec).cast("array<double>").as("__v"))
-    val subDim = dim / m
-    def pull(src: DataFrame): Array[org.apache.spark.sql.Row] =
-      src.orderBy(md5(col("item_id").cast("string")), col("item_id"))
-        .limit(k).collect()
-    def cbOf(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Seq[Double]]] = {
-      val full = rows.map(_.getSeq[Double](1).toSeq)
-      (0 until m).map(sub =>
-        full.map(_.slice(sub * subDim, sub * subDim + subDim)).toSeq).toSeq
-    }
-    val fitRows = pull(f)
-    require(fitRows.length == k,
-      s"fit must hold >= k=$k rows to derive codebooks, got ${fitRows.length}")
-    val cb = cbOf(fitRows)
+    val f = vectors(fit, id, vec, "item_id", "__v")
+    val inc = vectors(incoming, id, vec, "item_id", "__v")
+    val (fitRows, cb) = mdCodebooks(f, "item_id", "__v", dim, m, k)
     // (n, mean-err micros) for one side — one encode pass, 1-row agg
     def sideStats(df: DataFrame): (Long, Long) = {
       val r = df
@@ -1347,25 +1343,29 @@ object SimSearch {
     val srcRows = if (refit) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("item_id")).orderBy(col("__side"), col("__v"))
-      pull(f.withColumn("__side", lit(1))
+      mdRows(f.withColumn("__side", lit(1))
         .unionAll(inc.withColumn("__side", lit(0)))
         .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn", "__side"))
+        .where(col("__rn") === 1).drop("__rn", "__side"),
+        "item_id", "__v", k)
     } else fitRows
+    pulledFrame(f, srcRows, Seq("refit" -> (if (refit) 1L else 0L),
+      "n_fit" -> nFit, "n_new" -> nNew, "mean_err_fit" -> mFit / 1e6,
+      "mean_err_new" -> mNew / 1e6), "cb_rank", "cb_item_id")
+  }
+
+  /** An ACT stage's rows for a pull of `f`: the `lead` decision columns
+    * (longs or doubles), the 0-based pull rank and the pulled id. */
+  private def pulledFrame(f: DataFrame, rows: Array[Row],
+      lead: Seq[(String, Any)], rankCol: String, idCol: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("refit", LongType, nullable = false),
-      StructField("n_fit", LongType, nullable = false),
-      StructField("n_new", LongType, nullable = false),
-      StructField("mean_err_fit", DoubleType, nullable = false),
-      StructField("mean_err_new", DoubleType, nullable = false),
-      StructField("cb_rank", LongType, nullable = false),
-      f.schema("item_id").copy(name = "cb_item_id")))
-    val rows = srcRows.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row(if (refit) 1L else 0L, nFit, nNew,
-        mFit / 1e6, mNew / 1e6, i.toLong, r.get(0))
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val schema = StructType(lead.map { case (n, v) => StructField(n,
+        if (v.isInstanceOf[Double]) DoubleType else LongType, nullable = false)
+      } ++ Seq(StructField(rankCol, LongType, nullable = false),
+        f.schema("item_id").copy(name = idCol)))
+    f.sparkSession.createDataFrame(java.util.Arrays.asList(
+      rows.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(lead.map(_._2) ++ Seq(i.toLong, r.get(0))) }: _*), schema)
   }
 
   /** [[ivfTopKPortable]] with the cell count auto-sized from the corpus
@@ -1376,23 +1376,9 @@ object SimSearch {
     * contract applied to cells. */
   def ivfTopKPortableAuto(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
-      k: Int, targetCellSize: Long, nProbe: Int): DataFrame = {
-    val n = math.max(1L, corpus.count())
+      k: Int, targetCellSize: Long, nProbe: Int): DataFrame =
     ivfTopKPortable(queries, corpus, qId, qVec, cId, cVec, k,
-      autoCells(n, targetCellSize), nProbe)
-  }
-
-  def ivfTopKPortable(queries: DataFrame, corpus: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String,
-      k: Int, nCells: Int, nProbe: Int): DataFrame = {
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    val cents: Seq[Seq[Double]] = c
-      .orderBy(md5(col("item_id").cast("string")), col("item_id"))
-      .limit(nCells).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    ivfTopKWithCents(queries, corpus, qId, qVec, cId, cVec, k, cents,
-      nProbe)
-  }
+      autoCellsOf(corpus, targetCellSize), nProbe)
 
   /** IVF probe against an EXPLICIT centroid set — the serving face a
     * maintenance loop needs: [[refitIfDrifted]] /
@@ -1409,15 +1395,8 @@ object SimSearch {
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, cents: Seq[Seq[Double]], nProbe: Int): DataFrame = {
     require(cents.nonEmpty, "need at least one centroid")
-    val c = corpus.select(col(cId).as("item_id"),
-      col(cVec).cast("array<double>").as("__cv"))
-    import graft.functions.GraftFunctions.rankCells
-    val assigned = c.withColumn("__cell",
-      element_at(rankCells(col("__cv"), cents, 1), 1))
-    val probed = queries.select(col(qId).as("query_id"),
-        col(qVec).cast("array<double>").as("__qv"))
-      .withColumn("__cell",
-        explode(rankCells(col("__qv"), cents, nProbe)))
+    val assigned = assignedCorpus(corpus, cId, cVec, cents)
+    val probed = probeCells(queries, qId, qVec, cents, nProbe)
     val scored = assigned.join(broadcast(probed), Seq("__cell"))
       .withColumn("cosine",
         graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")))

@@ -48,17 +48,9 @@ object IndexMonitor {
       windowDur: String = "1 minute",
       watermarkDelay: String = "2 minutes"): DataFrame = {
     require(cents.nonEmpty, "need at least one fit-time centroid")
-    val spark = incoming.sparkSession
-    import spark.implicits._
-    import graft.functions.GraftFunctions.{cosine, rankCells}
-    val centDf = cents.zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("__cell", "__centroid")
-    val assigned = incoming
-      .withColumn("__v", col(vec).cast("array<double>"))
-      .withColumn("__cell", element_at(rankCells(col("__v"), cents, 1), 1))
-      .join(broadcast(centDf), Seq("__cell"))
-      .select(col(ts).as("__ts"), col("__cell"),
-        round(cosine(col("__v"), col("__centroid")), 6).as("__cos"))
+    val assigned = graft.llmops.SimSearch.cellCosine(
+      incoming.withColumn("__v", col(vec).cast("array<double>")),
+      col("__v"), cents, col(ts).as("__ts"))
     // mean = round(sum, 6) / n, NOT round(avg, 6): the per-row __cos are
     // 6-dp multiples, so their true sum is one too — rounding the sum is
     // pure float-error correction and can never sit on a boundary,

@@ -1812,4 +1812,89 @@ class LlmOpsSpec extends AnyFunSuite {
     // quiet interval: no evidence rows is a KEEP with zero counts
     assert(fire() == ((0L, 0L, 0L, false)))
   }
+
+  test("planned sign-LSH forms check their percents before the count job") {
+    // a frame whose scan raises: the parent ran `count()` first and
+    // surfaced the scan's SparkException instead of the contract
+    val scanRaises = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+      .where(raise_error(lit("the corpus was scanned")).isNull)
+    intercept[IllegalArgumentException] {
+      SimSearch.lshPairsAutoPlanned(scanRaises, "vec_id", "embedding",
+        dim = 2, minCosinePct = 150, targetBucketSize = 50L,
+        targetDetectPct = 80)
+    }
+    intercept[IllegalArgumentException] {
+      SimSearch.lshBucketHistogramAutoPlanned(scanRaises, "vec_id",
+        "embedding", dim = 2, minCosinePct = 150, targetBucketSize = 50L,
+        targetDetectPct = 80)
+    }
+    intercept[IllegalArgumentException] {
+      SimSearch.lshPairsAutoPlanned(scanRaises, "vec_id", "embedding",
+        dim = 2, minCosinePct = 40, targetBucketSize = 50L,
+        targetDetectPct = 150)
+    }
+  }
+
+  test("autoNProbe input contract: both forms refuse out-of-range targets, zero depths and empty calibration") {
+    val emb = Tables.embeddings(spark, TestSpark.sf)
+    val corpus = emb.where($"vec_id" >= 10)
+    val calib = emb.where($"vec_id" < 5)
+    val empty = emb.where($"vec_id" < 0)
+    // a prebuilt two-cell index, hand-made (no k-means fit needed)
+    val assigned = corpus.select($"vec_id".as("item_id"),
+      $"embedding".as("__cv"), ($"vec_id" % 2).cast("int").as("__cell"))
+    val centDf = corpus.where($"vec_id" < 12).select(
+      ($"vec_id" % 2).cast("int").as("__cell"),
+      $"embedding".cast("array<double>").as("__centroid"))
+    // the portable form checks its contract before counting the corpus
+    val scanRaises = corpus.where(raise_error(lit("scanned")).isNull)
+    // 150: the target is not a percent (was: silently the ladder max);
+    // -1: not a percent (was: silently the ladder head); depth 0 with
+    // target 0 (was: 0, and serving at depth 0 returns an empty frame)
+    for ((pct, ladder) <- Seq(150 -> Seq(1, 2, 4, 8),
+        -1 -> Seq(1, 2, 4, 8), 0 -> Seq(0, 1, 2))) {
+      intercept[IllegalArgumentException] {
+        SimSearch.autoNProbeIndexed(calib, assigned, centDf, "vec_id",
+          "embedding", 5, pct, ladder)
+      }
+      intercept[IllegalArgumentException] {
+        SimSearch.autoNProbePortable(calib, scanRaises, "vec_id",
+          "embedding", "vec_id", "embedding", 5, 64L, pct, ladder)
+      }
+    }
+    // an empty calibration sample meets any target vacuously
+    val e1 = intercept[IllegalArgumentException] {
+      SimSearch.autoNProbeIndexed(empty, assigned, centDf, "vec_id",
+        "embedding", 5, 80)
+    }
+    assert(e1.getMessage.contains("empty calibration"))
+    val e2 = intercept[IllegalArgumentException] {
+      SimSearch.autoNProbePortable(empty, corpus, "vec_id", "embedding",
+        "vec_id", "embedding", 5, 64L, 80)
+    }
+    assert(e2.getMessage.contains("empty calibration"))
+  }
+
+  test("calibratedDepth: integer boundary, next depth on one fewer hit, ladder-max fallback") {
+    // one query; cell 0 holds items 10-12, cell 1 holds item 13
+    val qv = Seq(1.0, 0.0)
+    val assigned = Seq((10L, Seq(1.0, 0.0), 0), (11L, Seq(1.0, 0.1), 0),
+      (12L, Seq(1.0, 0.2), 0), (13L, Seq(0.0, 1.0), 1))
+      .toDF("item_id", "__cv", "__cell")
+    val probed = Seq((1L, qv, 0, 1), (1L, qv, 1, 2))
+      .toDF("query_id", "__qv", "__cell", "__pr")
+    def depth(truthItems: Seq[Long], pct: Int, ladder: Seq[Int]): Int =
+      SimSearch.calibratedDepth(assigned, probed,
+        truthItems.map(i => (1L, i)).toDF("query_id", "item_id"),
+        k = 4, pct = pct, ladder = ladder)
+    // depth 1 finds 3 of 4 truth rows: 100·3 == 75·4 qualifies
+    assert(depth(Seq(10L, 11L, 12L, 13L), 75, Seq(1, 2)) == 1)
+    // one fewer hit at depth 1 (2 of 4): 200 < 300, so depth 2, where
+    // 10, 11 and 13 are found: 300 == 300 qualifies
+    assert(depth(Seq(10L, 11L, 13L, 99L), 75, Seq(1, 2)) == 2)
+    // no depth reaches 100%: the ladder max ships, though depth 4
+    // probes nothing past depth 2
+    assert(depth(Seq(10L, 11L, 13L, 99L), 100, Seq(1, 2, 4)) == 4)
+  }
 }
