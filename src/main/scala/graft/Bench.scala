@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
   * Protocol mirrors the reference's benchmark methodology
@@ -27,7 +25,8 @@ object Bench {
   // pinnable:false by a recurring mm7_image_resize warm>cold GC
   // suspect (182.8/275, 186.9/277) and are NOT quoted. The 182.4 pin
   // carries d37's pre-sampling exact side (5.37 s in-run); the shipped
-  // md5-sample form pins fresh-JVM at warm 1.78/1.93 (BenchOne), so
+  // md5-sample form pins fresh-JVM at warm 1.78/1.93 (PLANS.md "Round
+  // 12 addenda"), so
   // the honest closing estimate is ~178-179 s — the driver's own
   // BENCH_r12 at this HEAD is the quotable artifact. One final-HEAD
   // run closed at 211.0 pinnable:true with GC 83.3 s (vs 61-65 in the
@@ -326,39 +325,7 @@ object Bench {
     if (!quietAtStart)
       println(s"[bench] WARN host still contended after ${startWaitS}s " +
         s"wait (load1=${load1()}) — output will be stamped pinnable:false")
-    // default to every core (the driver contract is local[32] on this
-    // machine); SPARK_GRAFT_CPUS narrows it for local experiments
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE re-coalesce partitions INSIDE cached plans: the CC/pagerank
-      // fixpoints act on small persisted frames each round, and without this
-      // every round pays full-width task dispatch on bench hardware
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf: size of the generated-class cache keyed by source
-      // text (Spark default 100). 246 distinct plans × several codegen
-      // stages evict constantly, so shared fragments (common scans,
-      // repeated per-query invocations) recompile through Janino. The
-      // r8 split-bench A/B measured 4096 entries at −14.6 s total
-      // (167.2 → 152.5 s; 88 queries faster ≥50 ms vs 40 slower,
-      // heavies first: t24 −1.5 s, m9 −0.8 s) at +37 MB code cache —
-      // and ruled OUT cross-query litter (two half-runs in separate
-      // JVMs summed to 171.7 s, ≈ the single-JVM 167.2 s). PLANS.md r8.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // AQE coalesce floor knob for the whole-suite A/B (PLANS.md r8):
-      // the g10 diagnosis showed AQE shrinking ~10 MB shuffles below
-      // the core count, serializing final hash aggregates. At cluster
-      // scale totalSize/parallelism >> any floor, so this only binds
-      // small-data shuffles.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     var contendedBy = otherJvm()
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime()

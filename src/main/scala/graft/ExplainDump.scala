@@ -1,30 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `df.explain("formatted")` output for named registry
-  * queries to files — the plan evidence committed under `plans/r15/`.
+  * queries to files — the plan evidence committed under `plans/r15/` —
+  * and print one shuffle/join/scan audit line per query (the "would this
+  * survive 100×" review loop): hash and single-partition exchanges,
+  * broadcast-hash, sort-merge and broadcast-nested-loop joins,
+  * cartesian products and scans with pushed filters.
   *
   * Usage: `runMain graft.ExplainDump <outDir> <suffix> q1 q2 ...`
-  * (env `SPARK_GRAFT_SF_DIR`; session conf mirrors Bench so the plans
-  * are the benched ones). Each query writes `<outDir>/<name>_<suffix>.txt`. */
+  * (env `SPARK_GRAFT_SF_DIR`; the [[LocalSession]] Bench plans under).
+  * Each query writes `<outDir>/<name>_<suffix>.txt`. */
 object ExplainDump {
+  private val audited = Seq("shuf" -> "Exchange hashpartitioning",
+    "single" -> "Exchange SinglePartition", "bhj" -> "BroadcastHashJoin",
+    "smj" -> "SortMergeJoin", "bnlj" -> "BroadcastNestedLoopJoin",
+    "cart" -> "CartesianProduct", "pushedFilters" -> "PushedFilters: \\[[^\\]]")
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {
@@ -34,7 +31,9 @@ object ExplainDump {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))
-        println(s"[explain] wrote $name")
+        val plan = df.queryExecution.executedPlan.toString
+        println(f"[plan] $name%-22s " + audited.map { case (k, re) =>
+          s"$k=${re.r.findAllIn(plan).size}" }.mkString(" "))
       } catch { case e: Throwable =>
         println(s"[explain] $name FAILED: ${e.getMessage}")
       }

@@ -4,7 +4,6 @@ import graft.recall.{Cascade, ExternalScorer}
 import graft.functions.VectorOps
 import graft.ops.AsOf
 import graft.streaming.BehaviorIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end replay of the reference's two lifecycles (SURVEY §3.1/§3.2)
@@ -23,17 +22,7 @@ import org.apache.spark.sql.functions._
 object Replay {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // let AQE re-coalesce partitions INSIDE cached plans: the CC/pagerank
-      // fixpoints act on small persisted frames each round, and without this
-      // every round pays full-width task dispatch on bench hardware
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     import spark.implicits._
 
     // ---- stage 1: behavior replay (stream → KV profiles)

@@ -1,22 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: runs the flagship `SparkEntry.entry` the way the driver's
   * t1 check does (sf0.001, rows > 0) and prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // let AQE re-coalesce partitions INSIDE cached plans: the CC/pagerank
-      // fixpoints act on small persisted frames each round, and without this
-      // every round pays full-width task dispatch on bench hardware
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(20, truncate = false)

@@ -676,7 +676,8 @@ object SparkEntry {
     * from the corpus count (`ceil(log2(ceil(n/target)))`, pure integer
     * bit-length math) so expected bucket size stays ≈ target as the
     * corpus grows. This is the scale path d6's FIXED 16-bit signature
-    * lacks: the 100x ScaleSmoke row shows d6's buckets all exceeding
+    * lacks: the 100x scale row (PLANS.md "Round 8: the fixed-signature
+    * capacity wall, measured") shows d6's buckets all exceeding
     * the hot-bucket cap (runtime flat because every bucket is excluded
     * — recall zero), while this variant re-sizes to 4×16 bits at 2M
     * rows and keeps finding pairs. The DuckDB oracle replays the width
@@ -1764,7 +1765,8 @@ object SparkEntry {
     // persist: `oriented` feeds three consumers (both wedge sides + the
     // closure semi-join); unpersisted, each re-expands the whole
     // ui→und→deg lineage and the static plan balloons to ~150 shuffles
-    // (PlanAudit) — cached, the first stage fills it and the rest reuse.
+    // (plan audit, PLANS.md "Round-5 continuation (second session)") —
+    // cached, the first stage fills it and the rest reuse.
     // Pinned at the session shuffle width on the wedge key `s`
     // ([[graft.ops.Par.byKey]]): the cached frame otherwise inherits the
     // AQE-coalesced 1-partition layout of the small deg-join exchange,
@@ -2162,27 +2164,29 @@ object SparkEntry {
     * PROBED CELL from `q − c`, approximating ‖(q−c) − r‖² — the layout
     * every billion-scale deployment actually stores. Same corpus/query
     * split and cell derivation as sim7; codebooks are the RESIDUALS of
-    * the same 4 md5-ordered corpus vectors (portable: the oracle
+    * md5-ordered corpus vectors 9–12 (portable: the oracle
     * rebuilds cells → residuals → codebooks → per-cell LUTs → ranks in
     * SQL). LlmOpsSpec measures the fidelity gain vs sim7's raw-PQ form
     * on the fixture corpus. */
   private val sim33IvfPqResidual: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val corpus = emb.where(col("vec_id") >= 10)
-    val cents = SimSearch.mdPull(corpus, "vec_id", "embedding", 8)
-    // residuals of the first 4 md5-ordered corpus vectors w.r.t. their
-    // OWN assigned cells — the same data-derived-literal trick as
-    // sim6/sim7, shifted to residual space so the codebooks quantize
-    // what the codes actually store (the 4-row pull is the 8-row one's head)
+    val pull = SimSearch.mdPull(corpus, "vec_id", "embedding", 12)
+    val cents = pull.take(8)
+    // residuals of md5-ordered corpus vectors 9–12 w.r.t. their assigned
+    // cells — the same data-derived-literal trick as sim6/sim7, shifted
+    // to residual space so the codebooks quantize what the codes actually
+    // store. Vectors 1–8 are the centroids themselves: their residuals,
+    // and so every codebook entry, would be 0
     import s.implicits._
-    val res4: Seq[Seq[Double]] = cents.take(4).toDF("__cv")
+    val res4: Seq[Seq[Double]] = pull.drop(8).toDF("__cv")
       .select(SimSearch.residual(col("__cv"),
         SimSearch.assignCell(col("__cv"), cents), cents))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
     val cb = SimSearch.pqSplit(res4, dim = 64, m = 4)
-    SimSearch.ivfPqResidualTopK(emb.where(col("vec_id") < 10), corpus,
-        "vec_id", "embedding", "vec_id", "embedding",
-        k = 5, nCells = 8, nProbe = 4, codebooks = cb)
+    SimSearch.ivfPqResidualTopKWithCents(emb.where(col("vec_id") < 10),
+        corpus, "vec_id", "embedding", "vec_id", "embedding",
+        k = 5, nProbe = 4, cents = cents, codebooks = cb)
       .select(col("query_id"), col("item_id"), col("adc_dist"),
         col("rank").cast("long").as("rank"))
   }
@@ -3826,8 +3830,9 @@ object SparkEntry {
         col("monetary"))
     // all 12 quintile cuts in ONE scalar aggregate (sequential
     // quantileBins calls each re-planned the whole upstream chain for
-    // their bounds pass — PlanAudit showed 15 single-partition
-    // exchanges; one pass + one broadcast is the same math)
+    // their bounds pass — the plan audit showed 15 single-partition
+    // exchanges; one pass + one broadcast is the same math; PLANS.md
+    // "Round 6, third session")
     val qs = Seq(0.2, 0.4, 0.6, 0.8).map(lit)
     val bounds = rfm.agg(
       percentile(col("recency_days"), array(qs: _*)).as("__rb"),
@@ -4948,8 +4953,9 @@ object SparkEntry {
     * Detection is a per-pair property, so the sampled estimate is
     * unbiased; pair evidence survives at the fraction squared, which
     * is why the ceiling is an explicit operating knob (size it from
-    * the d45/d46 dup-mass report). MaintScale runs this same contract
-    * at a 100× corpus with a 2-hex ceiling (PLANS.md round 15). */
+    * the d45/d46 dup-mass report). PLANS.md "MinHash band family joins
+    * MaintScale" runs this same contract at a 100× corpus with a 2-hex
+    * ceiling. */
   private val d47SampledBandAudit: Q = (s, dir) =>
     Dedup.bandPlanAudit(
       graft.llmops.IndexMaintenance.md5Sample(
@@ -8344,9 +8350,9 @@ object SparkEntry {
         |    list_transform(range(1, 65), j -> c.v[j] - ct.cv[j]) AS rv
         |  FROM c JOIN acell a ON a.vec_id = c.vec_id
         |  JOIN cent ct ON ct.cell = a.cell),
-        |cb AS (SELECT cidx, rv AS cv FROM (SELECT
+        |cb AS (SELECT rk - 8 AS cidx, rv AS cv FROM (SELECT
         |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-        |      vec_id) - 1 AS cidx, rv FROM cres) WHERE cidx < 4),
+        |      vec_id) - 1 AS rk, rv FROM cres) WHERE rk BETWEEN 8 AND 11),
         |qcell AS (SELECT vec_id, cell FROM (
         |    SELECT q.vec_id, ct.cell, row_number() OVER (
         |      PARTITION BY q.vec_id

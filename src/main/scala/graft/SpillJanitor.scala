@@ -1,9 +1,9 @@
 package graft
 
-/** Stale shuffle-spill cleanup for the bench/scale mains.
+/** Stale shuffle-spill cleanup for [[Bench]].
   *
   * Every Spark JVM writes block-manager spill under `/tmp/spark-<uuid>`
-  * and removes it on CLEAN shutdown — but a killed ScaleSmoke/Bench run
+  * and removes it on CLEAN shutdown — but a killed Bench or scale run
   * (OOM, ctrl-C, a scale experiment cut off mid-spill) leaves the
   * litter behind. Round 11 hit ENOSPC mid-measurement from ~50 GB of
   * exactly this (PLANS.md round-11 ops note) and the cleanup was

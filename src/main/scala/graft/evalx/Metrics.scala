@@ -267,6 +267,19 @@ object Metrics {
         count(lit(1)).as("n_bins_used"))
   }
 
+  /** The deterministic Poisson(1) weight for (row `__id`, replicate
+    * `__b`) — shared by [[bootstrapCiMean]] and [[bootstrapCiDelta]]
+    * (the PAIRING in the paired delta is exactly this sharing). */
+  private def poissonWeight: Column = {
+    val u = conv(substring(md5(concat(col("__id"), lit("#"),
+      col("__b").cast("string"))), 1, 12), 16, 10).cast("double") /
+      281474976710656.0
+    when(u < 0.367879441, 0.0)
+      .when(u < 0.735758882, 1.0)
+      .when(u < 0.919698603, 2.0)
+      .otherwise(3.0)
+  }
+
   /** Poisson-bootstrap confidence interval for a mean — the missing
     * error bar on every point metric this module emits (an AUC or mean
     * that moved 0.002 means nothing without one). Classic multinomial
@@ -288,19 +301,6 @@ object Metrics {
     * sort over them. ci_lo/ci_hi are the (floor(α/2·B)+1)-th smallest /
     * symmetric largest replicate means (α = 5%).
     * Output: 1 row (n_replicates, point_mean, ci_lo, ci_hi). */
-  /** The deterministic Poisson(1) weight for (row `__id`, replicate
-    * `__b`) — shared by [[bootstrapCiMean]] and [[bootstrapCiDelta]]
-    * (the PAIRING in the paired delta is exactly this sharing). */
-  private def poissonWeight: Column = {
-    val u = conv(substring(md5(concat(col("__id"), lit("#"),
-      col("__b").cast("string"))), 1, 12), 16, 10).cast("double") /
-      281474976710656.0
-    when(u < 0.367879441, 0.0)
-      .when(u < 0.735758882, 1.0)
-      .when(u < 0.919698603, 2.0)
-      .otherwise(3.0)
-  }
-
   def bootstrapCiMean(df: DataFrame, id: Column, value: Column,
       nReplicates: Int): DataFrame = {
     val base = df.select(id.cast("string").as("__id"),

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * LlmOpsSpec): `MinHashSig(k)` = `xxhash64(shingle, k)` =
   * `XXH64.hashInt(k, XXH64.hashUTF8String(shingle, 42))`, and
   * `MinHashSigMix` reproduces the conv/md5 HOF spec in
-  * [[graft.llmops.Dedup.minHashSigPortableHof]] including null/empty
+  * `minHashSigPortableHof` including null/empty
   * edges — the same formula the DuckDB oracles replay.
   *
   * CodegenFallback is deliberate: per-row work is O(shingles × seeds)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 /** Native portable-SimHash kernel.
   *
   * The composed HOF form of the portable 32-bit SimHash
-  * ([[graft.llmops.Dedup.simHash32PortableHof]]) materializes, per
+  * (`simHash32PortableHof`, pinned by LlmOpsSpec) materializes, per
   * TOKEN, a 32-element when-array plus two zip_with allocations just to
   * turn each md5 hex digit into a ±1 vote — measured ~80% of the d3
   * bench query (PLANS.md round-8 signature cost-share table). This
@@ -98,7 +98,7 @@ case class SimHash32Md5(child: Expression)
   *    token (a second md5 stream would double the dominant cost).
   *
   * The composed-HOF spec this is pinned against (LlmOpsSpec) is
-  * [[graft.llmops.Dedup.simHash64PortableHof]]; the DuckDB oracles
+  * `simHash64PortableHof`; the DuckDB oracles
   * replay the same two bit rules with `substring(h, b+1, 1) >= '8'`
   * and `substring(h, b+1, 1) IN ('4','5','6','7','c','d','e','f')`.
   * Null tokens vote −1 at every position of both halves; an empty

@@ -148,7 +148,7 @@ object VectorOps {
     * grows), and at real scale the fit runs on a sample anyway, making
     * it O(1) in the corpus. Measured: the v4 query (train + encode) is
     * 2.12 s at 1× / 3.17 s at 100× corpus (ratio 1.5 vs linear 100,
-    * round-11 ScaleSmoke) — training dominates the 1× time and grows
+    * PLANS.md "Round 11: the engine's own new surface closed") — training dominates the 1× time and grows
     * only through the per-iteration pass, while the literal-codebook
     * encode is the same zero-shuffle scan v3 proves. */
   def pqTrain(embs: DataFrame, vec: String, dim: Int, m: Int, k: Int,

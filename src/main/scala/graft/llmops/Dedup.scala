@@ -41,34 +41,12 @@ object Dedup {
   /** 64-bit SimHash of a document's token stream: per-token xxhash64 →
     * per-bit ±1 votes → sign bits. Lowered to the native one-pass
     * kernel ([[graft.functions.SimHash64Xx]]) since round 9 — the
-    * composed HOF form below paid a 64-element when-array per token,
+    * composed HOF form paid a 64-element when-array per token,
     * measured as d27's 4.5 s bench wall (the same 80%-of-runtime shape
     * the r8 cost-share table found for d3). Bit-identical to
-    * [[simHash64Hof]] (pinned by LlmOpsSpec). */
+    * `simHash64Hof` (pinned by LlmOpsSpec). */
   def simHash64(text: Column): Column =
     graft.functions.SimHashFunctions.simHash64Xx(TextFunctions.tokens(text))
-
-  /** Composed-HOF reference form of [[simHash64]] — the spec the native
-    * kernel is pinned against. */
-  def simHash64Hof(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => xxhash64(t))
-    val zero = array_repeat(lit(0L), 64)
-    val votes = aggregate(
-      hashes,
-      zero,
-      (acc, h) => zip_with(
-        acc,
-        array((0 until 64).map(b =>
-          when(shiftright(h, b).bitwiseAND(1L) === 1L, lit(1L)).otherwise(lit(-1L))): _*),
-        (a, v) => a + v))
-    // literal per-position bit values zip'd against the vote array keeps
-    // `votes` evaluated once (no 64× tree duplication) and avoids any
-    // runtime shift-by-column / overflow under ANSI mode.
-    val bitValues = array((0 until 64).map(b => lit(1L << b)): _*)
-    aggregate(
-      zip_with(votes, bitValues, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** C4/RefinedWeb-style corpus-level repeated-span scrub (Raffel et al.
     * 2020 §2.2 removes lines recurring ≥3× in the corpus; with
@@ -178,31 +156,10 @@ object Dedup {
     *
     * Lowered to the native one-pass kernel
     * ([[graft.functions.SimHash32Md5]]), bit-identical to the composed
-    * [[simHash32PortableHof]] spec form (pinned by LlmOpsSpec; the HOF
+    * `simHash32PortableHof` spec form (pinned by LlmOpsSpec; the HOF
     * form measured ~80% of d3's runtime — PLANS.md round 8). */
   def simHash32Portable(text: Column): Column =
     graft.functions.SimHashFunctions.simHash32Md5(TextFunctions.tokens(text))
-
-  /** Composed-HOF reference form of [[simHash32Portable]] — kept as the
-    * spec the native kernel is pinned against (the r8 cost-share table
-    * measured it at ~2.2-2.7 s over the sf0.1 documents vs ~0.1 s of
-    * md5 work: each token paid a 32-element when-array plus two
-    * zip_with allocations). */
-  def simHash32PortableHof(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => md5(t))
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), 32),
-      (acc, h) => zip_with(
-        acc,
-        array((0 until 32).map(b =>
-          when(substring(h, b + 1, 1) >= "8", lit(1L)).otherwise(lit(-1L))): _*),
-        (a, v) => a + v))
-    val bitValues = array((0 until 32).map(b => lit(1L << b)): _*)
-    aggregate(
-      zip_with(votes, bitValues, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** Engine-portable 64-bit SimHash fingerprint as `array<bigint>
     * [lo, hi]` — two 32-bit halves from ONE md5 per token (`lo` votes on
@@ -215,35 +172,10 @@ object Dedup {
     * bit would flip it negative under two engines' arithmetic shifts.
     * Lowered to the native one-pass kernel
     * ([[graft.functions.SimHash64Md5]]), bit-pinned to
-    * [[simHash64PortableHof]] by LlmOpsSpec. Empty token streams yield
+    * `simHash64PortableHof` by LlmOpsSpec. Empty token streams yield
     * [0, 0]. */
   def simHash64Portable(text: Column): Column =
     graft.functions.SimHashFunctions.simHash64Md5(TextFunctions.tokens(text))
-
-  /** Composed-HOF reference form of [[simHash64Portable]] — the spec the
-    * native kernel is pinned against, in exactly the shape the DuckDB
-    * oracles replay (two bit rules over the same md5 hex digits). */
-  def simHash64PortableHof(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => md5(t))
-    def half(bitOf: (Column, Int) => Column): Column = {
-      val votes = aggregate(
-        hashes,
-        array_repeat(lit(0L), 32),
-        (acc, h) => zip_with(
-          acc,
-          array((0 until 32).map(b =>
-            when(bitOf(h, b), lit(1L)).otherwise(lit(-1L))): _*),
-          (a, v) => a + v))
-      val bitValues = array((0 until 32).map(b => lit(1L << b)): _*)
-      aggregate(
-        zip_with(votes, bitValues, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-        lit(0L), (acc, b) => acc.bitwiseOR(b))
-    }
-    array(
-      half((h, b) => substring(h, b + 1, 1) >= "8"),
-      half((h, b) => substring(h, b + 1, 1)
-        .isin("4", "5", "6", "7", "c", "d", "e", "f")))
-  }
 
   /** SimHash near-dup candidate pairs: the 64-bit signature is cut into
     * `bands` equal bit-bands; docs sharing any full band become candidates
@@ -325,41 +257,13 @@ object Dedup {
     * [[simHash32Portable]] and (p0, p1) ≡ [[simHash64Portable]]: each
     * narrower family is a prefix of this one at the same digest cost.
     * Native kernel [[graft.functions.SimHash128Md5]], bit-pinned to
-    * [[simHash128PortableHof]]. This is the fingerprint the d24
+    * LlmOpsSpec's `simHash128PortableHof`. This is the fingerprint the d24
     * residual-wall note names: four DISJOINT 32-bit lanes support
     * band widths up to [[SimSearch.autoWidth]]'s 24-bit cap, moving
     * the capacity wall from ~65k·target docs (64-bit, 16-bit lanes)
     * to ~16M·target. */
   def simHash128Portable(text: Column): Column =
     graft.functions.SimHashFunctions.simHash128Md5(TextFunctions.tokens(text))
-
-  /** Composed-HOF reference form of [[simHash128Portable]] — the spec
-    * the native kernel is pinned against, in the hex-digit membership
-    * shape the DuckDB oracle replays. */
-  def simHash128PortableHof(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => md5(t))
-    def half(bitOf: (Column, Int) => Column): Column = {
-      val votes = aggregate(
-        hashes,
-        array_repeat(lit(0L), 32),
-        (acc, h) => zip_with(
-          acc,
-          array((0 until 32).map(b =>
-            when(bitOf(h, b), lit(1L)).otherwise(lit(-1L))): _*),
-          (a, v) => a + v))
-      val bitValues = array((0 until 32).map(b => lit(1L << b)): _*)
-      aggregate(
-        zip_with(votes, bitValues, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-        lit(0L), (acc, b) => acc.bitwiseOR(b))
-    }
-    def digitIn(members: String*)(h: Column, b: Int): Column =
-      substring(h, b + 1, 1).isin(members: _*)
-    array(
-      half((h, b) => substring(h, b + 1, 1) >= "8"),
-      half(digitIn("4", "5", "6", "7", "c", "d", "e", "f")),
-      half(digitIn("2", "3", "6", "7", "a", "b", "e", "f")),
-      half(digitIn("1", "3", "5", "7", "9", "b", "d", "f")))
-  }
 
   /** The 128-bit extension of [[simHashPairsAuto]] — same auto-width
     * contract, four DISJOINT bands that are simply the four fingerprint
@@ -434,8 +338,9 @@ object Dedup {
     * Why: with any FIXED band width w, expected bucket size grows as
     * n/2^w until every bucket trips the hot-bucket cap and the pair
     * stage silently emits nothing — runtime defended, recall zero (the
-    * exact failure the 1000× embedding ScaleSmoke measured for d6, and
-    * the documented wall of [[simHashPairsPortable]]'s 2×16-bit form at
+    * exact failure the 1000× embedding run measured for d6, PLANS.md
+    * "Round 8: the fixed-signature capacity wall, measured", and the
+    * documented wall of [[simHashPairsPortable]]'s 2×16-bit form at
     * ~100M docs). Auto width keeps expected bucket size ≈
     * `targetBucketSize` at any corpus size up to the 16-bit clamp.
     *
@@ -998,20 +903,10 @@ object Dedup {
   /** MinHash signature: `numHashes` independent permutations via seeded
     * xxhash64 over the shingle set — the native one-pass kernel
     * ([[graft.functions.MinHashSig]]; one string hash per shingle, cheap
-    * per-seed int mixes). Bit-identical to [[minHashSigHof]]. */
+    * per-seed int mixes). Bit-identical to LlmOpsSpec's `minHashSigHof`. */
   def minHashSig(text: Column, shingleN: Int, numHashes: Int): Column =
     MinHashFunctions.minHash(
       array_distinct(TextFunctions.shingles(text, shingleN)), numHashes)
-
-  /** Composed-HOF reference form of [[minHashSig]] (numHashes interpreted
-    * passes over the shingle array) — kept as the spec the native kernel
-    * is pinned against. */
-  def minHashSigHof(text: Column, shingleN: Int, numHashes: Int): Column =
-    TextFunctions.bind(array_distinct(TextFunctions.shingles(text, shingleN))) { sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)),
-        seed => aggregate(sh, lit(Long.MaxValue),
-          (acc, s) => least(acc, xxhash64(s, seed))))
-    }
 
   /** Engine-portable MinHash signature, md5-MIX family: ONE md5 per
     * shingle, per-seed values from an ANSI-safe 2-universal integer mix
@@ -1022,24 +917,11 @@ object Dedup {
     * md5-per-seed family in round 8: that one paid `numHashes` digest
     * block transforms per shingle (~40% of every portable-minhash bench
     * query, PLANS.md cost-share table) for zero statistical benefit.
-    * Native kernel bit-identical to [[minHashSigPortableHof]]; the
+    * Native kernel bit-identical to LlmOpsSpec's `minHashSigPortableHof`; the
     * xxhash64 variant stays the production path. */
   def minHashSigPortable(text: Column, shingleN: Int, numHashes: Int): Column =
     MinHashFunctions.minHashMix(
       array_distinct(TextFunctions.shingles(text, shingleN)), numHashes)
-
-  /** Composed-HOF reference form of [[minHashSigPortable]] — kept as the
-    * spec the native kernel is pinned against, in exactly the shape the
-    * DuckDB oracles replay. */
-  def minHashSigPortableHof(text: Column, shingleN: Int, numHashes: Int): Column =
-    TextFunctions.bind(array_distinct(TextFunctions.shingles(text, shingleN))) { sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)), seed =>
-        array_min(transform(sh, s =>
-          ((conv(substring(md5(s), 1, 12), 16, 10).cast("long")
-              % 1073741824L)
-            * (lit(2654435761L) + seed.cast("long") * 80906L)
-            + seed.cast("long")) % 1073741824L)))
-    }
 
   /** Portable near-dup pairs on the md5 signature: estimated Jaccard =
     * fraction of agreeing signature positions, pairs pre-filtered by
@@ -1235,7 +1117,8 @@ object Dedup {
     * variant a growing corpus actually runs: a FIXED width's expected
     * bucket size grows linearly with n until every bucket trips the
     * hot-bucket cap and is excluded (runtime defended, recall zero —
-    * the 100x ScaleSmoke d6 row measures exactly that wall), while the
+    * the 100x d6 scale row measures exactly that wall, PLANS.md
+    * "Round 8: the fixed-signature capacity wall, measured"), while the
     * auto width keeps expected bucket size ≈ targetBucketSize at any
     * scale. */
   def embeddingPairsBandedAuto(embs: DataFrame, id: String, vec: String,

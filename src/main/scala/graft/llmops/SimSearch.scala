@@ -149,8 +149,8 @@ object SimSearch {
     * bucketSize × n) grow linearly with the corpus. Pick
     * `nBits ≈ bands × log2(n / targetBucketSize)`: the fixture query
     * (16 bits, 4 bands) is sized for 10³–10⁵ rows; a 10⁹-row corpus
-    * wants ~64 bits over 4 bands. ScaleSmoke measures this family at
-    * 10× to catch capacity regressions. */
+    * wants ~64 bits over 4 bands. PLANS.md "ScaleSmoke: measured
+    * growth at ~10x rows" measures this family at 10×. */
   def lshPairs(embs: DataFrame, id: String, vec: String, dim: Int,
       minCosine: Double, nBits: Int = 16, bands: Int = 4,
       maxBucket: Int = 2000): DataFrame = {
@@ -159,8 +159,9 @@ object SimSearch {
     // shape), not collect_list + flatten: members here carry the full
     // vector (~0.5 KB each), so the old one-row-per-bucket pair array
     // allocated ~|bucket|² × 1 KB in a single non-spillable task
-    // row — ScaleSmoke measured an executor OOM at 10× sf0.1 (1250-
-    // member buckets → ~860 MB rows) long before the maxBucket cap
+    // row — a 10× sf0.1 run measured an executor OOM (1250-member
+    // buckets → ~860 MB rows; PLANS.md "ScaleSmoke: measured growth at
+    // ~10x rows") long before the maxBucket cap
     // (2000) bound anything. A sort-merge self-join on the band key
     // spills, and the cap still bounds per-bucket candidate count.
     val capped = graft.ops.PairGen.capped(banded, "bk", maxBucket)
@@ -203,9 +204,10 @@ object SimSearch {
     * `ceil(log2(ceil(n / targetBucketSize)))` (min 1, capped at 24
     * bits — beyond that buckets are singletons at any achievable n),
     * so the EXPECTED bucket size stays ≈ targetBucketSize as the
-    * corpus grows — the capacity rule ScaleSmoke measured d6 violating
-    * with a fixed 16-bit/4-band signature (bucket sizes, and therefore
-    * per-bucket candidate work, grew with the corpus). Costs one
+    * corpus grows — the capacity rule the scale rows measured d6
+    * violating with a fixed 16-bit/4-band signature (bucket sizes, and
+    * therefore per-bucket candidate work, grew with the corpus; PLANS.md
+    * "ScaleSmoke: measured growth at ~10x rows"). Costs one
     * count job at plan time — the same bounded plan-time-fetch class
     * as the IVF centroid pull; at 100 TB the count is a metadata read
     * on parquet sources.
@@ -458,8 +460,9 @@ object SimSearch {
     * histogram per band — `(band, bucket_size, n_buckets)`. This is the
     * observability counterpart to [[lshPairs]]' hot-bucket cap: the cap
     * defends runtime by EXCLUDING over-cap buckets from pair generation,
-    * which at the wrong signature width fails silently (the 1000×
-    * ScaleSmoke run measured the fixed 16-bit d6 signature placing 100%
+    * which at the wrong signature width fails silently (the 1000× run
+    * of PLANS.md "Round 8: the fixed-signature capacity wall, measured"
+    * measured the fixed 16-bit d6 signature placing 100%
     * of rows in over-cap buckets — runtime flat, recall zero, no error
     * anywhere). Reading this histogram next to the cap makes that state
     * visible: rows in buckets above the cap are rows the pair stage will

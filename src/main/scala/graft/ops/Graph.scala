@@ -78,9 +78,13 @@ object Graph {
     * the convergence-check action doesn't regrow lineage.
     *
     * Input: undirected edge list (pairs, either orientation). Output:
-    * (node, component) for every node appearing in ≥ 1 edge. */
+    * (node, component) for every node appearing in ≥ 1 edge. A graph
+    * whose labels still change in round `maxIter` (diameter ≥ maxIter)
+    * throws IllegalStateException instead of returning split
+    * components; the check reuses each round's count job. */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 25): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     // pin the symmetrized edges: the upstream pair pipeline (often
     // an expensive near-dup candidate generation) must not re-run per
     // round, its (potentially huge) plan must not be nested by every
@@ -98,8 +102,8 @@ object Graph {
       .select(col("__n"), col("__n").as("__lbl")))
     var labels = cached
     var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    var changed = -1L
+    try while (iter < maxIter && changed != 0) {
       // one pass per round: carry the old label through the neighbor-min
       // aggregation so the convergence check is a filter over the same
       // materialized frame instead of a third join + shuffle
@@ -109,14 +113,18 @@ object Graph {
           .join(labels, "__n")
           .select(col("__n"), col("__lbl").as("__old"),
             least(col("__lbl"), col("__nbr")).as("__lbl")))
-      val changed = next.where(col("__lbl") =!= col("__old")).count()
+      changed = next.where(col("__lbl") =!= col("__old")).count()
       Iterate.release(cached)
       cached = next
       labels = next.select(col("__n"), col("__lbl"))
-      converged = changed == 0
       iter += 1
+    } finally Iterate.unpin(sym)
+    if (changed != 0) {
+      Iterate.release(cached)
+      throw new IllegalStateException(s"connectedComponents did not " +
+        s"converge within maxIter = $maxIter rounds ($changed labels " +
+        "changed in the last round)")
     }
-    Iterate.unpin(sym)
     // the final labels stay materialized: the caller's action reads the
     // stored fixpoint instead of recomputing every iteration's lineage;
     // once the result goes unreferenced the ContextCleaner reclaims it
@@ -308,8 +316,9 @@ object Graph {
 
   /** Full LightGCN forward: `layers` propagation rounds, output = mean of
     * layer-0..layers embeddings (the reference's skip-connection average,
-    * `model.py:60-95`). */
-  /** `materialize`: persist the normalized edges and each layer for
+    * `model.py:60-95`).
+    *
+    * `materialize`: persist the normalized edges and each layer for
     * physical reuse. At bench scale recomputation is FASTER (the whole
     * lineage pipelines in memory; measured 0.7 s recompute vs 9 s persist
     * vs 14 s localCheckpoint at sf0.1 / 2 layers), so the default is off.

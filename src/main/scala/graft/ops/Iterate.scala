@@ -49,14 +49,14 @@ object Iterate {
     * the PREVIOUS round's snapshot once the new one is materialized.
     *
     * Stored SERIALIZED (`MEMORY_AND_DISK_SER`), not at localCheckpoint's
-    * deserialized default: a snapshot is written once and scanned
-    * linearly once per round, so the serde cost is trivial next to the
-    * join/agg work per round, while the footprint difference is the
-    * whole ballgame for big edge snapshots — the round-8 100× ScaleSmoke
-    * run OOM'd `g10_label_prop` unrolling its 240M-row symmetrized edge
-    * set as deserialized row objects (estimated sizes, per-object GC
-    * load), where the serialized form is compact UnsafeRow bytes with
-    * exact accounting and graceful disk overflow. */
+    * deserialized default: a snapshot is written once and scanned linearly
+    * once per round, so the serde cost is trivial next to the join/agg work
+    * per round, while the footprint difference is the whole ballgame for
+    * big edge snapshots — the round-8 100× scale run (PLANS.md "Round 8:
+    * fixpoint families at ~100x") OOM'd `g10_label_prop` unrolling its
+    * 240M-row symmetrized edge set as deserialized row objects (estimated
+    * sizes, per-object GC load), where the serialized form is compact
+    * UnsafeRow bytes with exact accounting and graceful disk overflow. */
   def snapshot(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 

@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
   * `explode(flatten(transform(sequence…)))` materializes ALL
   * C(|members|, 2) pair structs in ONE row before the explode — at the
   * 10k member cap d7 carried before round 8 that is ~50 million structs (GBs) in
-  * a single row, the executor OOM the round-8 100× ScaleSmoke run caught
-  * on `d7_dup_clusters`. With the two-level form no intermediate row
-  * ever holds more than |members| structs, so per-row memory stays
-  * O(cap) at any corpus scale while the emitted pair set is identical
-  * (same sorted order, same i<j coverage). The hot-bucket policy
+  * a single row, the executor OOM the round-8 100× scale run (PLANS.md
+  * "Round 8: ~100x ScaleSmoke promotion") caught on `d7_dup_clusters`.
+  * With the two-level form no intermediate row ever holds more than
+  * |members| structs, so per-row memory stays O(cap) at any corpus
+  * scale while the emitted pair set is identical (same sorted order,
+  * same i<j coverage). The hot-bucket policy
   * ([[capped]] / [[members]]) lives here once for every caller. */
 object PairGen {
 

@@ -54,33 +54,6 @@ object Cascade {
       .select(col("user_id"), col("item_id"), col("recall_score"))
   }
 
-  /** 3-branch cold-start recall — the reference's full branch decision
-    * (`model_service/models.py:42-88`), composed as ONE lazy plan over a
-    * mixed user batch:
-    *
-    *   1. known user (has a trained embedding) → dot(user_emb, items)
-    *      top-k, history excluded (`models.py:47-62`);
-    *   2. unknown user with ≥1 history item that maps into the item
-    *      table → dot(mean(history item embeddings), items) top-k,
-    *      history excluded (`models.py:66-84`; repeats in the history
-    *      weight the mean, as the reference's index-list mean does);
-    *   3. otherwise → one global popularity top-k (interaction count,
-    *      item-id tie-break) fanned out to every such user — the
-    *      deterministic version of the reference's "first K item ids"
-    *      fallback (`models.py:85-87`).
-    *
-    * Inputs: `users` (user_id) — the request batch; `userEmb` (user_id,
-    * uemb); `history` (user_id, item_id); `items` (item_id, iemb);
-    * `interactions` (item_id) — the popularity evidence. Output:
-    * (user_id, branch, item_id, score, rank); branch ∈ {1,2,3}.
-    *
-    * Scale shape: branch selection is two anti-joins against the
-    * (small) user-embedding key set; the scoring body is the same
-    * broadcast crossJoin as [[recall]] (same precondition — swap in the
-    * ANN paths past the broadcast threshold); popularity is one
-    * aggregate + global TakeOrderedAndProject whose k-row result is
-    * broadcast. The final window over the popularity list touches ≤ k
-    * rows by construction. */
   /** Branches 1+2 of the cold-start decision: per-user query vector with
     * its branch tag — known users ride their trained embedding, unknown
     * users with mapped history ride the history mean. Returned frame:
@@ -109,6 +82,33 @@ object Cascade {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("__cnt").desc, col("item_id"))).as("rank"))
 
+  /** 3-branch cold-start recall — the reference's full branch decision
+    * (`model_service/models.py:42-88`), composed as ONE lazy plan over a
+    * mixed user batch:
+    *
+    *   1. known user (has a trained embedding) → dot(user_emb, items)
+    *      top-k, history excluded (`models.py:47-62`);
+    *   2. unknown user with ≥1 history item that maps into the item
+    *      table → dot(mean(history item embeddings), items) top-k,
+    *      history excluded (`models.py:66-84`; repeats in the history
+    *      weight the mean, as the reference's index-list mean does);
+    *   3. otherwise → one global popularity top-k (interaction count,
+    *      item-id tie-break) fanned out to every such user — the
+    *      deterministic version of the reference's "first K item ids"
+    *      fallback (`models.py:85-87`).
+    *
+    * Inputs: `users` (user_id) — the request batch; `userEmb` (user_id,
+    * uemb); `history` (user_id, item_id); `items` (item_id, iemb);
+    * `interactions` (item_id) — the popularity evidence. Output:
+    * (user_id, branch, item_id, score, rank); branch ∈ {1,2,3}.
+    *
+    * Scale shape: branch selection is two anti-joins against the
+    * (small) user-embedding key set; the scoring body is the same
+    * broadcast crossJoin as [[recall]] (same precondition — swap in the
+    * ANN paths past the broadcast threshold); popularity is one
+    * aggregate + global TakeOrderedAndProject whose k-row result is
+    * broadcast. The final window over the popularity list touches ≤ k
+    * rows by construction. */
   def coldStartRecall(users: DataFrame, userEmb: DataFrame,
       history: DataFrame, items: DataFrame, interactions: DataFrame,
       k: Int): DataFrame = {

@@ -62,22 +62,22 @@ class LlmOpsSpec extends AnyFunSuite {
         .toDF("doc_id", "text"), allowMissingColumns = true)
     val xx = docs.select(
         Dedup.minHashSig($"text", 3, 16).as("native"),
-        Dedup.minHashSigHof($"text", 3, 16).as("hof"))
+        DedupHof.minHashSigHof($"text", 3, 16).as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(xx == 0, s"$xx xxhash signature mismatches")
     val md = docs.select(
         Dedup.minHashSigPortable($"text", 3, 8).as("native"),
-        Dedup.minHashSigPortableHof($"text", 3, 8).as("hof"))
+        DedupHof.minHashSigPortableHof($"text", 3, 8).as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(md == 0, s"$md md5 signature mismatches")
     val sh = docs.select(
         Dedup.simHash32Portable($"text").as("native"),
-        Dedup.simHash32PortableHof($"text").as("hof"))
+        DedupHof.simHash32PortableHof($"text").as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(sh == 0, s"$sh simhash32 signature mismatches")
     val sx = docs.select(
         Dedup.simHash64($"text").as("native"),
-        Dedup.simHash64Hof($"text").as("hof"))
+        DedupHof.simHash64Hof($"text").as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(sx == 0, s"$sx xxhash64 simhash mismatches")
   }
@@ -202,14 +202,18 @@ class LlmOpsSpec extends AnyFunSuite {
     val cents = c.orderBy(md5($"vec_id".cast("string")), $"vec_id")
       .limit(8).collect().map(_.getSeq[Double](1).toSeq).toSeq
     val centArr = array(cents.map(cv => array(cv.map(lit): _*)): _*)
-    val first4 = c.orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(4)
-    val ids4 = first4.select($"vec_id").as[Long].collect()
-    val res4 = first4.select(zip_with($"__cv",
+    // sim33's codebook source: md5 ranks 9–12, the rows after the centroids
+    val ids4 = c.orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(12)
+      .select($"vec_id").as[Long].collect().drop(8)
+    val res4 = c.where($"vec_id".isin(ids4: _*))
+      .orderBy(md5($"vec_id".cast("string")), $"vec_id")
+      .select(zip_with($"__cv",
         element_at(centArr,
           element_at(rankCells($"__cv", cents, 1), 1) + 1),
         (a, b) => a - b).as("__r"))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
     val cb = (0 until 4).map(s => res4.map(_.slice(s * 16, s * 16 + 16)))
+    assert(cb.flatten.flatten.exists(_ != 0.0), "degenerate all-zero codebooks")
     // query the codebook-source vectors against the corpus, probing every
     // cell: each one's residual IS a codebook entry, so its own LUT rows
     // are 0 at exactly its codes → ADC distance to itself must be 0.0
@@ -369,7 +373,7 @@ class LlmOpsSpec extends AnyFunSuite {
         .toDF("doc_id", "text"), allowMissingColumns = true)
     val mism = docs.select(
         Dedup.simHash64Portable($"text").as("native"),
-        Dedup.simHash64PortableHof($"text").as("hof"))
+        DedupHof.simHash64PortableHof($"text").as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(mism == 0, s"$mism simhash64 signature mismatches")
     // lo uses exactly the 32-bit rule (top bit of each hex digit)
@@ -396,7 +400,7 @@ class LlmOpsSpec extends AnyFunSuite {
         .toDF("doc_id", "text"), allowMissingColumns = true)
     val mism = docs.select(
         Dedup.simHash128Portable($"text").as("native"),
-        Dedup.simHash128PortableHof($"text").as("hof"))
+        DedupHof.simHash128PortableHof($"text").as("hof"))
       .where(not($"native" <=> $"hof")).count()
     assert(mism == 0, s"$mism simhash128 signature mismatches")
     // p0 ≡ the 32-bit signature, (p0, p1) ≡ the 64-bit halves — the

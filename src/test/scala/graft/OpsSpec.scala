@@ -568,6 +568,23 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1.0, 9L -> 1.0))
   }
 
+  test("connectedComponents fails loudly at its round cap, leaking no cache") {
+    // a 40-node path needs 39 label-moving rounds plus one quiet round;
+    // the default cap of 25 used to return 15 components silently
+    val path = (0L until 39L).map(i => (i, i + 1)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      ops.Graph.connectedComponents(path, "a", "b")
+    }
+    assert(e.getMessage.contains("maxIter = 25"), e.getMessage)
+    assert(e.getMessage.contains("(15 labels changed"), e.getMessage)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "leaked caches")
+    val got = ops.Graph.connectedComponents(path, "a", "b", maxIter = 40)
+      .select($"component").distinct().as[Long].collect()
+    assert(got.toSeq == Seq(0L))
+  }
+
   test("retention: cohort from first event, offsets count distinct users") {
     // bucket = 10: u1 first at 5 (cohort 0), active in buckets 0,1,3;
     // u2 first at 12 (cohort 1), active in 1,3; u3 first at 5, only 0
