@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Dev tool: write `df.explain("formatted")` output for named registry
   * queries to files — the plan evidence committed under `plans/r15/` —
   * and print one shuffle/join/scan audit line per query (the "would this
   * survive 100×" review loop): hash and single-partition exchanges,
   * broadcast-hash, sort-merge and broadcast-nested-loop joins,
-  * cartesian products and scans with pushed filters.
+  * cartesian products and scans with pushed filters — counted also over
+  * the `eager=` actions a query runs while built, appended to its file.
   *
   * Usage: `runMain graft.ExplainDump <outDir> <suffix> q1 q2 ...`
   * (env `SPARK_GRAFT_SF_DIR`; the [[LocalSession]] Bench plans under).
@@ -23,20 +27,31 @@ object ExplainDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
+    def plan(qe: QueryExecution) =
+      (qe.executedPlan.toString, qe.explainString(FormattedMode))
+    val eager = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        eager.add(plan(qe)): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(spark)
+        val plans = plan(df.queryExecution) +:
+          Iterator.continually(eager.poll()).takeWhile(_ != null).toSeq
+        val txt = plans.map(_._2).mkString("\n== eager action ==\n")
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))
-        val plan = df.queryExecution.executedPlan.toString
         println(f"[plan] $name%-22s " + audited.map { case (k, re) =>
-          s"$k=${re.r.findAllIn(plan).size}" }.mkString(" "))
+          s"$k=${plans.map(p => re.r.findAllIn(p._1).size).sum}"
+        }.mkString(" ") + s" eager=${plans.size - 1}")
       } catch { case e: Throwable =>
         println(s"[explain] $name FAILED: ${e.getMessage}")
       }
+      eager.clear()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

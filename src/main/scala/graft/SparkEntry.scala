@@ -1802,10 +1802,8 @@ object SparkEntry {
     * recompute on the induced subgraph, repeat. Bounded rounds like
     * g10 (full decomposition iterates to fixpoint; 3 rounds is the
     * production compromise and keeps the oracle unrollable). Each
-    * round: one degree aggregate + two semi-joins; round boundaries
-    * are [[graft.ops.Iterate.snapshot]]s — constant-size plans AND
-    * O(1)-round memory (the predecessor's blocks release as soon as
-    * the new round materializes). Output: surviving (item, degree). */
+    * round: one degree aggregate + two semi-joins on
+    * [[graft.ops.Iterate.rounds]]. Output: surviving (item, degree). */
   private val g12KCore: Q = (s, dir) => {
     val ui = Tables.orders(s, dir)
       .where(year(col("o_orderdate")) === 1995)
@@ -1813,24 +1811,21 @@ object SparkEntry {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("l_orderkey").as("b"), col("l_partkey").as("i"))
       .distinct()
-    var edges = graft.ops.Iterate.snapshot(
-      ui.as("x").join(ui.as("y"), "b")
-        .where(col("x.i") < col("y.i"))
-        .select(col("x.i").as("u"), col("y.i").as("v"))
-        .distinct())
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    for (_ <- 1 to 3) {
+    val (fin, _) = graft.ops.Iterate.rounds(
+      ui.as("x").join(ui.as("y"), "b")
+        .where(col("x.i") < col("y.i"))
+        .select(col("x.i").as("u"), col("y.i").as("v"))
+        .distinct(), 3, snapInit = true) { (edges, _) =>
       val keep = degrees(edges).where(col("d") >= 3).select(col("n"))
-      val prev = edges
-      edges = graft.ops.Iterate.snapshot(edges
+      Some(edges
         .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v")))
-      graft.ops.Iterate.release(prev)
     }
-    degrees(edges).select(col("n").as("item"), col("d").as("degree"))
+    degrees(fin).select(col("n").as("item"), col("d").as("degree"))
   }
 
   /** G7: Swing item similarity ([[ItemCf.swingPairs]]) — user-pair
@@ -3219,7 +3214,7 @@ object SparkEntry {
     // A/B: warm 3.0-3.3 s vs 3.5-5.1 s at sf0.1, oracle-exact, both
     // core counts) is only safe while the node-score frames fit the
     // broadcast budget. The gate lives INSIDE Graph.hits (r13 ADVICE +
-    // verdict item 5): auto mode estimates the distinct node counts —
+    // verdict item 5): it estimates the distinct node counts —
     // the quantity the broadcast actually ships, not an edge-count
     // proxy that permits multi-100MB score frames — with a separate HLL
     // `approx_count_distinct` job over the already-pinned frame, and
@@ -4068,11 +4063,9 @@ object SparkEntry {
   /** G17: k-hop reachability (BFS, 3 synchronous rounds) from the three
     * lowest-id nodes of the co-purchase graph — the traversal primitive
     * under "related within N hops" expansion and blast-radius queries.
-    * Each round is one join + min-aggregate over the frontier;
-    * [[graft.ops.Iterate.snapshot]] truncates lineage per round (the
-    * fixpoint lesson in PLANS.md), and 3 fixed rounds bound the work
-    * regardless of graph size. Distances are exact minima — a node
-    * reached twice keeps the earlier hop. */
+    * Each round is one join + min-aggregate over the frontier, and 3
+    * fixed rounds bound the work regardless of graph size. Distances are
+    * exact minima — a node reached twice keeps the earlier hop. */
   private val g17Khop: Q = (s, dir) => {
     val ui = Tables.orders(s, dir)
       .where(year(col("o_orderdate")) === 1995)
@@ -4087,23 +4080,18 @@ object SparkEntry {
     // loop-invariant: pinned on the per-hop probe key n (partitioned +
     // sorted + advertised — no per-hop shuffle of the edge side)
     val sym = graft.ops.Iterate.pin(
-      und.select(col("u").as("n"), col("v").as("m")).unionAll(
-        und.select(col("v").as("n"), col("u").as("m"))), col("n"))
+      Graph.symmetrize(und, "u", "v").toDF("n", "m"), col("n"))
     val seeds = sym.select(col("n")).distinct().orderBy(col("n")).limit(3)
       .withColumn("dist", lit(0L))
-    var dist = graft.ops.Iterate.snapshot(seeds)
-    for (r <- 1 to 3) {
+    val (fin, _) = graft.ops.Iterate.rounds(seeds, 3, snapInit = true,
+        pins = Seq(sym)) { (dist, r) =>
       val expanded = dist.join(sym, "n")
         .select(col("m").as("n"), lit(r.toLong).as("dist"))
-      val prev = dist
-      dist = graft.ops.Iterate.snapshot(
+      Some(
         dist.unionAll(expanded).groupBy(col("n"))
           .agg(min(col("dist")).as("dist")))
-      graft.ops.Iterate.release(prev)
     }
-    val out = dist.select(col("n").as("part"), col("dist"))
-    graft.ops.Iterate.unpin(sym)
-    out
+    fin.select(col("n").as("part"), col("dist"))
   }
 
   /** L9: partition-skew report — rows per month partition of the fact

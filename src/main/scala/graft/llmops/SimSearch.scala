@@ -1440,12 +1440,13 @@ object SimSearch {
       TopK.perGroup(scored, Seq(col("query_id")),
         Seq(col("rel").desc, col("item_id")), nCand)
       .drop("rank"), col("query_id"))
-    var selected = graft.ops.Iterate.snapshot(
+    val (fin, _) = graft.ops.Iterate.rounds(
       TopK.perGroup(cands, Seq(col("query_id")),
         Seq(col("rel").desc, col("item_id")), 1)
       .select(col("query_id"), col("item_id"),
-        round(col("rel"), 6).as("mmr"), lit(1L).as("step"), col("__cv")))
-    (2 to k).foreach { step =>
+        round(col("rel"), 6).as("mmr"), lit(1L).as("step"), col("__cv")),
+      k - 1, snapInit = true, pins = Seq(cands)) { (selected, i) =>
+      val step = i + 1
       val picked = selected.select(col("query_id"), col("item_id"))
       val remaining = cands
         .join(picked, Seq("query_id", "item_id"), "left_anti")
@@ -1463,18 +1464,8 @@ object SimSearch {
           Seq(col("__mmr").desc, col("item_id")), 1)
         .select(col("query_id"), col("item_id"), col("__mmr").as("mmr"),
           lit(step.toLong).as("step"), col("__cv"))
-      // snapshot boundary: materialize the new selection from its
-      // predecessor's stored blocks, then free the predecessor — one
-      // live step frame (not O(k)), and each step plans against a
-      // constant-size LogicalRDD leaf instead of a per-step-nested
-      // cached-plan tree (see [[graft.ops.Iterate]]).
-      val prev = selected
-      selected = graft.ops.Iterate.snapshot(prev.union(next))
-      graft.ops.Iterate.release(prev)
+      Some(selected.union(next))
     }
-    // the final selection is materialized (snapshots are eager), so the
-    // candidate pool releases now rather than waiting on the ContextCleaner
-    graft.ops.Iterate.unpin(cands)
-    selected.select(col("query_id"), col("item_id"), col("mmr"), col("step"))
+    fin.select(col("query_id"), col("item_id"), col("mmr"), col("step"))
   }
 }

@@ -256,40 +256,31 @@ object TextAnalysis {
     val words = docs
       .select(explode(TextFunctions.tokens(col(text))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
-    var syms = words
+    val syms = words
       .select(col("__w"), col("__n"),
         explode(sequence(lit(1), length(col("__w")))).as("__pos"))
       .select(col("__w"), col("__n"), col("__pos"),
         col("__w").substr(col("__pos"), lit(1)).as("__sym"))
-    // round boundaries are [[graft.ops.Iterate.snapshot]]s: each merge
-    // round's symbol frame is materialized behind a LogicalRDD leaf and
-    // its predecessor released — constant-size plans (a per-round persist
-    // chain nests every prior round's tree) and O(1)-round memory.
-    syms = graft.ops.Iterate.snapshot(syms)
     val merges = scala.collection.mutable.Buffer.empty[(Long, String, String, Long)]
     val byPos = Window.partitionBy(col("__w")).orderBy(col("__pos"))
-    var round = 1
-    var exhausted = false
-    while (round <= rounds && !exhausted) {
+    val (fin, _) = graft.ops.Iterate.rounds(syms, rounds,
+        snapInit = true) { (syms, round) =>
       val paired = syms.withColumn("__nxt", lead(col("__sym"), 1).over(byPos))
       val best = paired.where(col("__nxt").isNotNull)
         .groupBy(col("__sym"), col("__nxt")).agg(sum(col("__n")).as("__c"))
         .orderBy(col("__c").desc, col("__sym"), col("__nxt"))
         .limit(1).collect()
-      if (best.isEmpty) exhausted = true
+      if (best.isEmpty) None
       else {
         val (l, r, c) = (best(0).getString(0), best(0).getString(1),
           best(0).getLong(2))
         merges += ((round.toLong, l, r, c))
-        val prev = syms
-        syms = graft.ops.Iterate.snapshot(applyMerge(paired, l, r))
-        graft.ops.Iterate.release(prev)
-        round += 1
+        Some(applyMerge(paired, l, r))
       }
     }
     // `out` is a local relation (the merges were already fetched), so the
     // final round's blocks can be released before returning it.
-    graft.ops.Iterate.release(syms)
+    graft.ops.Iterate.release(fin)
     val out = merges.toSeq.toDF("merge_round", "lhs", "rhs", "pair_count")
     out
   }

@@ -70,12 +70,6 @@ object Graph {
     * (the intended use: grouping [[graft.llmops.Dedup]] candidate pairs
     * into duplicate clusters) diameters are tiny, so this beats the
     * O(log n) large-star/small-star scheme that pays more per round.
-    * Each round is one shuffle (groupBy node); round boundaries are
-    * [[Iterate.snapshot]]s — constant-size plans (a per-round persist
-    * nests the previous round's whole tree inside the InMemoryRelation,
-    * and AQE's per-stage explain render plus CacheManager matching then
-    * grow super-linearly in rounds), O(1)-round cache footprint, and
-    * the convergence-check action doesn't regrow lineage.
     *
     * Input: undirected edge list (pairs, either orientation). Output:
     * (node, component) for every node appearing in ≥ 1 edge. A graph
@@ -85,51 +79,37 @@ object Graph {
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    // pin the symmetrized edges: the upstream pair pipeline (often
-    // an expensive near-dup candidate generation) must not re-run per
-    // round, its (potentially huge) plan must not be nested by every
-    // round's tree, and the pin's partitioned+sorted layout on the
-    // probe key __m means no round re-shuffles or re-sorts the edge
-    // side (localCheckpoint would report UnknownPartitioning and pay
-    // both per round — see [[Iterate.pin]]). Symmetrize by exploding
-    // each edge into both orientations — a union of two selects would
-    // evaluate the upstream pipeline TWICE during this materialization
-    val sym = Iterate.pin(edges.select(explode(array(
-        struct(col(src).as("__n"), col(dst).as("__m")),
-        struct(col(dst).as("__n"), col(src).as("__m")))).as("__e"))
-      .select(col("__e.__n"), col("__e.__m")), col("__m"))
-    var cached = Iterate.snapshot(sym.select(col("__n")).distinct()
-      .select(col("__n"), col("__n").as("__lbl")))
-    var labels = cached
-    var iter = 0
-    var changed = -1L
-    try while (iter < maxIter && changed != 0) {
+    val sym = Iterate.pin(symmetrize(edges, src, dst), col("__m"))
+    // round i first counts round i-1's changes; round maxIter+1 only checks
+    val (fin, _) = Iterate.rounds(sym.select(col("__n")).distinct()
+      .select(col("__n"), col("__n").as("__lbl")), maxIter + 1,
+      snapInit = true, pins = Seq(sym)) { (cur, i) =>
+      val changed =
+        if (i == 1) -1L else cur.where(col("__lbl") =!= col("__old")).count()
+      if (changed != 0 && i > maxIter)
+        throw new IllegalStateException(s"connectedComponents did not " +
+          s"converge within maxIter = $maxIter rounds ($changed labels " +
+          "changed in the last round)")
+      val labels = cur.select(col("__n"), col("__lbl"))
       // one pass per round: carry the old label through the neighbor-min
       // aggregation so the convergence check is a filter over the same
       // materialized frame instead of a third join + shuffle
-      val next = Iterate.snapshot(
+      Option.when(changed != 0)(
         sym.join(labels.withColumnRenamed("__n", "__m"), "__m")
           .groupBy(col("__n")).agg(min(col("__lbl")).as("__nbr"))
           .join(labels, "__n")
           .select(col("__n"), col("__lbl").as("__old"),
             least(col("__lbl"), col("__nbr")).as("__lbl")))
-      changed = next.where(col("__lbl") =!= col("__old")).count()
-      Iterate.release(cached)
-      cached = next
-      labels = next.select(col("__n"), col("__lbl"))
-      iter += 1
-    } finally Iterate.unpin(sym)
-    if (changed != 0) {
-      Iterate.release(cached)
-      throw new IllegalStateException(s"connectedComponents did not " +
-        s"converge within maxIter = $maxIter rounds ($changed labels " +
-        "changed in the last round)")
     }
-    // the final labels stay materialized: the caller's action reads the
-    // stored fixpoint instead of recomputing every iteration's lineage;
-    // once the result goes unreferenced the ContextCleaner reclaims it
-    labels.select(col("__n").as(src), col("__lbl").as("component"))
+    fin.select(col("__n").as(src), col("__lbl").as("component"))
   }
+
+  /** Undirected edges as `(__n, __m)` rows both ways, in ONE explode. */
+  private[graft] def symmetrize(edges: DataFrame, src: String,
+      dst: String): DataFrame = edges.select(explode(array(
+        struct(col(src).as("__n"), col(dst).as("__m")),
+        struct(col(dst).as("__n"), col(src).as("__m")))).as("__e"))
+      .select(col("__e.__n"), col("__e.__m"))
 
   /** Synchronous label propagation (LPA) for community detection: every
     * node starts labeled with its own id; each round a node adopts the
@@ -152,10 +132,9 @@ object Graph {
     * previous localCheckpoint form reporting `UnknownPartitioning` and
     * re-shuffling + re-sorting the full edge set every round — at the
     * 100× corpus that was 3 × 240M rows of avoidable shuffle. Then the
-    * majority vote: by default ONE exchange — `mode(label,
+    * majority vote: ONE exchange — `mode(label,
     * deterministic = true)` per node (most-frequent, tie → smallest
-    * label) — never a rank window, never a second aggregate (see
-    * `fusedArgmax` below for the two-exchange alternative). Requires
+    * label) — never a rank window, never a second aggregate. Requires
     * NUMERIC node ids (every id in this engine is a long). All
     * partial-aggregated, nothing driver-side.
     *
@@ -174,25 +153,9 @@ object Graph {
     * guarantees distinct src<dst pairs (the usual case: a dedup'd pair
     * pipeline) to skip the symmetrize-side `.distinct()` — a pure
     * 2|E|-row shuffle otherwise (r8 A/B: −0.7 s on the bench query).
-    * Output (node, label) for every node with ≥ 1 edge.
-    *
-    * `fusedArgmax` picks the per-round majority plan: `true` (default,
-    * the r12 A/B winner — see PLANS.md "g10 fused-argmax A/B") fuses
-    * the frequency count and the argmax into ONE exchange via
-    * `mode(__lbl, deterministic = true)` (identical semantics:
-    * most-frequent label, tie → smallest — pinned ≡ by OpsSpec), an
-    * ObjectHashAggregate whose per-node partial is a label→count map,
-    * merged map-side, so the per-round shuffle carries ≤ one map per
-    * (node, partition) instead of the full (node, label) frequency
-    * frame; `false` runs the two-exchange count + `max(struct)` argmax
-    * (both plain codegen hash aggs over primitive rows) — the loser at
-    * bench scale (warm 6.4 s vs 4.2 s median on the g10 graph) kept
-    * for graphs whose per-node neighbor-label cardinality is so high
-    * that map-typed partials would spill where primitive rows
-    * would not. */
+    * Output (node, label) for every node with ≥ 1 edge. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-      rounds: Int, edgesDistinct: Boolean = false,
-      fusedArgmax: Boolean = true): DataFrame = {
+      rounds: Int, edgesDistinct: Boolean = false): DataFrame = {
     // pin the symmetrized edges — reused every round (the upstream
     // pair generation is often the expensive part), plan stays a
     // constant-size leaf, and the pin's __m layout makes every round's
@@ -200,58 +163,23 @@ object Graph {
     // floors the final aggregates' parallelism (AQE coalesces a small
     // shuffle below the core count, serializing the hash agg — r8 A/B:
     // 4× on the 600k-row distinct)
-    val symRaw = edges.select(explode(array(
-        struct(col(src).as("__n"), col(dst).as("__m")),
-        struct(col(dst).as("__n"), col(src).as("__m")))).as("__e"))
-      .select(col("__e.__n"), col("__e.__m"))
-    // labels are node ids and the tie-break is SMALLEST-label: numeric
-    // order under mode(deterministic=true), and the two-phase variant
-    // negates labels twice (max(struct(count, -label))) — on a string
-    // id the latter silently CASTS to double under non-ANSI mode and
-    // returns corrupted labels, and the former would flip to
-    // lexicographic order, so the two variants would diverge. Assert
-    // the numeric requirement up front for both.
+    val symRaw = symmetrize(edges, src, dst)
     val idType = symRaw.schema("__n").dataType
     require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"labelPropagation requires numeric node ids (the tie-break " +
-        s"negates labels); got ${idType.catalogString} — map ids through " +
+        s"is numeric order); got ${idType.catalogString} — map ids through " +
         "a dictionary index (DictIndex) first")
     val sym = Iterate.pin(
       if (edgesDistinct) symRaw else symRaw.distinct(), col("__m"))
-    var labels = sym.select(col("__n")).distinct()
+    val init = sym.select(col("__n")).distinct()
       .select(col("__n"), col("__n").as("__lbl"))
-    var cadence: Option[DataFrame] = None
-    for (i <- 1 to rounds) {
+    val (fin, _) = Iterate.rounds(init, rounds, every = 8,
+        pins = Seq(sym)) { (labels, _) =>
       val joined = sym
         .join(labels.select(col("__n").as("__m"), col("__lbl")), "__m")
-      labels =
-        if (fusedArgmax)
-          joined.groupBy(col("__n"))
-            .agg(mode(col("__lbl"), deterministic = true).as("__lbl"))
-        else {
-          val freq = joined
-            .groupBy(col("__n"), col("__lbl")).agg(count(lit(1)).as("__c"))
-          freq.groupBy(col("__n"))
-            .agg(max(struct(col("__c"), negate(col("__lbl")))).as("__t"))
-            .select(col("__n"),
-              negate(col("__t").getField("col2")).as("__lbl"))
-        }
-      if (i % 8 == 0 && i < rounds) {
-        val snap = Iterate.snapshot(labels)
-        cadence.foreach(Iterate.release)
-        cadence = Some(snap)
-        labels = snap
-      }
+      Some(joined.groupBy(col("__n"))
+        .agg(mode(col("__lbl"), deterministic = true).as("__lbl")))
     }
-    // materialize the fixpoint ONCE so the caller reads stored blocks
-    // and the edge snapshot can release deterministically
-    val fin = if (rounds > 0) Iterate.snapshot(labels) else labels
-    cadence.foreach(Iterate.release)
-    // rounds=0: fin is unmaterialized lineage over sym, so the pin must
-    // outlive this call — unlike checkpoint blocks, a cache entry is NOT
-    // ContextCleaner-reclaimed; it lives until the caller's session
-    // clears caches (the bench/verify between-query quiesce does)
-    if (rounds > 0) Iterate.unpin(sym)
     fin.select(col("__n").as(src), col("__lbl").as("label"))
   }
 
@@ -266,9 +194,6 @@ object Graph {
     * (shuffle on the src key) + one groupBy-sum on dst — identical
     * shuffle posture to [[propagate]], scale-safe because scores are
     * scalar rows, never gathered. Out-degrees are joined once up front.
-    * Like lightGcn, iterations recompute lineage by default (fastest at
-    * bench scale); pass a small `iters` or persist upstream for deep
-    * walks.
     *
     * Returns (id, score) for seeds and every node with ≥1 in-edge from a
     * reached node; unreached nodes are omitted (their score is 0). */
@@ -277,7 +202,7 @@ object Graph {
       iters: Int, damping: Double): DataFrame = {
     val r0 = seeds.select(col(seedCol).as("__id")).distinct()
       .withColumn("__e", lit(1.0))
-    var r = r0.select(col("__id"), col("__e").as("__r"))
+    val r = r0.select(col("__id"), col("__e").as("__r"))
     if (iters == 0)
       // zero-round walk never touches the edge table — return the
       // personalization vector without building (and leaking — a cache
@@ -295,56 +220,33 @@ object Graph {
       edges.select(col(src).as("__s"), col(dst).as("__t"))
         .join(deg.select(col(src).as("__s"), col("__deg")), "__s"),
       col("__s"))
-    for (i <- 1 to iters) {
+    val (fin, _) = Iterate.rounds(r, iters, pins = Seq(e)) { (r, _) =>
       val contrib = e.join(r, col("__s") === col("__id"))
         .groupBy(col("__t"))
         .agg(sum(col("__r") / col("__deg")).as("__c"))
         .select(col("__t").as("__id"), col("__c"))
-      val prev = r
-      r = Iterate.snapshot(r0.join(contrib, Seq("__id"), "full_outer")
+      Some(r0.join(contrib, Seq("__id"), "full_outer")
         .select(col("__id"),
           (coalesce(col("__e"), lit(0.0)) * (1.0 - damping) +
             lit(damping) * coalesce(col("__c"), lit(0.0))).as("__r")))
-      if (i > 1) Iterate.release(prev)
     }
-    // the final ranks are materialized, so the edge table releases now;
-    // the last snapshot goes to the ContextCleaner once unreferenced
-    // (iters > 0 is guaranteed by the early return above)
-    Iterate.unpin(e)
-    r.select(col("__id").as("id"), col("__r").as("score"))
+    fin.select(col("__id").as("id"), col("__r").as("score"))
   }
 
   /** Full LightGCN forward: `layers` propagation rounds, output = mean of
     * layer-0..layers embeddings (the reference's skip-connection average,
     * `model.py:60-95`).
     *
-    * `materialize`: persist the normalized edges and each layer for
+    * Layers are never persisted or snapshotted for
     * physical reuse. At bench scale recomputation is FASTER (the whole
     * lineage pipelines in memory; measured 0.7 s recompute vs 9 s persist
-    * vs 14 s localCheckpoint at sf0.1 / 2 layers), so the default is off.
-    * Turn it on for deep graphs or edge tables that don't fit the page
-    * cache — there the multiplicative lineage regrowth dominates. */
+    * vs 14 s localCheckpoint at sf0.1 / 2 layers). */
   def lightGcn(normEdges: DataFrame, nodes: DataFrame, layers: Int,
-      src: String, dst: String, id: String, emb: String,
-      materialize: Boolean = false): DataFrame = {
-    // With materialize on, each layer is persisted + eagerly computed and
-    // its PREDECESSOR is released immediately — the cache footprint stays
-    // O(1) layers (plus the edges), not O(depth). The edges and final
-    // layer remain cached for the caller's terminal action; a training
-    // loop should spark.catalog.clearCache() between full passes.
-    val ne = if (materialize) normEdges.persist() else normEdges
+      src: String, dst: String, id: String, emb: String): DataFrame = {
     var acc = nodes.select(col(id), col(emb).as("__sum"))
     var cur = nodes
-    var prev: Option[DataFrame] = None
     for (_ <- 1 to layers) {
-      val next = propagate(ne, cur, src, dst, id, emb)
-      cur = if (materialize) {
-        val p = next.persist()
-        p.count() // materialize before releasing the parent
-        prev.foreach(_.unpersist(false))
-        prev = Some(p)
-        p
-      } else next
+      cur = propagate(normEdges, cur, src, dst, id, emb)
       acc = acc.join(cur.withColumnRenamed(emb, "__l"), Seq(id), "left")
         .withColumn("__sum",
           when(col("__l").isNull, col("__sum"))
@@ -369,15 +271,14 @@ object Graph {
     * converges to the same ranking (power iteration is normalization-
     * invariant up to scale). Each half-step is one shuffle (groupBy on
     * the receiving side); the max is a broadcast scalar, not a sort.
-    * Round boundaries are [[Iterate.snapshot]]s — constant-size plans,
-    * O(1)-round memory.
+    * The loop is `2·rounds − 1` [[Iterate.rounds]] half-steps; the last
+    * hub half-step is never computed (only `a` is returned).
     *
     * Input: directed edge list src→dst (duplicates tolerated — distinct
     * below). Output: (dst, authority) for every dst, the `rounds`-round
     * authority score.
     *
-    * `broadcastScores`: `Some(b)` forces the plan (A/B harnesses);
-    * `None` (default) auto-gates on HLL ESTIMATES of the distinct node
+    * The plan auto-gates on HLL ESTIMATES of the distinct node
     * counts (`approx_count_distinct`) over the pinned frame — the
     * quantity the broadcast actually ships (the score frames are
     * node-sized, never edge-sized). The gate is one extra agg job, but
@@ -392,8 +293,7 @@ object Graph {
     * safe at default driver sizing, and at cluster scale (10⁹ nodes)
     * the gate degrades the SAME call to the shuffling plan. */
   def hits(edges: DataFrame, src: String, dst: String,
-      rounds: Int, broadcastScores: Option[Boolean] = None,
-      maxBroadcastNodes: Long = 1000000L): DataFrame = {
+      rounds: Int, maxBroadcastNodes: Long = 1000000L): DataFrame = {
     require(rounds >= 1, s"hits needs >= 1 round, got $rounds")
     // the edge table is probed on __s in the authority half-step and on
     // __t in the hub half-step — one layout cannot serve both, so pin
@@ -414,21 +314,15 @@ object Graph {
     // the approx agg is one partial-merged pass with no shuffle of the
     // distinct sets (the A/B in PLANS.md measured the exact form at
     // +0.3-0.4 s per invocation, the approx form within noise of the
-    // ungated plan).
-    val useBroadcast = broadcastScores.getOrElse {
+    // ungated plan). Lazy: the first half-step runs it, inside the loop.
+    lazy val useBroadcast = {
       val c = eByS.agg(approx_count_distinct(col("__s")).as("__ns"),
         approx_count_distinct(col("__t")).as("__nt")).head()
       math.max(c.getLong(0), c.getLong(1)) <= maxBroadcastNodes
     }
-    def maxNorm(df: DataFrame, key: String): DataFrame = {
-      val m = df.agg(max(col("__x")).as("__m"))
-      df.crossJoin(broadcast(m))
-        .select(col(key), (col("__x") / col("__m")).as("__x"))
-    }
     // h_0 = 1 on every source, so a_1's un-normalized form is in-degree
-    var h = eByS.select(col("__s")).distinct()
+    val h = eByS.select(col("__s")).distinct()
       .select(col("__s"), lit(1.0).as("__x"))
-    var a = h // placeholder; rounds >= 1 expected by callers
     // Two physical strategies per half-step, both reading the pinned
     // edge frames:
     //  - shuffling (default): join the score frame into the edge
@@ -436,7 +330,7 @@ object Graph {
     //    then exchange the |E|-sized joined frame to the RECEIVING key
     //    for the aggregate — two |E| exchanges per round. Safe at any
     //    node count.
-    //  - broadcastScores: join the (node-sized) score frame as a
+    //  - broadcast: join the (node-sized) score frame as a
     //    BROADCAST into the edge frame already laid out on the
     //    RECEIVING key (eByT for the authority step) — the broadcast
     //    hash join preserves the pin's partitioning, so the groupBy
@@ -447,26 +341,18 @@ object Graph {
     //    which is why auto mode gates on the pinned frame's distinct
     //    node count (both sides ≤ maxBroadcastNodes) and degrades to
     //    the shuffling plan past it.
-    for (i <- 1 to rounds) {
-      val aPrev = a
-      a = Iterate.snapshot(maxNorm(
-        (if (useBroadcast)
-          eByT.join(broadcast(h.select(col("__s"), col("__x").as("__h"))),
-            "__s")
-        else
-          eByS.join(h.select(col("__s"), col("__x").as("__h")), "__s"))
-          .groupBy(col("__t")).agg(sum(col("__h")).as("__x")), "__t"))
-      val hPrev = h
-      h = Iterate.snapshot(maxNorm(
-        (if (useBroadcast)
-          eByS.join(broadcast(a.select(col("__t"), col("__x").as("__a"))),
-            "__t")
-        else
-          eByT.join(a.select(col("__t"), col("__x").as("__a")), "__t"))
-          .groupBy(col("__s")).agg(sum(col("__a")).as("__x")), "__s"))
-      if (i > 1) { Iterate.release(aPrev); Iterate.release(hPrev) }
+    val (a, _) = Iterate.rounds(h, 2 * rounds - 1,
+        pins = Seq(eByT, eByS)) { (x, j) =>
+      val (from, to, w, byFrom, byTo) =
+        if (j % 2 == 1) ("__s", "__t", "__h", eByS, eByT)
+        else ("__t", "__s", "__a", eByT, eByS)
+      val scores = x.select(col(from), col("__x").as(w))
+      val sums = (if (useBroadcast) byTo.join(broadcast(scores), from)
+        else byFrom.join(scores, from))
+        .groupBy(col(to)).agg(sum(col(w)).as("__x"))
+      Some(sums.crossJoin(broadcast(sums.agg(max(col("__x")).as("__m"))))
+        .select(col(to), (col("__x") / col("__m")).as("__x")))
     }
-    if (rounds > 0) { Iterate.unpin(eByT); Iterate.unpin(eByS) }
     a.select(col("__t").as(dst), col("__x").as("authority"))
   }
 }

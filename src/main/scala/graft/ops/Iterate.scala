@@ -6,7 +6,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Round-boundary materialization for iterative (fixpoint) dataframe
   * algorithms: k-core peeling, connected components, label propagation,
-  * PageRank, greedy MMR, BPE merge rounds.
+  * PageRank, HITS, k-hop reach, greedy MMR, BPE merge rounds — each one
+  * binds onto [[rounds]], the one owner of the round policy.
   *
   * WHY NOT plain `persist()` per round: a persisted frame shortcuts
   * EXECUTION, but the Catalyst plan of round N still nests round N-1's
@@ -31,7 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * CacheManager never sees it. `release` frees a snapshot's blocks
   * deterministically (the ContextCleaner would eventually reclaim them
   * after GC, but a deep loop must not rely on GC timing for its memory
-  * bound).
+  * bound). A [[pin]] is a CacheManager entry the ContextCleaner never
+  * reclaims: [[rounds]] unpins on return or throw (releasing the live
+  * snapshot on a throw).
   *
   * CLUSTER CAVEAT: local checkpointing truncates lineage, so on a
   * multi-executor cluster a lost executor makes the snapshot's blocks
@@ -42,6 +45,31 @@ import org.apache.spark.storage.StorageLevel
   * local mode) local checkpoints are exactly as durable as cache.
   */
 object Iterate {
+
+  /** Fold `step` over one frame for ≤ `n` rounds (`None` stops early),
+    * [[snapshot]]ting round `i` when `every` divides `i` or `i == n`
+    * (`snapInit`: `init` too). Returns the final frame and rounds run. */
+  private[graft] def rounds(init: DataFrame, n: Int, every: Int = 1,
+      snapInit: Boolean = false, pins: Seq[DataFrame] = Nil)(
+      step: (DataFrame, Int) => Option[DataFrame]): (DataFrame, Int) = {
+    var live: Option[DataFrame] = None
+    def snap(df: DataFrame): DataFrame = {
+      val s = snapshot(df)
+      live.foreach(release)
+      live = Some(s)
+      s
+    }
+    def go(cur: DataFrame, i: Int): (DataFrame, Int) =
+      if (i >= n) (cur, i)
+      else step(cur, i + 1) match {
+        case None => (cur, i)
+        case Some(next) => go(
+          if ((i + 1) % every == 0 || i + 1 == n) snap(next) else next, i + 1)
+      }
+    try go(if (snapInit) snap(init) else init, 0)
+    catch { case e: Throwable => live.foreach(release); throw e }
+    finally pins.foreach(unpin)
+  }
 
   /** Materialize `df` (one job) and return a frame backed by the stored
     * partitions whose plan is a single `LogicalRDD` leaf. Use at every

@@ -526,26 +526,37 @@ class OpsSpec extends AnyFunSuite {
       4L -> 3L, 5L -> 3L, 6L -> 3L))
   }
 
-  test("labelPropagation: fused mode-aggregate plan ≡ two-phase argmax") {
-    // the fused plan (one exchange into mode(lbl, deterministic=true))
-    // must be label-for-label identical to the default count+argmax —
-    // same majority, same smallest-label tie-break. Checked on the
-    // hand-traced bridge fixture AND a denser synthetic graph whose
-    // rounds exercise real ties (ring + chords)
+  test("labelPropagation ≡ a driver-side majority model, across the every-8 snapshot cadence") {
+    // synchronous majority LPA, ties to the smallest label, on the
+    // hand-traced bridge fixture AND a denser ring + chords graph whose
+    // rounds exercise real ties; 17 rounds cross two cadence snapshots
+    def model(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+      val nbrs = (edges ++ edges.map(_.swap)).distinct.groupBy(_._1)
+        .map { case (n, es) => n -> es.map(_._2) }
+      (1 to rounds).foldLeft(nbrs.map { case (n, _) => n -> n }) { (lbl, _) =>
+        nbrs.map { case (n, ms) => n -> ms.groupBy(lbl).toSeq
+          .map { case (l, xs) => (-xs.size, l) }.min._2 }
+      }
+    }
     val bridge = Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)).toDF("a", "b")
+      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     val ring = (0L until 40L).map(i => (i, (i + 1) % 40)) ++
       (0L until 40L by 4).map(i => (i, (i + 13) % 40))
-    for (edges <- Seq(bridge, ring.toDF("a", "b"))) {
-      // fusedArgmax defaults to TRUE, so the two-phase side must be
-      // requested explicitly — with both sides on the default this
-      // test compared the fused plan to itself (r12 ADVICE)
-      val base = ops.Graph.labelPropagation(edges, "a", "b", rounds = 3,
-        fusedArgmax = false).as[(Long, Long)].collect().toMap
-      val fused = ops.Graph.labelPropagation(edges, "a", "b", rounds = 3,
-        fusedArgmax = true).as[(Long, Long)].collect().toMap
-      assert(fused == base)
+    for (edges <- Seq(bridge, ring); rounds <- Seq(0, 1, 3, 17)) {
+      val got = ops.Graph.labelPropagation(edges.toDF("a", "b"), "a", "b",
+        rounds).as[(Long, Long)].collect().toMap
+      assert(got == model(edges, rounds), s"rounds = $rounds")
     }
+  }
+
+  test("labelPropagation at rounds = 0 leaves no CacheManager entry (it used to leak its edge pin)") {
+    def entries = org.apache.spark.sql.graftshim.CacheProbe.entries(spark)
+    val before = entries
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    val got = ops.Graph.labelPropagation(edges, "a", "b", rounds = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(entries == before, "leaked a cache entry")
   }
 
   test("labelPropagation fails fast on string node ids (negate tie-break)") {
@@ -666,20 +677,42 @@ class OpsSpec extends AnyFunSuite {
 
   test("hits: broadcast-scores plan ≡ shuffling plan, value for value") {
     // the zero-|E|-exchange variant (scores broadcast into the
-    // receiving-key edge pin) must reproduce the default plan's
+    // receiving-key edge pin) must reproduce the shuffling plan's
     // authorities exactly at 6 dp — checked on the hand-traced star
-    // AND a denser two-hub graph where round-2 mass actually mixes
+    // AND a denser two-hub graph where round-2 mass actually mixes.
+    // maxBroadcastNodes = 0 forces the shuffling plan; the default
+    // budget broadcasts at this size
     val star = Seq((1L, 101L), (1L, 102L), (1L, 103L), (2L, 101L))
     val dense = (0L until 12L).flatMap(s =>
       (0L until 4L).map(j => (s, 100L + (s * 3 + j * 5) % 9)))
     for (edges <- Seq(star, dense)) {
       val e = edges.toDF("src", "dst")
-      def run(b: Boolean) = graft.ops.Graph
-        .hits(e, "src", "dst", rounds = 2, broadcastScores = Some(b))
+      def run(maxNodes: Long) = graft.ops.Graph
+        .hits(e, "src", "dst", rounds = 2, maxBroadcastNodes = maxNodes)
         .select($"dst", round($"authority", 6)).as[(Long, Double)]
         .collect().toMap
-      assert(run(true) == run(false))
+      assert(run(1000000L) == run(0L))
     }
+  }
+
+  test("Iterate.rounds: a round that throws drops its pin and live snapshot (a failed fixpoint used to leak both)") {
+    val sc = spark.sparkContext
+    def entries = org.apache.spark.sql.graftshim.CacheProbe.entries(spark)
+    val rdds = sc.getPersistentRDDs.keySet
+    val before = entries
+    val df = spark.range(100).toDF("__n")
+    val pinned = graft.ops.Iterate.pin(df, $"__n")
+    assert(entries == before + 1)
+    val e = intercept[IllegalStateException] {
+      graft.ops.Iterate.rounds(df, 5, snapInit = true,
+          pins = Seq(pinned)) { (cur, i) =>
+        if (i == 2) throw new IllegalStateException("round 2")
+        Some(cur.join(pinned, "__n"))
+      }
+    }
+    assert(e.getMessage == "round 2")
+    assert(sc.getPersistentRDDs.keySet == rdds, "leaked persisted RDDs")
+    assert(entries == before, "leaked a cache entry")
   }
 
   test("Iterate.snapshot truncates the plan and release frees the blocks") {
