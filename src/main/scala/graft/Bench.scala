@@ -412,15 +412,9 @@ object Bench {
       // pressure (in-run t22 measured 5.6 s vs 1.1 s isolated with the
       // identical plan). Dropping all cached plans between queries
       // reproduces isolated conditions; each query's own cold run
-      // rebuilds what it needs.
-      spark.catalog.clearCache()
-      // clearCache only drops CacheManager entries — local-checkpoint
-      // blocks (Iterate.snapshot finals that a query's consumer reads)
-      // are plain persistent RDDs and would otherwise accumulate across
-      // 190 queries, inflating GC and billing later heavies (observed:
-      // g10 26.6 s in-run vs 5.5 s isolated, run GC 55 s)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // rebuilds what it needs. Leftover local-checkpoint blocks go too
+      // (observed: g10 26.6 s in-run vs 5.5 s isolated, run GC 55 s).
+      LocalSession.quiesce(spark)
       // then collect the previous query's garbage so its old-gen
       // pressure doesn't bill the next timing
       System.gc()

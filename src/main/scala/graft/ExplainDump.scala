@@ -52,9 +52,7 @@ object ExplainDump {
         println(s"[explain] $name FAILED: ${e.getMessage}")
       }
       eager.clear()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      LocalSession.quiesce(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** The one local session the mains ([[Bench]], [[Verify]],
   * [[ExplainDump]], [[Smoke]], [[Replay]]) plan under, so their plans
@@ -36,5 +37,14 @@ private[graft] object LocalSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Between-query quiesce: drop every cached plan and persistent RDD
+    * (local-checkpoint blocks of [[graft.ops.Iterate.snapshot]] finals are
+    * not CacheManager entries), without `RDD.unpersist`'s lineage WARN. */
+  def quiesce(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(GraftSqlShim.unpersistRDD)
   }
 }

@@ -672,7 +672,7 @@ object SparkEntry {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
 
   /** LLM-D22: auto-sized embedding near-dup pairs
-    * ([[Dedup.embeddingPairsBandedAuto]]) — the band width is derived
+    * ([[Dedup.embeddingPairsBandedAutoPlanned]]) — the band width is derived
     * from the corpus count (`ceil(log2(ceil(n/target)))`, pure integer
     * bit-length math) so expected bucket size stays ≈ target as the
     * corpus grows. This is the scale path d6's FIXED 16-bit signature
@@ -812,8 +812,8 @@ object SparkEntry {
     * the scaling a fixed nCells=8 forfeits (its cells grow linearly
     * and every probe rescans n/2 of the corpus forever). Oracle-exact:
     * the DuckDB twin recomputes the cell count and ranks the same
-    * md5-ordered centroids. Production path = [[SimSearch.ivfTopKAuto]]
-    * (real k-means; same sizing). */
+    * md5-ordered centroids. Production path = [[SimSearch.ivfIndexAuto]]
+    * + [[SimSearch.ivfProbe]] (real k-means; same sizing). */
   private val sim15IvfAuto: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     SimSearch.ivfTopKPortableAuto(

@@ -13,12 +13,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // same between-query quiesce as Bench: cached plans AND leftover
-      // local-checkpoint blocks (Iterate.snapshot finals) would otherwise
-      // accumulate across ~190 sequential queries in one JVM
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      LocalSession.quiesce(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

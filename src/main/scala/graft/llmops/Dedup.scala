@@ -1105,47 +1105,13 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
-  /** Embedding-cosine near-dup pairs, brute-force form (delegates to
-    * SimSearch) — the exact small-n verifier; production path is
-    * [[embeddingPairsBanded]]. */
-  def embeddingPairs(embs: DataFrame, id: String, vec: String,
-      minCosine: Double): DataFrame =
-    SimSearch.cosinePairs(embs, id, vec, minCosine)
-
-  /** [[embeddingPairsBanded]] with the signature width auto-sized from
-    * the corpus count ([[graft.llmops.SimSearch.lshPairsAuto]]) — the
-    * variant a growing corpus actually runs: a FIXED width's expected
-    * bucket size grows linearly with n until every bucket trips the
-    * hot-bucket cap and is excluded (runtime defended, recall zero —
-    * the 100x d6 scale row measures exactly that wall, PLANS.md
-    * "Round 8: the fixed-signature capacity wall, measured"), while the
-    * auto width keeps expected bucket size ≈ targetBucketSize at any
-    * scale. */
-  def embeddingPairsBandedAuto(embs: DataFrame, id: String, vec: String,
-      dim: Int, minCosine: Double, bands: Int = 4,
-      targetBucketSize: Long = 1000L, maxBucket: Int = 2000): DataFrame =
-    SimSearch.lshPairsAuto(embs, id, vec, dim, minCosine, bands,
-      targetBucketSize, maxBucket)
-
-  /** Embedding-cosine near-dup pairs, banded-LSH form (delegates to
-    * `SimSearch.lshPairs`) — bucket-local candidate generation, no
-    * broadcast, no O(n²). The PLAN shape survives any scale, but a
-    * FIXED signature width does not: expected bucket size grows
-    * linearly with the corpus until the hot-bucket cap silently
-    * excludes everything (measured at 1000×: 100% of rows over-cap,
-    * zero pairs — PLANS.md round-8 capacity wall). Growing corpora use
-    * [[embeddingPairsBandedAuto]]; [[SimSearch.lshBucketHistogram]] is
-    * the audit that makes the wall visible. */
-  def embeddingPairsBanded(embs: DataFrame, id: String, vec: String,
-      dim: Int, minCosine: Double, nBits: Int = 16, bands: Int = 4,
-      maxBucket: Int = 2000): DataFrame =
-    SimSearch.lshPairs(embs, id, vec, dim, minCosine, nBits, bands, maxBucket)
-
-  /** [[embeddingPairsBanded]] with the band count chosen by
+  /** Embedding-cosine near-dup pairs, banded ([[SimSearch.lshPairs]]),
+    * with the band count chosen by
     * [[SimSearch.signBandPlan]] — the MinHash planner discipline
     * (declare an operating point, derive the fewest-qualifying-bands
     * layout, let the oracle replay the scan) applied to the sign-LSH
-    * family's fixed-width form. */
+    * family's fixed-width form; growing corpora use
+    * [[embeddingPairsBandedAutoPlanned]]. */
   def embeddingPairsBandedPlanned(embs: DataFrame, id: String,
       vec: String, dim: Int, minCosinePct: Int, nBits: Int,
       targetDetectPct: Int, maxBucket: Int = 2000): DataFrame = {
@@ -1155,7 +1121,7 @@ object Dedup {
       bands, maxBucket)
   }
 
-  /** [[embeddingPairsBandedAuto]] with the band count planned from the
+  /** [[SimSearch.lshPairsAuto]] pairs with the band count planned from the
     * operating point ([[SimSearch.lshPairsAutoPlanned]]): width from
     * the corpus count, bands from the recall target — both sizing
     * dimensions closed. */

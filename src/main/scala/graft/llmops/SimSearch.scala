@@ -518,16 +518,6 @@ object SimSearch {
     ivfIndex(corpus, cId, cVec, autoCellsOf(corpus, targetCellSize), seed,
       kmeansIter)
 
-  /** One-shot auto-sized IVF ANN ([[ivfIndexAuto]] + [[ivfProbe]]). */
-  def ivfTopKAuto(queries: DataFrame, corpus: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String,
-      k: Int, targetCellSize: Long, nProbe: Int, seed: Long = 42L,
-      kmeansIter: Int = 3): DataFrame = {
-    val (assigned, centDf) = ivfIndexAuto(corpus, cId, cVec,
-      targetCellSize, seed, kmeansIter)
-    ivfProbe(queries, assigned, centDf, qId, qVec, k, nProbe)
-  }
-
   /** IVF index build, split from the probe so one index serves many query
     * batches (the real ANN lifecycle: fit once per corpus snapshot,
     * persist/write `assigned`, probe per request batch). Returns
@@ -1372,7 +1362,8 @@ object SimSearch {
   }
 
   /** [[ivfTopKPortable]] with the cell count auto-sized from the corpus
-    * count ([[autoCells]]) — the oracle-exact twin of [[ivfTopKAuto]]:
+    * count ([[autoCells]]) — the oracle-exact twin of [[ivfIndexAuto]] +
+    * [[ivfProbe]]:
     * the DuckDB replay computes the same `least(4096, ceil(n/target))`
     * and ranks the same md5-ordered centroids, so the query stays
     * hash-exact at ANY fixture size, the d22/d24 dynamic-sizing

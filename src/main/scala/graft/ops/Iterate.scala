@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.storage.StorageLevel
 
 /** Round-boundary materialization for iterative (fixpoint) dataframe
@@ -91,10 +92,11 @@ object Iterate {
   /** Deterministically free the blocks behind a [[snapshot]] frame.
     * No-op for frames that are not local-checkpoint-backed (the match
     * finds no `LogicalRDD`), so callers may pass the loop's original
-    * input on round 1 without special-casing. */
+    * input on round 1 without special-casing (and without
+    * `RDD.unpersist`'s lineage WARN: losing that lineage is the point). */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false): Unit
+      case l: LogicalRDD => GraftSqlShim.unpersistRDD(l.rdd)
       case _ => ()
     }
 

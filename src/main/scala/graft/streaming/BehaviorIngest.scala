@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming re-expression of the reference's Kafka → Spark →
@@ -139,29 +139,15 @@ object BehaviorIngest {
     * must be unique per key within a batch (a CDC LSN/offset is), or
     * the latest-wins pick is arbitrary among the tied changes.
     *
-    * Crash safety of the snapshot swap: the commit sequence is
-    * write `.next` (Spark stamps `_SUCCESS` on completion) → rename
-    * live → `.old` → rename `.next` → live. A crash between the two
-    * renames leaves the live dir absent; [[recoverSwap]] runs at the
-    * top of every batch and rolls FORWARD (a `_SUCCESS`-complete
+    * Crash safety of the snapshot swap: the commit sequence
+    * ([[commitSwap]]) is write `.next` (Spark stamps `_SUCCESS` on
+    * completion) → rename live → `.old` → rename `.next` → live. A crash
+    * between the two renames leaves the live dir absent; [[recoverSwap]]
+    * runs at the top of every batch and rolls FORWARD (a `_SUCCESS`-complete
     * `.next` becomes live — its merge already happened) or BACK
     * (restore `.old`) before any read, so a replayed batch always
     * merges against the last complete snapshot instead of mistaking
     * the table for empty. All renames are checked. */
-  private[graft] def recoverSwap(tableDir: String): Unit = {
-    val live = new java.io.File(tableDir)
-    val nxt = new java.io.File(tableDir + ".next")
-    val bak = new java.io.File(tableDir + ".old")
-    def mustRename(from: java.io.File, to: java.io.File): Unit =
-      require(from.renameTo(to), s"rename $from -> $to failed")
-    if (!live.exists()) {
-      if (nxt.exists() && new java.io.File(nxt, "_SUCCESS").exists())
-        mustRename(nxt, live)   // write finished; complete the commit
-      else if (bak.exists())
-        mustRename(bak, live)   // write unfinished; restore prior snapshot
-    }
-  }
-
   def cdcApplySink(changes: DataFrame, key: String, seqCol: String,
       deleted: String, tableDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -186,17 +172,46 @@ object BehaviorIngest {
             graft.ops.Layout.mergeUpsert(base,
               compacted, Seq(key), col(deleted))
           }
-        val tmp = tableDir + ".next"
-        merged.write.mode("overwrite").parquet(tmp)
-        val old = new java.io.File(tableDir)
-        val bak = new java.io.File(tableDir + ".old")
-        if (bak.exists()) { bak.listFiles().foreach(_.delete()); bak.delete() }
-        if (old.exists())
-          require(old.renameTo(bak), s"rename $old -> $bak failed")
-        require(new java.io.File(tmp).renameTo(old), s"rename $tmp -> $old failed")
-        if (bak.exists()) { bak.listFiles().foreach(_.delete()); bak.delete() }
-        ()
+        commitSwap(merged, tableDir)
       }
+
+  /** The recovery half of [[cdcApplySink]]'s swap protocol. */
+  private[graft] def recoverSwap(tableDir: String): Unit = {
+    val (live, nxt, bak) = swapDirs(tableDir)
+    if (!live.exists()) {
+      if (nxt.exists() && new java.io.File(nxt, "_SUCCESS").exists())
+        mustRename(nxt, live)   // write finished; complete the commit
+      else if (bak.exists())
+        mustRename(bak, live)   // write unfinished; restore prior snapshot
+    }
+  }
+
+  /** The commit half: write `merged` to `.next` and swap it in, dropping
+    * a `.old` a crash after the second rename left behind. */
+  private def commitSwap(merged: DataFrame, tableDir: String): Unit = {
+    val (live, nxt, bak) = swapDirs(tableDir)
+    def dropOld(): Unit =
+      if (bak.exists()) { bak.listFiles().foreach(_.delete()); bak.delete() }
+    merged.write.mode("overwrite").parquet(nxt.getPath)
+    dropOld()
+    if (live.exists()) mustRename(live, bak)
+    mustRename(nxt, live)
+    dropOld()
+  }
+
+  private def swapDirs(tableDir: String) =
+    (new java.io.File(tableDir), new java.io.File(tableDir + ".next"),
+      new java.io.File(tableDir + ".old"))
+
+  private def mustRename(from: java.io.File, to: java.io.File): Unit =
+    require(from.renameTo(to), s"rename $from -> $to failed")
+
+  /** A stream gets a watermark on `tsCol`, then `stream`; a batch frame
+    * (the DuckDB oracle's twin) gets `batch` instead, no watermark. */
+  private def watermarked(df: DataFrame, tsCol: String, delay: String,
+      stream: DataFrame => DataFrame = identity,
+      batch: DataFrame => DataFrame = identity): DataFrame =
+    if (df.isStreaming) stream(df.withWatermark(tsCol, delay)) else batch(df)
 
   /** Event-time sliding-window activity aggregation — the design-doc
     * operator the reference never implemented (`README.md:503-507`):
@@ -209,7 +224,7 @@ object BehaviorIngest {
   def windowedActivity(events: DataFrame, tsCol: String,
       width: String, slide: String, watermark: String = "1 hour",
       itemCol: Option[String] = None): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark(tsCol, watermark) else events
+    val src = watermarked(events, tsCol, watermark)
     val aggs = count(lit(1)).as("n_events") ::
       itemCol.map(c => approx_count_distinct(col(c)).as("n_distinct_items")).toList
     src.groupBy(window(col(tsCol), width, slide), col("user_id"))
@@ -233,16 +248,13 @@ object BehaviorIngest {
     * re-delivery an idempotent upsert; for pipelines that must not emit a
     * duplicate downstream at all, drop re-deliveries of the same
     * (user, timestamp) within the watermark — bounded state, exact within
-    * the lateness budget. */
-  def dedupedEvents(parsed: DataFrame, watermark: String = "1 hour"): DataFrame = {
-    val withEventTime = parsed.withColumn("__et",
-      to_timestamp(from_unixtime(col("timestamp"))))
-    val src = if (parsed.isStreaming) withEventTime.withWatermark("__et", watermark)
-      else withEventTime
-    (if (parsed.isStreaming)
-      src.dropDuplicatesWithinWatermark("user_id", "timestamp")
-    else src.dropDuplicates("user_id", "timestamp")).drop("__et")
-  }
+    * the lateness budget. A batch frame gets a plain `dropDuplicates`. */
+  def dedupedEvents(parsed: DataFrame, watermark: String = "1 hour"): DataFrame =
+    watermarked(parsed.withColumn("__et",
+        to_timestamp(from_unixtime(col("timestamp")))), "__et", watermark,
+        _.dropDuplicatesWithinWatermark("user_id", "timestamp"),
+        _.dropDuplicates("user_id", "timestamp"))
+      .drop("__et")
 
   /** Stream-stream interval join (§2.12 / J4's streaming form): attribute
     * each purchase to the same user's views in the preceding `gap`.
@@ -260,11 +272,9 @@ object BehaviorIngest {
   def purchaseAttribution(views: DataFrame, purchases: DataFrame,
       tsCol: String = "ts", gap: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
-    def wm(df: DataFrame) =
-      if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
-    val v = wm(views).select(col("user_id").as("v_user"),
-      col(tsCol).as("v_ts"))
-    val p = wm(purchases).select(col("event_id"),
+    val v = watermarked(views, tsCol, watermark).select(
+      col("user_id").as("v_user"), col(tsCol).as("v_ts"))
+    val p = watermarked(purchases, tsCol, watermark).select(col("event_id"),
       col("user_id").as("p_user"), col(tsCol).as("p_ts"))
     p.join(v,
       col("v_user") === col("p_user") &&
@@ -272,13 +282,12 @@ object BehaviorIngest {
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $gap"))
   }
 
-  case class Behavior(user_id: String, history_items: Seq[String], timestamp: Long)
   case class Profile(user_id: String, history_items: Seq[String], timestamp: Long)
 
   /** Keyed-state "latest profile per user" operator — replaces the
     * reference's Redis `KEYS user_profile:*` polling (`model_service/
-    * main.py:64-83`) with native streaming state. Emits one updated profile
-    * per user per micro-batch.
+    * main.py:64-83`) with [[KeyedState.latestWins]] on `timestamp`: one
+    * profile per user per micro-batch, the newest seen so far.
     *
     * `ttl` mirrors the reference's Redis profile TTL design
     * (`README.md:519-527`): with e.g. `Some("24 hours")`, a user whose
@@ -291,80 +300,8 @@ object BehaviorIngest {
   def latestProfiles(parsed: DataFrame, ttl: Option[String] = None): Dataset[Profile] = {
     val spark = parsed.sparkSession
     import spark.implicits._
-    def newest(user: String, rows: Iterator[Behavior],
-        state: GroupState[Profile]): Profile = {
-      val n = (rows ++ state.getOption.map(p =>
-        Behavior(p.user_id, p.history_items, p.timestamp)))
-        .maxBy(_.timestamp)
-      Profile(user, n.history_items, n.timestamp)
-    }
-    val keyed = parsed.as[Behavior].groupByKey(_.user_id)
-    ttl match {
-      case None =>
-        keyed.mapGroupsWithState[Profile, Profile](GroupStateTimeout.NoTimeout) {
-          (user: String, rows: Iterator[Behavior], state: GroupState[Profile]) =>
-            val prof = newest(user, rows, state)
-            state.update(prof)
-            prof
-        }
-      case Some(duration) =>
-        // flatMap form: a timeout invocation must emit nothing (there is
-        // no new profile to report), which mapGroupsWithState cannot do
-        keyed.flatMapGroupsWithState[Profile, Profile](
-          OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout) {
-          (user: String, rows: Iterator[Behavior], state: GroupState[Profile]) =>
-            if (state.hasTimedOut) {
-              state.remove()
-              Iterator.empty
-            } else {
-              val prof = newest(user, rows, state)
-              state.update(prof)
-              state.setTimeoutDuration(duration)
-              Iterator.single(prof)
-            }
-        }
-    }
-  }
-
-  /** [[latestProfiles]] on Spark 4's state-v2 API (`transformWithState`):
-    * per-user `ValueState` with a NATIVE state TTL (`TTLConfig`) — the
-    * engine expires idle users' state itself, no timer bookkeeping, which
-    * is exactly the Redis-EXPIRE shape of the reference's profile store
-    * (`README.md:519-527`). Same emit contract as latestProfiles: one
-    * updated profile per user per micro-batch, stale re-arrivals dropped.
-    *
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...RocksDBStateStoreProvider`) — the state-v2 contract. */
-  def latestProfilesTws(parsed: DataFrame,
-      ttl: Option[java.time.Duration] = None): Dataset[Profile] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val processor = new StatefulProcessor[String, Behavior, Profile] {
-      @transient private var state: ValueState[Profile] = _
-      override def init(outputMode: OM, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[Profile]("latest",
-          Encoders.product[Profile], ttlConf)
-      override def handleInputRows(user: String, rows: Iterator[Behavior],
-          tv: TimerValues): Iterator[Profile] = {
-        val incoming = rows.maxBy(_.timestamp)
-        val cur = Option(state.get())
-        if (cur.forall(_.timestamp < incoming.timestamp)) {
-          val prof = Profile(user, incoming.history_items, incoming.timestamp)
-          state.update(prof)
-          Iterator.single(prof)
-        } else Iterator.empty
-      }
-    }
-    // a TTL'd state requires ProcessingTime mode (the TTL clock); without
-    // one, TimeMode.None keeps the query free of time bookkeeping
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    parsed.as[Behavior].groupByKey(_.user_id)
-      .transformWithState(processor, timeMode, OM.Update(),
-        Encoders.product[Profile])
+    KeyedState.latestWins(parsed.as[Profile].groupByKey(_.user_id), ttl)(
+      _.timestamp)
   }
 
   case class Scored(user_id: String, item_id: String, score: Double)
@@ -383,34 +320,22 @@ object BehaviorIngest {
     * (`eval_online/main/inference.py:72-104`). */
   def runningTopK(scored: Dataset[Scored], k: Int): Dataset[TopKUpdate] = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, StatefulProcessor, TimeMode, TimerValues, ValueState}
     val spark = scored.sparkSession
     import spark.implicits._
-    val processor = new StatefulProcessor[String, Scored, TopKUpdate] {
-      @transient private var state: ValueState[TopKUpdate] = _
-      override def init(outputMode: OM, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[TopKUpdate]("topk",
-          Encoders.product[TopKUpdate],
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
-      override def handleInputRows(user: String, rows: Iterator[Scored],
-          tv: TimerValues): Iterator[TopKUpdate] = {
-        val cur = Option(state.get())
-          .map(s => s.scores.zip(s.items)).getOrElse(Nil)
-        val merged = (cur ++ rows.map(r => (r.score, r.item_id)))
-          .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering,
-            Ordering.String).reverse)
-          .take(k)
-        if (merged == cur) Iterator.empty
-        else {
-          val next = TopKUpdate(user, merged.map(_._2), merged.map(_._1))
-          state.update(next)
-          Iterator.single(next)
-        }
+    KeyedState.valueState(scored.groupByKey(_.user_id), "topk",
+        Encoders.product[TopKUpdate], Encoders.product[TopKUpdate],
+        OutputMode.Update) { (user, state, rows) =>
+      val cur = state.map(s => s.scores.zip(s.items)).getOrElse(Nil)
+      val merged = (cur ++ rows.map(r => (r.score, r.item_id)))
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering,
+          Ordering.String).reverse)
+        .take(k)
+      if (merged == cur) (None, Iterator.empty)
+      else {
+        val next = TopKUpdate(user, merged.map(_._2), merged.map(_._1))
+        (Some(next), Iterator.single(next))
       }
     }
-    scored.groupByKey(_.user_id)
-      .transformWithState(processor, TimeMode.None(), OM.Update(),
-        Encoders.product[TopKUpdate])
   }
 
   case class FeatEvent(user_id: String, event_id: Long, ts: Long,
@@ -432,38 +357,27 @@ object BehaviorIngest {
   def rollingFeaturesStream(events: Dataset[FeatEvent],
       lastN: Int): Dataset[FeatRow] = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, StatefulProcessor, TimeMode, TimerValues, ValueState}
     val spark = events.sparkSession
     import spark.implicits._
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val processor = new StatefulProcessor[String, FeatEvent, FeatRow] {
-      @transient private var state: ValueState[FeatState] = _
-      override def init(outputMode: OM, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[FeatState]("rollfeat",
-          Encoders.product[FeatState],
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
-      override def handleInputRows(user: String, rows: Iterator[FeatEvent],
-          tv: TimerValues): Iterator[FeatRow] = {
-        var st = Option(state.get()).getOrElse(FeatState(0L, false, Nil))
-        // micro-batch rows re-sorted on (ts, event_id): arrival order
-        // within a batch is not the event-time order the batch twin uses
-        val out = rows.toSeq.sortBy(e => (e.ts, e.event_id)).map { e =>
-          val frame = (st.window :+ e.value).takeRight(lastN)
-          val sum = frame.foldLeft(0.0)(_ + _)
-          val row = FeatRow(e.event_id, user,
-            if (st.hasLast) Some(e.ts - st.lastTs) else None,
-            frame.size.toLong, r6(sum), r6(sum / frame.size))
-          st = FeatState(e.ts, true, frame.takeRight(lastN - 1))
-          row
-        }
-        state.update(st)
-        out.iterator
+    KeyedState.valueState(events.groupByKey(_.user_id), "rollfeat",
+        Encoders.product[FeatState], Encoders.product[FeatRow],
+        OutputMode.Append) { (user, state, rows) =>
+      var st = state.getOrElse(FeatState(0L, false, Nil))
+      // micro-batch rows re-sorted on (ts, event_id): arrival order
+      // within a batch is not the event-time order the batch twin uses
+      val out = rows.toSeq.sortBy(e => (e.ts, e.event_id)).map { e =>
+        val frame = (st.window :+ e.value).takeRight(lastN)
+        val sum = frame.foldLeft(0.0)(_ + _)
+        val row = FeatRow(e.event_id, user,
+          if (st.hasLast) Some(e.ts - st.lastTs) else None,
+          frame.size.toLong, r6(sum), r6(sum / frame.size))
+        st = FeatState(e.ts, true, frame.takeRight(lastN - 1))
+        row
       }
+      (Some(st), out.iterator)
     }
-    events.groupByKey(_.user_id)
-      .transformWithState(processor, TimeMode.None(), OM.Append(),
-        Encoders.product[FeatRow])
   }
 
   case class FunnelEvent(user_id: String, event_id: Long, ts: Long,
@@ -482,22 +396,15 @@ object BehaviorIngest {
     * timestamps per user: O(1), no history buffer. */
   def funnelStream(events: Dataset[FunnelEvent]): Dataset[FunnelRow] = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, StatefulProcessor, TimeMode, TimerValues, ValueState}
     val spark = events.sparkSession
     import spark.implicits._
-    val processor = new StatefulProcessor[String, FunnelEvent, FunnelRow] {
-      @transient private var state: ValueState[FunnelRow] = _
-      override def init(outputMode: OM, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[FunnelRow]("funnel",
-          Encoders.product[FunnelRow],
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
-      override def handleInputRows(user: String, rows: Iterator[FunnelEvent],
-          tv: TimerValues): Iterator[FunnelRow] = {
-        var st = Option(state.get())
-          .getOrElse(FunnelRow(user, None, None, None, 0L))
-        var advanced = false
-        rows.toSeq.sortBy(e => (e.ts, e.event_id)).foreach { e =>
-          val next = e.event_type match {
+    KeyedState.valueState(events.groupByKey(_.user_id), "funnel",
+        Encoders.product[FunnelRow], Encoders.product[FunnelRow],
+        OutputMode.Update) { (user, state, rows) =>
+      val start = state.getOrElse(FunnelRow(user, None, None, None, 0L))
+      val st = rows.toSeq.sortBy(e => (e.ts, e.event_id))
+        .foldLeft(start) { (st, e) =>
+          e.event_type match {
             case "view" if st.t_view.isEmpty =>
               st.copy(t_view = Some(e.ts), depth = 1L)
             case "click" if st.t_click.isEmpty &&
@@ -508,25 +415,18 @@ object BehaviorIngest {
               st.copy(t_purchase = Some(e.ts), depth = 3L)
             case _ => st
           }
-          if (next != st) { st = next; advanced = true }
         }
-        if (advanced) { state.update(st); Iterator.single(st) }
-        else Iterator.empty
-      }
+      if (st == start) (None, Iterator.empty)
+      else (Some(st), Iterator.single(st))
     }
-    events.groupByKey(_.user_id)
-      .transformWithState(processor, TimeMode.None(), OM.Update(),
-        Encoders.product[FunnelRow])
   }
 
   case class TypedEvent(user_id: Long, event_type: String, ts: Long,
     event_id: Long)
-  case class LastType(user_id: Long, event_type: String, ts: Long,
-    event_id: Long)
 
   /** Streaming next-event prediction — the serving half of the m14
     * Markov recommender: keyed state tracks each user's LATEST event
-    * type (max (ts, event_id), the s12 snapshot rule, so late
+    * type ([[KeyedState.latestWins]] on (ts, event_id), the s12 rule, so late
     * re-deliveries can't regress the state), and each update joins the
     * broadcast PRE-RANKED transition matrix
     * ([[graft.ops.Behavior.transitionTopK]] — batch-trained, ≤|types|·k
@@ -537,17 +437,9 @@ object BehaviorIngest {
       : DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val latest = events.as[TypedEvent].groupByKey(_.user_id)
-      .mapGroupsWithState[LastType, LastType](GroupStateTimeout.NoTimeout) {
-        (u: Long, rows: Iterator[TypedEvent], state: GroupState[LastType]) =>
-          val n = (rows ++ state.getOption.map(p =>
-            TypedEvent(p.user_id, p.event_type, p.ts, p.event_id)))
-            .maxBy(r => (r.ts, r.event_id))
-          val lt = LastType(u, n.event_type, n.ts, n.event_id)
-          state.update(lt)
-          lt
-      }
-    latest.toDF()
+    KeyedState.latestWins(events.as[TypedEvent].groupByKey(_.user_id),
+        None)(r => (r.ts, r.event_id))
+      .toDF()
       .join(broadcast(rankedTrans), col("event_type") === col("from_type"))
       .select(col("user_id"), col("event_type").as("cur_type"),
         col("to_type").as("next_type"), col("p"), col("rank"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Mechanics (same math as the batch op, via the SHARED signature and
   * band-key expressions, so stream ≡ batch is testable, not aspirational):
   * each doc's portable MinHash signature is split into `bands` band
-  * keys; the stream is keyed by band key; per key a state-v2 `ListState`
+  * keys; the stream is keyed by band key; per key a state-v2 value
   * holds the (doc, signature) claims seen so far, capped at
   * `maxClaimants` — the stream-shaped hot-bucket cap (the batch op caps
   * with a window count for the same reason: a degenerate bucket's
@@ -45,13 +45,16 @@ object StreamingDedup {
   /** An incoming doc matched a previously-claimed doc in some band. */
   case class DupCandidate(doc_id: Long, dup_of: Long, est_jaccard: Double)
 
-  /** Stored claimant of a band bucket (state rows). Public and
-    * object-nested (not method-local, not `private`): the state encoder's
+  /** Stored claimant of a band bucket. Public and object-nested (not
+    * method-local, not `private`), like [[Bucket]]: the state encoder's
     * generated projection lives in a Janino class outside this file, and
     * a `private` member fails compilation there — Spark then silently
     * falls back to INTERPRETED per-row projection for every state access
     * (observed as `Expr codegen error` warnings in the suite log). */
   case class Claim(doc_id: Long, sig: Seq[Long])
+
+  /** One band bucket's state: its claimants in claim order. */
+  case class Bucket(claims: Seq[Claim])
 
   /** Project a (doc_id, text) frame — batch or streaming — onto exploded
     * band rows with the portable signature. Degenerate empty-shingle docs
@@ -76,48 +79,38 @@ object StreamingDedup {
 
   /** The stateful core: band-keyed claims, match-then-claim per doc.
     * Rows within a micro-batch are processed in ascending doc_id order so
-    * results don't depend on shuffle arrival order. Requires the RocksDB
-    * state store provider (state-v2 contract). */
+    * results don't depend on shuffle arrival order. State is a
+    * [[KeyedState.valueState]] [[Bucket]], rewritten only when a doc
+    * claims a place in it. */
   def nearDupStream(banded: Dataset[BandRow], numHashes: Int,
       minJaccard: Double, maxClaimants: Int = 16,
       ttl: Option[java.time.Duration] = None): Dataset[DupCandidate] = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ListState, OutputMode => OM, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+    import org.apache.spark.sql.streaming.OutputMode
     val spark = banded.sparkSession
     import spark.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val processor = new StatefulProcessor[String, BandRow, DupCandidate] {
-      @transient private var claims: ListState[Claim] = _
-      override def init(outputMode: OM, timeMode: TimeMode): Unit =
-        claims = getHandle.getListState[Claim]("claims",
-          Encoders.product[Claim], ttlConf)
-      override def handleInputRows(key: String, rows: Iterator[BandRow],
-          tv: TimerValues): Iterator[DupCandidate] = {
-        val stored = scala.collection.mutable.ArrayBuffer.from(claims.get())
-        val out = Seq.newBuilder[DupCandidate]
-        var appended = false
-        rows.toSeq.sortBy(_.doc_id).foreach { r =>
-          stored.foreach { c =>
-            val eq = r.sig.iterator.zip(c.sig.iterator).count {
-              case (a, b) => a == b
-            }
-            val est = eq.toDouble / numHashes
-            if (est >= minJaccard) out += DupCandidate(r.doc_id, c.doc_id, est)
+    KeyedState.valueState(banded.groupByKey(_.key), "claims",
+        Encoders.product[Bucket], Encoders.product[DupCandidate],
+        OutputMode.Append, ttl) { (_, state, rows) =>
+      val stored = scala.collection.mutable.ArrayBuffer
+        .from(state.fold(Seq.empty[Claim])(_.claims))
+      val out = Seq.newBuilder[DupCandidate]
+      var appended = false
+      rows.toSeq.sortBy(_.doc_id).foreach { r =>
+        stored.foreach { c =>
+          val eq = r.sig.iterator.zip(c.sig.iterator).count {
+            case (a, b) => a == b
           }
-          if (stored.length < maxClaimants) {
-            stored += Claim(r.doc_id, r.sig)
-            appended = true
-          }
+          val est = eq.toDouble / numHashes
+          if (est >= minJaccard) out += DupCandidate(r.doc_id, c.doc_id, est)
         }
-        if (appended) claims.put(stored.toArray)
-        out.result().iterator
+        if (stored.length < maxClaimants) {
+          stored += Claim(r.doc_id, r.sig)
+          appended = true
+        }
       }
+      (Option.when(appended)(Bucket(stored.toSeq)), out.result().iterator)
     }
-    val timeMode =
-      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    banded.groupByKey(_.key)
-      .transformWithState(processor, timeMode, OM.Append(),
-        Encoders.product[DupCandidate])
   }
 
   /** Composition: docs stream → band rows → match-then-claim. */

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -38,4 +39,10 @@ object GraftSqlShim {
   /** Block until every event posted so far has reached its listeners. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Free an RDD's cached blocks (non-blocking) through the context's
+    * `private[spark]` unpersist — the same call `RDD.unpersist` makes,
+    * minus its WARN for a locally checkpointed RDD. */
+  def unpersistRDD(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -694,7 +694,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("embedding cosine pairs are symmetric-free and above threshold") {
     val emb = Tables.embeddings(spark, TestSpark.sf).limit(100)
-    val pairs = Dedup.embeddingPairs(emb, "vec_id", "embedding", -1.0)
+    val pairs = SimSearch.cosinePairs(emb, "vec_id", "embedding", -1.0)
       .as[(Long, Long, Double)].collect()
     assert(pairs.nonEmpty)
     pairs.foreach { case (a, b, c) =>

@@ -16,6 +16,20 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Run `body` under the RocksDB state store provider (the state-v2
+    * contract) and restore the session's previous provider after. */
+  private def withStateV2(body: => Unit): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("IndexMonitor.cellDriftStream: stream ≡ batch, drift joins the fit baseline") {
     implicit val sql = spark.sqlContext
     import graft.streaming.IndexMonitor
@@ -185,6 +199,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(out("u1") == 300L && out("u2") == 200L)
   }
 
+  test("latestProfiles re-emits the stored profile when an older event re-arrives") {
+    implicit val sql = spark.sqlContext
+    val mem = MemoryStream[String]
+    val ckpt = java.nio.file.Files.createTempDirectory("rearrival_ck").toString
+    val q = BehaviorIngest.latestProfiles(BehaviorIngest.parse(mem.toDF()))
+      .writeStream.outputMode("update").option("checkpointLocation", ckpt)
+      .format("memory").queryName("rearrival_profiles").start()
+    mem.addData(msgs(2)) // u1 @ ts 300
+    q.processAllAvailable()
+    mem.addData(msgs(0)) // u1 again, with an OLDER timestamp (100)
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("rearrival_profiles")
+      .as[(String, Seq[String], Long)].collect().toSeq
+    // one emit per batch, both the ts=300 profile: the incoming row loses
+    // the fold against the stored one
+    assert(out == Seq.fill(2)(("u1", Seq("i1", "i2", "i4"), 300L)),
+      out.toString)
+    // and the engine's state still holds ts=300 after the re-arrival
+    val stored = spark.read.format("statestore").load(ckpt)
+      .select($"key.value", $"value.groupState.timestamp")
+      .as[(String, Long)].collect().toSeq
+    assert(stored == Seq(("u1", 300L)), stored.toString)
+  }
+
   test("latestProfiles with a TTL drops a stale user's state after the timeout") {
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[String]
@@ -216,59 +255,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(dropped, "stale state survived the TTL: ts=100 never emitted")
   }
 
-  test("latestProfilesTws (state-v2) matches the keyed-state contract + native TTL") {
-    implicit val sql = spark.sqlContext
-    // state-v2 requires the RocksDB provider; restore the default after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[String]
-      val profiles = BehaviorIngest.latestProfilesTws(
-        BehaviorIngest.parse(mem.toDF()),
-        ttl = Some(java.time.Duration.ofMillis(500)))
-      val q = profiles.writeStream.outputMode("update")
-        .format("memory").queryName("tws_profiles").start()
-      // NOTE: with a TTL the query runs in ProcessingTime mode, where the
-      // engine schedules batches continuously to advance the TTL clock —
-      // `processAllAvailable` never latches (same as the
-      // ProcessingTimeTimeout test above). Poll the sink with a deadline.
-      def rows() = spark.table("tws_profiles")
-        .as[(String, Seq[String], Long)].collect().toSeq
-      def await(pred: => Boolean): Boolean = {
-        val deadline = System.currentTimeMillis + 20000
-        while (!pred && System.currentTimeMillis < deadline) Thread.sleep(50)
-        pred
-      }
-      mem.addData(msgs(0), msgs(1)) // u1@100, u2@200
-      assert(await(rows().toSet == Set(("u1", Seq("i1", "i2"), 100L),
-        ("u2", Seq("i3"), 200L))), s"initial emits missing: ${rows()}")
-      mem.addData(msgs(2)) // u1@300 — newer, emitted
-      assert(await(rows().count(_._1 == "u1") == 2))
-      mem.addData(msgs(0)) // u1@100 again — stale vs live state, dropped
-      Thread.sleep(300) // < TTL; give the stale row a chance to (not) leak
-      assert(rows().count(_._1 == "u1") == 2, "stale re-arrival leaked through")
-      Thread.sleep(800) // > TTL: state expires (checked lazily on read)
-      mem.addData(msgs(0)) // state gone -> the re-arrival is a fresh insert
-      assert(await(rows().count(r => r._1 == "u1" && r._3 == 100L) == 2),
-        "TTL-expired state should re-admit the old profile")
-      q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("runningTopK (state-v2) converges to the batch graft_topk answer") {
     implicit val sql = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
       val batch1 = Seq(("u1", "a", 1.0), ("u1", "b", 3.0), ("u2", "x", 5.0))
       val batch2 = Seq(("u1", "c", 2.0), ("u1", "d", 0.5), ("u2", "x", 5.0),
         ("u1", "e", 3.0)) // u2 re-arrival duplicates x (multiset, like the agg)
@@ -299,21 +288,12 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => r._1 -> r).toMap
       assert(finalByUser("u1") == expect("u1"))
       assert(finalByUser("u2") == expect("u2"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("rollingFeaturesStream (state-v2) equals batch rollingFeatures") {
     implicit val sql = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
       // per-user event-time order across batches (the streaming contract);
       // batch 1 arrives shuffled WITHIN the batch to exercise the re-sort
       val batch1 = Seq(("u1", 3L, 30L, 6.0), ("u1", 1L, 10L, 2.0),
@@ -339,21 +319,12 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, String, Option[Long], Long, Double, Double)]
         .collect().toSet
       assert(got == expect)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("funnelStream (state-v2) final state equals the batch funnel") {
     implicit val sql = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
       // u1 full funnel split across batches; u2 purchases before
       // clicking (depth stalls at 2); u3 views only; u4 clicks with no
       // view (never enters). Batch 1 arrives shuffled within the batch.
@@ -390,11 +361,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == batch)
       assert(got("u1")._5 == 3L && got("u2")._5 == 2L &&
         got("u3")._5 == 1L && !got.contains("u4"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -451,11 +417,7 @@ class StreamingSpec extends AnyFunSuite {
     // input (same claims, same matches), i.e. the planner only CHOOSES,
     // the operator semantics are untouched
     assert(graft.llmops.Dedup.bandPlan(16, 0.5, 80) == ((8, 2)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
     val docs = Tables.documents(spark, TestSpark.sf)
       .select($"doc_id".cast("long"), $"text").as[(Long, String)]
       .collect().take(200)
@@ -479,11 +441,6 @@ class StreamingSpec extends AnyFunSuite {
         maxClaimants = 100000))
     assert(planned == explicit,
       s"planned ${planned.size} pairs vs explicit ${explicit.size}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1176,11 +1133,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming near-dup (state-v2) matches the batch incremental dedup") {
     implicit val sql = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
       val docs = Tables.documents(spark, TestSpark.sf)
         .select($"doc_id".cast("long"), $"text").as[(Long, String)].collect()
       val base = docs.filter(_._1 % 2 == 0)
@@ -1210,21 +1163,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(expect.nonEmpty, "fixture produced no cross-side near-dups")
       assert(got == expect,
         s"stream ${got.size} pairs vs batch ${expect.size}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming near-dup TTL re-baselines: expired claims stop matching") {
     implicit val sql = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateV2 {
       val text = "the quick brown fox jumps over the lazy dog tonight"
       val mem = MemoryStream[(Long, String)]
       val out = graft.streaming.StreamingDedup.nearDups(
@@ -1256,11 +1200,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows().forall(r => r._1 != 4L || r._2 == 3L),
         s"doc 4 matched an expired claim: ${rows()}")
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
