@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev tool: write `df.explain("formatted")` output for named registry
@@ -10,11 +12,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * broadcast-hash, sort-merge and broadcast-nested-loop joins,
   * cartesian products and scans with pushed filters — counted also over
   * the `eager=` actions a query runs while built, appended to its file.
+  * `globalWin=` counts window operators without `partitionBy` (each runs
+  * on one task; Spark logs "WindowExec: No Partition Defined" whenever
+  * one is planned), so that WARN is attributed per query.
   *
   * Usage: `runMain graft.ExplainDump <outDir> <suffix> q1 q2 ...`
   * (env `SPARK_GRAFT_SF_DIR`; the [[LocalSession]] Bench plans under).
   * Each query writes `<outDir>/<name>_<suffix>.txt`. */
-object ExplainDump {
+object ExplainDump extends AdaptiveSparkPlanHelper {
   private val audited = Seq("shuf" -> "Exchange hashpartitioning",
     "single" -> "Exchange SinglePartition", "bhj" -> "BroadcastHashJoin",
     "smj" -> "SortMergeJoin", "bnlj" -> "BroadcastNestedLoopJoin",
@@ -28,8 +33,10 @@ object ExplainDump {
     val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
     def plan(qe: QueryExecution) =
-      (qe.executedPlan.toString, qe.explainString(FormattedMode))
-    val eager = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+      (qe.executedPlan.toString, qe.explainString(FormattedMode),
+        collect(qe.executedPlan) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w }.size)
+    val eager = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         eager.add(plan(qe)): Unit
@@ -47,7 +54,8 @@ object ExplainDump {
           txt.getBytes("UTF-8"))
         println(f"[plan] $name%-22s " + audited.map { case (k, re) =>
           s"$k=${plans.map(p => re.r.findAllIn(p._1).size).sum}"
-        }.mkString(" ") + s" eager=${plans.size - 1}")
+        }.mkString(" ") + s" eager=${plans.size - 1}" +
+          s" globalWin=${plans.map(_._3).sum}")
       } catch { case e: Throwable =>
         println(s"[explain] $name FAILED: ${e.getMessage}")
       }

@@ -3,7 +3,7 @@ package graft
 import graft.evalx.Metrics
 import graft.functions.{Features, KmvAgg, SketchFunctions, TextFunctions, VectorOps}
 import graft.llmops.{Dedup, SimSearch, TextAnalysis}
-import graft.ops.{AsOf, Behavior, DictIndex, Graph, Layout, PrefixWindow, Sampling, TopK, Validate}
+import graft.ops.{AsOf, Behavior, Graph, Layout, PrefixSum, PrefixWindow, Sampling, TopK, Validate}
 import graft.recall.{Cascade, ItemCf, NeuralForward, NeuralOracle}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -225,9 +225,10 @@ object SparkEntry {
         count(lit(1)).as("n"))
 
   /** J2: id → dense index dictionary (deterministic StringIndexer) via
-    * the two-level zipWithIndex lowering — no single-partition window. */
+    * a [[PrefixSum]] prefix count over the distinct ids — no
+    * single-partition window over the data. */
   private val j2DictIndex: Q = (s, dir) =>
-    DictIndex.denseIds(Tables.events(s, dir), "user_id", "user_idx")
+    PrefixSum.denseIds(Tables.events(s, dir), "user_id", "user_idx")
 
   /** J4: range join — events of the same user within ±1 h of each purchase
     * (bucketized-equi lowering, SURVEY §2.3 J4). */
@@ -1498,7 +1499,7 @@ object SparkEntry {
     val scored = Tables.events(s, dir).select(col("event_id"),
       (-col("value") / 500.0).as("__neg"),
       when(col("event_type") === "purchase", 1.0).otherwise(0.0).as("__y"))
-    val ranked = graft.ops.PrefixSum.ranges(scored,
+    val ranked = PrefixSum.ranges(scored,
       Seq("__neg", "event_id"), lit(1L), "__lo", "__hi")
     val n = broadcast(scored.agg(count(lit(1)).as("__n"),
       sum(col("__y")).as("__pos")))
@@ -1563,7 +1564,7 @@ object SparkEntry {
     * md5-of-id order — a deterministic random permutation), λ ∈
     * [0.3, 0.7) from the hash: the vicinal-risk augmentation recipe
     * (Zhang et al. 2018) as a relational transform. The global rank
-    * rides [[DictIndex.denseIds]]' two-level lowering, so no
+    * is [[PrefixSum.denseIds]] over the hashes, so no
     * single-partition window; output pins the pairing, λ, label pair
     * and the mixed-vector checksum λ·Σa + (1−λ)·Σb. */
   private val x18Mixup: Q = (s, dir) => {
@@ -1571,7 +1572,7 @@ object SparkEntry {
       col("embedding").cast("array<double>").as("v"),
       col("label").cast("long").as("label"),
       md5(col("vec_id").cast("string")).as("__h"))
-    val withIdx = emb.join(DictIndex.denseIds(emb, "__h", "__idx"), "__h")
+    val withIdx = emb.join(PrefixSum.denseIds(emb, "__h", "__idx"), "__h")
     val sumV: Column => Column =
       v => aggregate(v, lit(0.0), (acc, x) => acc + x)
     val lam = (conv(substring(col("__h"), 1, 4), 16, 10).cast("long") % 400)
@@ -1600,7 +1601,7 @@ object SparkEntry {
   private val x20RankNormalize: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("value"))
-    graft.ops.PrefixSum.ranges(ev, Seq("value", "event_id"), lit(1L),
+    PrefixSum.ranges(ev, Seq("value", "event_id"), lit(1L),
         "__lo", "__hi")
       .crossJoin(broadcast(ev.agg(count(lit(1)).as("__n"))))
       .select(col("event_id"), round(col("value"), 6).as("value"),
@@ -2739,7 +2740,7 @@ object SparkEntry {
           coalesce(lit(1.0) / (lit(60) + col("sem_rank")), lit(0.0)), 6))
     val top = graft.ops.TopK.global(fused,
       Seq(col("rrf").desc, col("doc_id")), 10)
-    top.withColumn("rank", row_number().over(
+    top.withColumn("rank", row_number().over( // global window: ≤ 10 rows
         Window.orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
       .select(col("doc_id"), col("lex_rank"), col("sem_rank"),
         col("rrf"), col("rank"))
@@ -3733,7 +3734,7 @@ object SparkEntry {
     val li = Tables.lineitem(s, dir)
     def top10(scored: DataFrame): DataFrame = {
       val cut = scored.orderBy(col("score").desc, col("part")).limit(10)
-      cut.withColumn("rank", row_number().over(
+      cut.withColumn("rank", row_number().over( // global window: ≤ 10 rows
         Window.orderBy(col("score").desc, col("part"))))
     }
     val byQty = top10(li.groupBy(col("l_partkey").as("part"))
@@ -3747,7 +3748,7 @@ object SparkEntry {
       .groupBy(col("part")).agg(min(col("pos")).as("first_pos"))
       .withColumn("src",
         when(col("first_pos") % 2 === 1, "qty").otherwise("rev"))
-    pooled.withColumn("page_rank", row_number().over(
+    pooled.withColumn("page_rank", row_number().over( // global window: ≤ 20 rows
         Window.orderBy(col("first_pos"))).cast("long"))
       .where(col("page_rank") <= 10)
       .select(col("page_rank"), col("part"), col("src"), col("first_pos"))
@@ -4129,7 +4130,7 @@ object SparkEntry {
       .select(col("user_id"), expr("ts div 86400000000000").as("day"))
     val days = ev.groupBy(col("day")).agg(count(lit(1)).as("n"))
     val cum = days
-      .withColumn("cum", sum(col("n")).over(
+      .withColumn("cum", sum(col("n")).over( // global window: ≤ days spanned
         Window.orderBy(col("day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .crossJoin(broadcast(days.agg(sum(col("n")).as("__tot"))))
@@ -4175,8 +4176,8 @@ object SparkEntry {
   /** T36: vocabulary-growth curve (Heaps' law check) — distinct token
     * types vs corpus position at 100-doc checkpoints: each token's
     * FIRST document (a min aggregate — linear, no ordered scan), new
-    * types per checkpoint bucket, and the running vocabulary via a
-    * window over the ≤|corpus|/100 bucket frame, never the tokens.
+    * types per checkpoint bucket, and the running vocabulary as a
+    * [[PrefixSum]] scan over the |corpus|/100 buckets, never the tokens.
     * Sub-linear growth is healthy prose; near-linear growth means
     * boilerplate IDs/hashes are flooding the vocabulary — a corpus
     * intake gate. */
@@ -4192,16 +4193,15 @@ object SparkEntry {
     val tokCount = toks
       .groupBy((floor(col("doc_id") / 100) + 1).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_tokens"))
-    val byBucket = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // token-count buckets are the spine: a checkpoint whose docs add no
     // NEW types must still appear (that flattening is the curve's point)
-    tokCount.join(newTypes, Seq("bucket"), "left")
+    val spine = tokCount.join(newTypes, Seq("bucket"), "left")
       .withColumn("new_types", coalesce(col("new_types"), lit(0L)))
-      .withColumn("vocab", sum(col("new_types")).over(byBucket))
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(byBucket))
+    PrefixSum.exclusive(spine, Seq(col("bucket")),
+        Seq("__v" -> col("new_types"), "__t" -> col("n_tokens")))
       .select(col("bucket"), col("new_types"), col("n_tokens"),
-        col("vocab"), col("cum_tokens"))
+        (col("__v") + col("new_types")).as("vocab"),
+        (col("__t") + col("n_tokens")).as("cum_tokens"))
   }
 
   /** A38: rank-biased overlap between the two x27 rankers (parts by
@@ -4217,7 +4217,7 @@ object SparkEntry {
       val scored = li.groupBy(col("l_partkey").as("part"))
         .agg(round(scoreExpr, 6).as("score"))
       scored.orderBy(col("score").desc, col("part")).limit(10)
-        .withColumn("rank", row_number().over(
+        .withColumn("rank", row_number().over( // global window: ≤ 10 rows
           Window.orderBy(col("score").desc, col("part"))))
         .select(col("part"), col("rank"))
     }
@@ -4235,7 +4235,7 @@ object SparkEntry {
         round(col("overlap") * lit(1.0) / col("d"), 6))
       .withColumn("rbo_trunc", round(lit(0.1) * sum(
         pow(lit(0.9), col("d") - 1) * col("overlap") / col("d")).over(
-          Window.orderBy(col("d"))
+          Window.orderBy(col("d")) // global window: 10 rows, d = 1..10
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)), 6))
   }
 
@@ -5337,7 +5337,7 @@ object SparkEntry {
     val scored = Tables.events(s, dir).select(col("event_id"),
       (-col("value") / 500.0).as("__neg"),
       when(col("event_type") === "purchase", 1.0).otherwise(0.0).as("__y"))
-    val ranked = graft.ops.PrefixSum.ranges(scored,
+    val ranked = PrefixSum.ranges(scored,
       Seq("__neg", "event_id"), lit(1L), "__lo", "__hi")
     val n = broadcast(scored.agg(count(lit(1)).as("__n"),
       sum(col("__y")).as("__pos")))
@@ -5347,7 +5347,7 @@ object SparkEntry {
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("__rows"), sum(col("__y")).as("__p"),
         first(col("__n")).as("__n"), first(col("__pos")).as("__pos"))
-    val cum = Window.orderBy(col("decile"))
+    val cum = Window.orderBy(col("decile")) // global window: ≤ 10 deciles
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     deciles.select(col("decile"),
       sum(col("__rows")).over(cum).as("cum_rows"),
@@ -5380,6 +5380,7 @@ object SparkEntry {
     val perT = users.groupBy(col("duration_days"))
       .agg(sum(col("__churn")).as("n_churned"),
         sum(lit(1L) - col("__churn")).as("n_censored"))
+    // global windows: ≤ days spanned (one row per distinct lifetime)
     val atRisk = Window.orderBy(col("duration_days"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val prefix = Window.orderBy(col("duration_days"))
@@ -5456,7 +5457,7 @@ object SparkEntry {
       .groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
       .orderBy(col("__cnt").desc, col("__tok")).limit(200)
     val pts = freq
-      .withColumn("__rk", row_number().over(
+      .withColumn("__rk", row_number().over( // global window: ≤ 200 rows
         Window.orderBy(col("__cnt").desc, col("__tok"))).cast("double"))
       .select(log(col("__rk")).as("__x"),
         log(col("__cnt").cast("double")).as("__y"))
@@ -5483,11 +5484,8 @@ object SparkEntry {
   /** W33: peak session concurrency — the capacity-planning number
     * ("how many users are mid-session at the worst moment") computed
     * by a sweep-line over w6's gap sessions: +1 at each session start,
-    * −1 just after each end, running-summed in global time order. The
-    * global running sum rides [[graft.ops.PrefixSum]] (two-level scan,
-    * never a data-sized single partition) with the start/end counters
-    * PACKED into one non-negative long (start·2³² + end) so one pass
-    * produces both cumulative counts; concurrency is their difference.
+    * −1 just after each end, running-summed in global time order by
+    * [[PrefixSum.exclusive]] (never a data-sized single partition).
     * Start-before-end ordering at equal timestamps is pinned by the
     * sort key, and the peak timestamp is the earliest boundary
     * attaining the max — both order-invariant under the unique
@@ -5514,14 +5512,11 @@ object SparkEntry {
           .as("__b"))
       .select(col("user_id"), col("session_id"),
         col("__b.bt").as("bt"), col("__b.k2").as("k2"))
-      .withColumn("__w",
-        when(col("k2") === 0, lit(4294967296L)).otherwise(lit(1L)))
-    graft.ops.PrefixSum.ranges(bounds,
-        Seq("bt", "k2", "user_id", "session_id"), col("__w"),
-        "__lo", "__hi")
-      .select(col("bt"),
-        (expr("__hi div 4294967296") - pmod(col("__hi"),
-          lit(4294967296L))).as("conc"))
+      .withColumn("__d", lit(1L) - col("k2") * 2)
+    PrefixSum.exclusive(bounds,
+        Seq("bt", "k2", "user_id", "session_id").map(col),
+        Seq("__before" -> col("__d")))
+      .select(col("bt"), (col("__before") + col("__d")).as("conc"))
       // one aggregate consumes the scan once: boundary count / 2 is the
       // session count, and the struct max is (peak, earliest-ts-at-peak)
       .agg(expr("count(1) div 2").as("n_sessions"),
@@ -5548,7 +5543,7 @@ object SparkEntry {
           16, 10).cast("long").cast("double") + 0.5) / 281474976710656.0)
       .withColumn("__key", -log(col("__u")) / col("n_chars"))
     keyed.orderBy(col("__key"), col("doc_id")).limit(100)
-      .withColumn("rank", row_number().over(
+      .withColumn("rank", row_number().over( // global window: ≤ 100 rows
         Window.orderBy(col("__key"), col("doc_id"))).cast("long"))
       .select(col("rank"), col("doc_id"), col("n_chars").as("weight"))
   }

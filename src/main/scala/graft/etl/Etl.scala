@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.functions.Features
-import graft.ops.{DictIndex, PrefixWindow, Sampling}
+import graft.ops.{PrefixSum, PrefixWindow, Sampling}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ object Etl {
         concat_ws("|", col("history")).as("history_items"))
     // deterministic negatives over the observed item dictionary: hash-pick
     // an item index, skip collisions with the user's own positives (X2)
-    val itemDict = DictIndex.denseIds(base, "item_id", "__idx")
+    val itemDict = PrefixSum.denseIds(base, "item_id", "__idx")
     val nItems = itemDict.count()
     val userItems = base.select(col("user_id"), col("item_id")).distinct()
     val negs = samples

@@ -1,5 +1,6 @@
 package graft.evalx
 
+import graft.ops.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,10 +62,10 @@ object Metrics {
 
   /** Corpus-level AUC via the rank-sum (Mann-Whitney) identity:
     * AUC = (Σ ranks(pos) − nPos(nPos+1)/2) / (nPos·nNeg); ties get average
-    * rank. Two shuffles (rank window + final scalar agg), no O(n²) pairs.
+    * rank. The rank step is a [[graft.ops.PrefixSum]] scan over the score
+    * histogram, no O(n²) pairs.
     */
   def auc(scored: DataFrame, score: String, label: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Histogram form of the rank-sum: aggregate to one row per DISTINCT
     // score (map-side combined). Ties get the average rank exactly as in
     // the classical formulation: avg of k consecutive ranks starting after
@@ -76,29 +77,8 @@ object Metrics {
       .groupBy(col(score).as("__s"))
       .agg(count(lit(1)).as("__n"),
         sum(col(label).cast("double")).as("__pos"))
-    // Rank step as a two-level prefix sum (same lowering as
-    // DictIndex.denseIds): for CONTINUOUS model scores the histogram is
-    // data-sized (|distinct| ≈ |rows|), so a global `Window.orderBy`
-    // would be a one-reducer sort of the dataset. Instead: range-partition
-    // the histogram (ascending ranges → ascending partition ids), compute
-    // the per-partition row totals, prefix-sum THOSE (≤ numPartitions
-    // rows — bounded by the cluster, never by data) and broadcast the
-    // offsets back onto a per-partition local window.
-    val parts = hist.repartitionByRange(col("__s"))
-      .sortWithinPartitions(col("__s"))
-      .withColumn("__pid", spark_partition_id())
-    val offsets = parts.groupBy(col("__pid")).agg(sum(col("__n")).as("__c"))
-      .withColumn("__off",
-        coalesce(sum(col("__c")).over(
-          Window.orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    val localW = Window.partitionBy(col("__pid")).orderBy(col("__s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = parts
-      .withColumn("__lb", coalesce(sum(col("__n")).over(localW), lit(0L)))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn("__before", col("__off") + col("__lb"))
+    val ranked = PrefixSum.exclusive(hist, Seq(col("__s")),
+        Seq("__before" -> col("__n")))
       .withColumn("__avgRank",
         col("__before").cast("double") + (col("__n").cast("double") + 1) / 2.0)
     ranked.agg(
@@ -114,34 +94,20 @@ object Metrics {
     * block's inclusive cumulative cut — the threshold-step definition
     * (sklearn's `average_precision_score`), which makes ties
     * well-defined as blocks instead of an arbitrary within-tie order.
-    * Same histogram + two-level prefix-sum lowering as [[auc]]: the
-    * cumulative counts never meet a data-sized single partition. */
+    * The cumulative counts are a [[graft.ops.PrefixSum]] scan over the
+    * score histogram, descending. */
   def averagePrecision(scored: DataFrame, score: String,
       label: String): DataFrame = {
     val hist = scored.where(col(label).isNotNull)
       .groupBy(col(score).as("__s"))
       .agg(count(lit(1)).as("__n"),
         sum(col(label).cast("double")).as("__pos"))
-    val parts = hist.repartitionByRange(col("__s").desc)
-      .sortWithinPartitions(col("__s").desc)
-      .withColumn("__pid", spark_partition_id())
-    val pidW = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = parts.groupBy(col("__pid"))
-      .agg(sum(col("__n")).as("__cn"), sum(col("__pos")).as("__cp"))
-      .withColumn("__offn", coalesce(sum(col("__cn")).over(pidW), lit(0L)))
-      .withColumn("__offp", coalesce(sum(col("__cp")).over(pidW), lit(0.0)))
-      .select(col("__pid"), col("__offn"), col("__offp"))
-    val localW = Window.partitionBy(col("__pid")).orderBy(col("__s").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    parts
-      .withColumn("__ln", sum(col("__n")).over(localW))
-      .withColumn("__lp", sum(col("__pos")).over(localW))
-      .join(broadcast(offsets), Seq("__pid"))
+    PrefixSum.exclusive(hist, Seq(col("__s").desc),
+        Seq("__bn" -> col("__n"), "__bp" -> col("__pos")))
       .agg(sum(col("__n")).as("n"),
         sum(col("__pos")).cast("long").as("n_pos"),
-        (sum(col("__pos") * ((col("__offp") + col("__lp")) /
-            (col("__offn") + col("__ln")).cast("double"))) /
+        (sum(col("__pos") * ((col("__bp") + col("__pos")) /
+            (col("__bn") + col("__n")).cast("double"))) /
           sum(col("__pos"))).as("average_precision"))
   }
 
@@ -205,7 +171,6 @@ object Metrics {
     * every sum is exact in doubles up to 2⁵² — the only inexact op is
     * the final ratio. Null rows in either column are excluded. */
   def spearman(df: DataFrame, a: String, b: String): DataFrame = {
-    import graft.ops.PrefixSum
     val base = df.where(col(a).isNotNull && col(b).isNotNull)
       .select(col(a).as("__a"), col(b).as("__b"))
     def rankMap(c: String, out: String): DataFrame = {
@@ -392,16 +357,11 @@ object Metrics {
     * inside a bin; KS is parameter-free and catches any CDF divergence,
     * which is why drift monitors run both.
     *
-    * Scale shape: the statistic needs cumulative counts in global value
-    * order, and a naive `sum().over(Window.orderBy(x))` funnels the whole
-    * table through one partition. This is the [[graft.ops.PrefixSum]]
-    * two-level lowering, run once for BOTH sides' counts: collapse each
-    * side to distinct-value counts (one shuffle each, partials combine
-    * map-side), full-outer-merge, range-repartition on the value, local
-    * running sums per partition, and a ≤ numPartitions-row offset table
-    * broadcast back. The final max is a 1-row aggregate with map-side
-    * partials. Cumulative counts stay integral, so the only float op is
-    * the final ratio — deterministic across engines.
+    * The cumulative counts of BOTH sides come from one
+    * [[graft.ops.PrefixSum]] scan over the full-outer-merged
+    * distinct-value counts; the final max is a 1-row aggregate with
+    * map-side partials. Cumulative counts stay integral, so the only
+    * float op is the final ratio — deterministic across engines.
     * Output: 1 row (ks_stat, n_base, n_current). */
   def ksTest(base: DataFrame, current: DataFrame, value: String)
       : DataFrame = {
@@ -413,29 +373,13 @@ object Metrics {
         Seq("__x"), "full_outer")
       .select(col("__x"), coalesce(col("__na"), lit(0L)).as("__na"),
         coalesce(col("__nb"), lit(0L)).as("__nb"))
-    val part = merged.repartitionByRange(col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .withColumn("__pid", spark_partition_id())
-    val offsets = part.groupBy(col("__pid"))
-      .agg(sum(col("__na")).as("__ca"), sum(col("__nb")).as("__cb"))
-      .withColumn("__offa", coalesce(sum(col("__ca")).over(
-        Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__offb", coalesce(sum(col("__cb")).over(
-        Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offa"), col("__offb"))
-    val localW = Window.partitionBy(col("__pid")).orderBy(col("__x"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    part
-      .withColumn("__la", sum(col("__na")).over(localW))
-      .withColumn("__lb", sum(col("__nb")).over(localW))
-      .join(broadcast(offsets), Seq("__pid"))
+    PrefixSum.exclusive(merged, Seq(col("__x")),
+        Seq("__ca" -> col("__na"), "__cb" -> col("__nb")))
       .crossJoin(broadcast(merged.agg(sum(col("__na")).as("__ta"),
         sum(col("__nb")).as("__tb"))))
       .select(abs(
-          (col("__offa") + col("__la")).cast("double") / col("__ta") -
-          (col("__offb") + col("__lb")).cast("double") / col("__tb"))
+          (col("__ca") + col("__na")).cast("double") / col("__ta") -
+          (col("__cb") + col("__nb")).cast("double") / col("__tb"))
         .as("__d"), col("__ta"), col("__tb"))
       .agg(round(max(col("__d")), 6).as("ks_stat"),
         first(col("__ta")).as("n_base"),
@@ -462,7 +406,7 @@ object Metrics {
       catalogSize: DataFrame): DataFrame = {
     val exposure = recs.groupBy(col(item).as("__item"))
       .agg(count(lit(1)).as("__cnt"))
-    graft.ops.PrefixSum.ranges(exposure, Seq("__cnt", "__item"), lit(1L),
+    PrefixSum.ranges(exposure, Seq("__cnt", "__item"), lit(1L),
         "__lo", "__hi")
       .crossJoin(broadcast(catalogSize.toDF("__catalog")))
       .agg(

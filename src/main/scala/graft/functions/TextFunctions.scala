@@ -27,13 +27,6 @@ object TextFunctions {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: word-chunks + digits + punctuation, the usual
-    * pre-tokenizer regex family. */
-  def subwordCount(text: Column): Column =
-    size(filter(
-      split(lower(text), "([^a-z0-9]+)"),
-      t => length(t) > 0)) + regexp_count(text, lit("[^a-zA-Z0-9\\s]"))
-
   /** Fraction of tokens that are in `stopwords` (duplicates counted). */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val sw = array(stopwords.map(lit): _*)

@@ -1224,7 +1224,7 @@ object SimSearch {
       // surviving rows only
       val pulled = src.orderBy(mdOrder(col("item_id")): _*)
         .limit(servingCells)
-      val w = org.apache.spark.sql.expressions.Window
+      val w = org.apache.spark.sql.expressions.Window // global: ≤ 4096 rows
         .orderBy(mdOrder(col("item_id")): _*)
       pulled
         .select(lit(1L).as("refit"),

@@ -224,7 +224,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_hits"), round(sum(col("__c")), 6).as("score"))
     val top = graft.ops.TopK.global(scored,
       Seq(col("score").desc, col(id)), k)
-    top.withColumn("rank",
+    top.withColumn("rank", // global window: ≤ k rows
       row_number().over(Window.orderBy(col("score").desc, col(id))).cast("long"))
   }
 
@@ -473,7 +473,7 @@ object TextAnalysis {
     // only, so its single partition is constant-bounded, not data-sized
     val top = pairs.groupBy(col("pair")).agg(sum(col("wc")).as("n"))
       .orderBy(col("n").desc, col("pair")).limit(topK)
-    top.withColumn("rank",
+    top.withColumn("rank", // global window: ≤ topK rows
       row_number().over(Window.orderBy(col("n").desc, col("pair"))).cast("long"))
   }
 

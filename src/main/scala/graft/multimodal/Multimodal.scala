@@ -29,18 +29,6 @@ object Multimodal {
     StructField("height", IntegerType),
     StructField("duration_ms", LongType))) // audio/video metadata
 
-  /** Wrap any table into asset rows by treating a string column as the raw
-    * payload — gives the fixture tables a binary column to exercise the
-    * pipeline with. */
-  def assetsFromText(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.select(
-      col(id).cast("long").as("asset_id"),
-      lit("image").as("media_type"),
-      encode(col(text), "UTF-8").as("content"),
-      (length(col(text)) % 640 + 1).cast("int").as("width"),
-      (length(col(text)) % 480 + 1).cast("int").as("height"),
-      lit(null).cast("long").as("duration_ms"))
-
   /** Metadata-only resize annotation (pushdown-friendly width/height
     * rewrite without touching content). The REAL pixel path — decode →
     * nearest-neighbor resample → re-encode — is

@@ -128,25 +128,6 @@ object RealCodecs {
     }
   }
 
-  /** DECODE PNG bytes and reduce to exact per-channel pixel sums.
-    * Returns (width, height, sumR, sumG, sumB) — integer-exact, so the
-    * downstream means are reproducible doubles in both engines. */
-  def decodePngSums(bytes: Array[Byte]): (Int, Int, Long, Long, Long) = {
-    val img = ImageIO.read(new ByteArrayInputStream(bytes))
-    var (sr, sg, sb) = (0L, 0L, 0L)
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) {
-        val p = img.getRGB(x, y)
-        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    (img.getWidth, img.getHeight, sr, sg, sb)
-  }
-
   /** ids → real PNG encode → real PNG decode → per-image channel means.
     * One mapPartitions pass: the encoded bytes never leave the executor
     * (the 100 TB posture — content stays in the partition). */

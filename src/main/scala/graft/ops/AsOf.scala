@@ -160,16 +160,21 @@ object AsOf {
     // rows per unmatched COPY (up to 3 per left row) — wrong multiplicity.
     // For left semantics, aggregate the inner result and left-join it back
     // to `left` (see the j4 query).
+    // aliased sides: selects of one frame share the key attribute, so
+    // `l(key) === r(key)` would compare a column with itself
     val l = left.withColumn("__lts", numericTs(left, lTs))
       .withColumn("__bucket",
         explode(array((-1L to 1L).map(d =>
           floor(col("__lts") / radius).cast("long") + lit(d)): _*)))
+      .as("__l")
     val r = right.withColumn("__rts", numericTs(right, rTs))
       .withColumn("__bucket", floor(col("__rts") / radius).cast("long"))
+      .as("__r")
     val joined = l.join(r,
-      l(key) === r(key) && l("__bucket") === r("__bucket") &&
-        r("__rts") >= l("__lts") - radius &&
-        r("__rts") <= l("__lts") + radius,
+      col(s"__l.$key") === col(s"__r.$key") &&
+        col("__l.__bucket") === col("__r.__bucket") &&
+        col("__r.__rts") >= col("__l.__lts") - radius &&
+        col("__r.__rts") <= col("__l.__lts") + radius,
       "inner")
     joined.drop("__bucket", "__lts", "__rts")
   }

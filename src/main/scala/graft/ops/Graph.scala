@@ -168,7 +168,7 @@ object Graph {
     require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"labelPropagation requires numeric node ids (the tie-break " +
         s"is numeric order); got ${idType.catalogString} — map ids through " +
-        "a dictionary index (DictIndex) first")
+        "a dictionary index (PrefixSum.denseIds) first")
     val sym = Iterate.pin(
       if (edgesDistinct) symRaw else symRaw.distinct(), col("__m"))
     val init = sym.select(col("__n")).distinct()

@@ -124,12 +124,6 @@ object Sampling {
       pmod(i.cast("long"), lit(1000000000L)) * 40503L +
       pmod(n.cast("long"), lit(1000000000L)) * 69069L
 
-  /** X4: seeded random fan-out — pick `n` rows pseudo-randomly (reference
-    * `api_service/main.py:66-68` picks 30-60 random users per request).
-    * Deterministic for a fixed seed + partitioning. */
-  def randomFanout(df: DataFrame, n: Int, seed: Long): DataFrame =
-    df.orderBy(rand(seed)).limit(n)
-
   /** Engine-portable deterministic sampling predicate: keep a key iff the
     * first hex digit of md5(key) is below `sixteenths` (rate granularity
     * 1/16). Any engine with md5 reproduces it exactly. */
@@ -298,7 +292,7 @@ object Sampling {
       .agg(count(lit(1)).as("__c"))
       .withColumn("__b0", coalesce(sum(col("__c")).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("__b"))
-          .rowsBetween(Long.MinValue, -1)), lit(0L)))
+          .rowsBetween(Long.MinValue, -1)), lit(0L))) // ≤ nBuckets rows
       .select(col("__b"), col("__b0"))
     ranked.join(broadcast(binStart), Seq("__b"))
       .select(col("__id").as(id), col("__d").as(difficulty),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Explicit skew mitigation for joins (SURVEY §4: "user fan-out is skewed —
@@ -26,14 +26,4 @@ object Skew {
     saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Per-key frequency report — pick join strategy / salt factor from
-    * data, not guesswork. Returns the `topN` hottest keys with counts and
-    * their share of the table. */
-  def skewReport(df: DataFrame, key: Column, topN: Int = 20): DataFrame = {
-    val total = df.count()
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("key"))
-      .limit(topN)
-      .withColumn("share", round(col("n") / total.toDouble, 6))
-  }
 }

@@ -80,7 +80,7 @@ object Cascade {
       .orderBy(col("__cnt").desc, col("item_id")).limit(k)
       .select(col("item_id"), col("__cnt").cast("double").as("score"),
         row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("__cnt").desc, col("item_id"))).as("rank"))
+          .orderBy(col("__cnt").desc, col("item_id"))).as("rank")) // ≤ k rows
 
   /** 3-branch cold-start recall — the reference's full branch decision
     * (`model_service/models.py:42-88`), composed as ONE lazy plan over a

@@ -34,16 +34,4 @@ object ExternalScorer {
       }(enc)
     }
 
-  /** Deterministic stand-in kernel: a tiny fixed-weight "MLP" over
-    * (user_id, item_id) — what the reference's stub scorer does
-    * (`model_service/models.py:126-130`) but seeded/reproducible. Replace
-    * with a real model client in production. */
-  def stubKernel(userIdx: Int, itemIdx: Int): Seq[Row] => Seq[Double] =
-    batch => batch.map { r =>
-      val u = r.getLong(userIdx).toDouble
-      val i = r.getLong(itemIdx).toDouble
-      val h1 = math.tanh(0.013 * u - 0.007 * i + 0.1)
-      val h2 = math.tanh(0.005 * u + 0.011 * i - 0.2)
-      1.0 / (1.0 + math.exp(-(0.8 * h1 - 0.6 * h2)))
-    }
 }

@@ -3,12 +3,25 @@ package graft
 import graft.recall.{AlsTrainer, Cascade, ExternalScorer}
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class CascadeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Deterministic stand-in kernel: a tiny fixed-weight "MLP" over
+    * (user_id, item_id) — what the reference's stub scorer does
+    * (`model_service/models.py:126-130`), seeded/reproducible. */
+  private def stubKernel(userIdx: Int, itemIdx: Int): Seq[Row] => Seq[Double] =
+    batch => batch.map { r =>
+      val u = r.getLong(userIdx).toDouble
+      val i = r.getLong(itemIdx).toDouble
+      val h1 = math.tanh(0.013 * u - 0.007 * i + 0.1)
+      val h2 = math.tanh(0.005 * u + 0.011 * i - 0.2)
+      1.0 / (1.0 + math.exp(-(0.8 * h1 - 0.6 * h2)))
+    }
 
   private def candidates = {
     val emb = Tables.embeddings(spark, TestSpark.sf)
@@ -18,7 +31,7 @@ class CascadeSpec extends AnyFunSuite {
   }
 
   test("batched external scorer: results independent of batch size, in order") {
-    val kernel = ExternalScorer.stubKernel(0, 1)
+    val kernel = stubKernel(0, 1)
     val s1 = ExternalScorer.batched(7)(kernel)(candidates)
       .select($"user_id", $"item_id", $"score")
       .as[(Long, Long, Double)].collect().toSet
@@ -40,8 +53,8 @@ class CascadeSpec extends AnyFunSuite {
     val items = emb.where($"vec_id" >= 10)
       .select($"vec_id".as("item_id"), $"embedding".as("item_emb"))
     val out = Cascade.recommend(users, items,
-      ExternalScorer.batched(16)(ExternalScorer.stubKernel(0, 1)),
-      ExternalScorer.batched(16)(ExternalScorer.stubKernel(0, 1)),
+      ExternalScorer.batched(16)(stubKernel(0, 1)),
+      ExternalScorer.batched(16)(stubKernel(0, 1)),
       n1 = 50, n2 = 20, n3 = 10)
     val perUser = out.groupBy($"user_id").agg(count(lit(1)).as("n"),
       max($"final_rank").as("mx"))

@@ -130,11 +130,11 @@ class MetricsSpec extends AnyFunSuite {
     // quadrant sums re-add to the codec-roundtrip channel sums — the
     // pooled features really come from the same decoded pixels
     val id = f1.head._1
-    val (_, _, sr, sg, sb) = RealCodecs.decodePngSums(RealCodecs.encodePng(id))
+    val (_, _, sr, sg, sb) = RealCodecsSpec.decodePngSums(RealCodecs.encodePng(id))
     assert(f1.head._4 + f1.head._5 + f1.head._6 + f1.head._7 == sr + sg + sb)
     // frame sampling plumbing
-    val assets = Multimodal.assetsFromText(docs, "doc_id", "text")
-    val vids = assets.withColumn("duration_ms", lit(2500L))
+    val vids = Multimodal.videoAssetsFromText(docs, "doc_id", "text")
+      .withColumn("duration_ms", lit(2500L))
     val frames = Multimodal.sampleFrames(vids, 1000L)
     assert(frames.count() == 500 * 3) // 0,1000,2000
   }
@@ -152,6 +152,57 @@ class MetricsSpec extends AnyFunSuite {
     val far = Seq(100.0, 101.0).toDF("value")
     assert(Metrics.ksTest(base, far, "value")
       .as[(Double, Long, Long)].head()._1 == 1.0)
+  }
+
+  test("auc, averagePrecision and ksTest match brute-force formulas across range partitions") {
+    // 200 rows over 25 distinct scores: every score is a tie block
+    val rnd = new scala.util.Random(11)
+    val rows = Seq.fill(200) {
+      val s = rnd.nextInt(25) / 4.0
+      (s, if (rnd.nextDouble() < 0.2 + s / 10) 1 else 0)
+    }
+    val pos = rows.collect { case (s, 1) => s }
+    val neg = rows.collect { case (s, 0) => s }
+    val auc = pos.map(p => neg.map(n =>
+      if (p > n) 1.0 else if (p == n) 0.5 else 0.0).sum).sum /
+      (pos.size.toDouble * neg.size)
+    // threshold-step AP: blocks of equal score, descending
+    val blocks = rows.groupBy(_._1).toSeq.sortBy(-_._1)
+      .map { case (_, b) => (b.size.toLong, b.count(_._2 == 1).toLong) }
+    val cum = blocks.scanLeft((0L, 0L)) { case ((n, p), (bn, bp)) =>
+      (n + bn, p + bp) }.tail
+    val ap = blocks.zip(cum).map { case ((_, bp), (n, p)) =>
+      bp * p.toDouble / n }.sum / pos.size
+    val ks = rows.map(_._1).distinct.map(x =>
+      math.abs(neg.count(_ <= x).toDouble / neg.size -
+        pos.count(_ <= x).toDouble / pos.size)).max
+    val df = rows.toDF("score", "y")
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      for (np <- Seq(1, 7)) {
+        spark.conf.set("spark.sql.shuffle.partitions", np.toString)
+        // the scans range-partition the 25-row score histogram
+        val used = df.select($"score").distinct().repartitionByRange($"score")
+          .select(spark_partition_id()).distinct().count()
+        assert(if (np == 1) used == 1 else used > 1, s"partitions used: $used")
+        assert(math.abs(Metrics.auc(df, "score", "y").as[Double].head() - auc)
+          < 1e-12, s"auc at $np partitions")
+        val (n, nPos, gotAp) = Metrics.averagePrecision(df, "score", "y")
+          .as[(Long, Long, Double)].head()
+        assert(n == 200 && nPos == pos.size && math.abs(gotAp - ap) < 1e-12,
+          s"average precision at $np partitions")
+        val (gotKs, na, nb) = Metrics.ksTest(df.where($"y" === 0),
+          df.where($"y" === 1), "score").as[(Double, Long, Long)].head()
+        assert(math.abs(gotKs - ks) <= 5e-7 && na == neg.size && nb == pos.size,
+          s"ks at $np partitions: $gotKs vs $ks")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("groupAuc/gauc: hand-computed per-user rank-sums, one-class drop") {

