@@ -2635,7 +2635,7 @@ object SparkEntry {
 
   /** MM2: video frame sampling — metadata-driven explode of binary assets
     * into per-frame rows with a portable md5 frame digest
-    * (`Multimodal.sampleFramesPortable`; production digest is xxhash64). */
+    * (`Multimodal.sampleFramesPortable`). */
   private val mm2FrameSample: Q = (s, dir) => {
     val assets = multimodal.Multimodal.videoAssetsFromText(
       Tables.documents(s, dir).where(col("doc_id") % 10 === 0), "doc_id", "text")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * [[RealCodecs]] (PNG via ImageIO, RIFF/WAV PCM16 parsed from the byte
   * layout) — the registry's mm1/mm3/mm4/mm5/mm6/mm7 all run real
   * encode→decode paths since round 9. The one remaining stand-in is
-  * VIDEO ([[sampleFrames]]): the JDK ships no video codec and the
+  * VIDEO ([[sampleFramesPortable]]): the JDK ships no video codec and the
   * container has no media libraries, so the per-frame decode is a
   * digest over the content bytes, clearly marked below; the
   * explode/metadata plumbing around it is the real contract.
@@ -29,27 +29,12 @@ object Multimodal {
     StructField("height", IntegerType),
     StructField("duration_ms", LongType))) // audio/video metadata
 
-  /** Metadata-only resize annotation (pushdown-friendly width/height
-    * rewrite without touching content). The REAL pixel path — decode →
-    * nearest-neighbor resample → re-encode — is
-    * [[RealCodecs.imageResizeRoundtrip]] (registry query mm7). */
-  def resize(assets: DataFrame, w: Int, h: Int): DataFrame =
-    assets.withColumn("width", lit(w)).withColumn("height", lit(h))
-
-  /** Frame-sample stub for video: emit one row per sampled frame index at
-    * `fps`; content decode is faked, the explode+binary plumbing is real. */
-  def sampleFrames(assets: DataFrame, everyMs: Long): DataFrame =
-    assets.where(col("duration_ms").isNotNull)
-      .withColumn("frame_ms",
-        explode(sequence(lit(0L), col("duration_ms"), lit(everyMs))))
-      .select(col("asset_id"), col("frame_ms"),
-        xxhash64(col("content"), col("frame_ms")).as("frame_digest"))
-
-  /** Engine-portable twin of [[sampleFrames]]: the per-frame digest is
-    * md5 over `content || ':' || frame_ms` (bytes identical to the SQL
-    * string concat when content is UTF-8 text), so the whole
-    * video→frame-row expansion is replicable in the DuckDB oracle.
-    * Same explode plumbing; xxhash64 stays the production digest. */
+  /** Frame sampling for video: one row per sampled frame at `everyMs`
+    * steps of `duration_ms`; content decode is faked (a digest stands in
+    * for the frame), the explode + binary plumbing is real. The per-frame
+    * digest is md5 over `content || ':' || frame_ms` (bytes identical to
+    * the SQL string concat when content is UTF-8 text), so the whole
+    * video→frame-row expansion is replicable in the DuckDB oracle. */
   def sampleFramesPortable(assets: DataFrame, everyMs: Long): DataFrame =
     assets.where(col("duration_ms").isNotNull)
       .withColumn("frame_ms",

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 
 /** Point-in-time ("as-of") operators.
   *
@@ -12,11 +14,20 @@ import org.apache.spark.sql.functions._
   * Scale design: the naive lowering is a range join (`b.ts <= q.ts`) which
   * explodes to O(|B| × |Q|) per user before the per-query max is taken. We
   * instead UNION the query rows into the behavior stream and take a running
-  * `last(payload, ignoreNulls)` window — one shuffle on the user key, one
-  * sort, O(|B| + |Q|) work, no explosion. Skewed power-users are handled by
-  * AQE skew splitting on the single shuffle; at 100 TB the behaviors table
-  * should additionally be bucketed + sorted within partitions on
-  * (key, ts) so the window sort is a no-op merge.
+  * window over `partitionBy(key)` — one shuffle on the user key, one sort,
+  * O(|B| + |Q|) work, no explosion. When the query side is small (its
+  * optimized-plan size estimate within `spark.sql.autoBroadcastJoinThreshold`,
+  * Spark's own broadcast rule) and deterministic (it is evaluated twice:
+  * once for its keys, once for the union), the behaviors side is first cut
+  * to the queried keys by a left-semi join against the broadcast query keys,
+  * so a request for 60 users shuffles and sorts their behaviors, not the
+  * whole table (the reference's per-user `bisect_right` likewise reads one
+  * user's list). The cut is null-safe: the window's `partitionBy(key)` puts
+  * null keys in one group, so a null-key query sees the null-key behaviors
+  * on either plan. Otherwise the plan is the plain union. Skewed
+  * power-users are handled by AQE skew splitting on the single shuffle; at
+  * 100 TB the behaviors table should additionally be bucketed + sorted
+  * within partitions on (key, ts) so the window sort is a no-op merge.
   */
 object AsOf {
 
@@ -107,10 +118,11 @@ object AsOf {
   }
 
   /** Shared scaffolding for the union + running-window lowering: tag both
-    * sides, null-align the behaviors side to the query schema, order so
-    * behaviors sort before queries at equal ts (false < true ⇒ inclusive,
-    * bisect_right semantics), run `body` over the running frame, keep only
-    * query rows. */
+    * sides, cut the behaviors side to the queried keys when the query side
+    * broadcasts (see the object doc), null-align it to the query schema,
+    * order so behaviors sort before queries at equal ts (false < true ⇒
+    * inclusive, bisect_right semantics), run `body` over the running
+    * frame, keep only query rows. */
   private def unionWindow(
       queries: DataFrame, behaviors: DataFrame, key: String,
       qTs: String, bTs: String, payload: Column, tieBreak: Column)(
@@ -122,9 +134,28 @@ object AsOf {
       .withColumn("__payload", lit(null).cast(
         behaviors.select(payload.as("p")).schema("p").dataType))
       .withColumn("__tb", lit(null).cast("long"))
-    val bSide = behaviors
+    val bAll = behaviors
       .select(col(key), col(bTs).as("__ts"), lit(false).as("__isq"),
         payload.as("__payload"), tieBreak.cast("long").as("__tb"))
+    // the cut may keep more rows than match, never fewer: a null key joins
+    // as its type's default value, so null-key behaviors reach null-key
+    // queries (and the window, not the cut, tells null from the default).
+    // One integral join column keeps the broadcast a LongHashedRelation;
+    // `<=>` hashes (coalesce, isnull) into an UnsafeHashedRelation, which
+    // takes a whole Tungsten page (16 MB at a 2 GB heap) per broadcast.
+    val kType = bAll.schema(key).dataType
+    def nullAsDefault(c: Column): Column =
+      coalesce(c, GraftSqlShim.column(Literal.default(kType)))
+    // determinism is read off the analyzed plan: the optimizer may fold
+    // a rand() filter over a local relation into literal rows
+    val qe = queries.queryExecution
+    val qBytes = qe.optimizedPlan.stats.sizeInBytes
+    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bSide =
+      if (qe.analyzed.deterministic && qBytes >= 0 && qBytes <= threshold)
+        bAll.join(broadcast(queries.select(nullAsDefault(col(key)).as("__qk"))),
+          nullAsDefault(col(key)) === col("__qk"), "left_semi")
+      else bAll
     // align schemas: behaviors side gets null query columns
     val bAligned = queries.columns.foldLeft(bSide) { (df, c) =>
       if (c == key) df

