@@ -13,13 +13,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, In
   * }}}
   *
   * registers the native codegen expressions as SQL functions in EVERY
-  * session of the application — no per-session `GraftFunctions.register`
-  * call, and plain-SQL / JDBC / thrift users get them too:
+  * session of the application, so plain-SQL / JDBC / thrift users get
+  * them too. This is the one place that names a `graft_*` SQL function:
   *
   *  - `graft_dot(x, y)`        — Σ xᵢ·yᵢ over array<float|double>
   *  - `graft_cosine(x, y)`     — fused single-pass cosine, NaN→0
   *  - `graft_minhash(sh, k)`   — k-seed xxhash64 MinHash signature
   *  - `graft_minhash_mix(sh, k)` — engine-portable md5-mix MinHash signature
+  *  - `graft_topk(e, k)`       — aggregate: the k largest values of e
+  *  - `graft_kmv(h, k)`        — aggregate: the k smallest distinct hashes
+  *  - `graft_cms_estimate(sk, x)` — count of x in a count-min sketch
+  *  - `graft_quality(text)`    — hashed n-gram quality score
   *
   * This is the conventional extension mechanism (same hook Delta/Iceberg
   * use); the expressions themselves stay plain Catalyst nodes so Catalyst
@@ -37,14 +41,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$name expects 2 arguments, got ${other.size}")
   }
 
-  /** (shingles, numHashes-literal) forms: the hash count shapes the
-    * output schema, so it must be a literal int — reject non-literals at
-    * analysis time rather than failing opaquely in codegen. */
-  private def sig(name: String, mk: (Expression, Int) => Expression)
+  /** (expr, k-literal) forms: the hash count or k shapes the output
+    * schema or the aggregation buffer, so it must be a literal int —
+    * reject non-literals at analysis time rather than failing opaquely
+    * in codegen. */
+  private def withK(name: String, mk: (Expression, Int) => Expression)
       : Seq[Expression] => Expression = {
     case Seq(a, IntegerLiteral(k)) => mk(a, k)
     case other => throw new IllegalArgumentException(
-      s"$name expects (array<string>, int literal), got ${other.size} args")
+      s"$name expects (expr, int literal), got ${other.size} args")
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -56,26 +61,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       binary("graft_cosine", CosineSim)))
     ext.injectFunction((FunctionIdentifier("graft_minhash"),
       info("graft_minhash", "graft_minhash(shingles, k) - k-seed xxhash64 MinHash signature"),
-      sig("graft_minhash", MinHashSig)))
+      withK("graft_minhash", MinHashSig)))
     ext.injectFunction((FunctionIdentifier("graft_minhash_mix"),
       info("graft_minhash_mix", "graft_minhash_mix(shingles, k) - md5-mix MinHash signature (engine-portable)"),
-      sig("graft_minhash_mix", MinHashSigMix)))
+      withK("graft_minhash_mix", MinHashSigMix)))
     ext.injectFunction((FunctionIdentifier("graft_topk"),
       info("graft_topk",
         "graft_topk(expr, k) - aggregate: k largest values of expr (struct for multi-key), sorted descending"),
-      {
-        case Seq(e, IntegerLiteral(k)) => TopKLargest(e, k)
-        case other => throw new IllegalArgumentException(
-          s"graft_topk expects (expr, int literal), got ${other.size} args")
-      }))
+      withK("graft_topk", TopKLargest(_, _))))
     ext.injectFunction((FunctionIdentifier("graft_kmv"),
       info("graft_kmv",
         "graft_kmv(hash, k) - aggregate: k smallest distinct BIGINT hashes, ascending (KMV distinct/overlap sketch)"),
-      {
-        case Seq(e, IntegerLiteral(k)) => KmvSmallest(e, k)
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv expects (hash, int literal), got ${other.size} args")
-      }))
+      withK("graft_kmv", KmvSmallest(_, _))))
     ext.injectFunction((FunctionIdentifier("graft_cms_estimate"),
       info("graft_cms_estimate",
         "graft_cms_estimate(sketch, item) - estimated count of item in a count_min_sketch binary"),

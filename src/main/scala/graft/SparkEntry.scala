@@ -1,7 +1,7 @@
 package graft
 
 import graft.evalx.Metrics
-import graft.functions.{Features, KmvAgg, SketchFunctions, TextFunctions, VectorOps}
+import graft.functions.{Features, GraftFunctions, KmvAgg, SketchFunctions, TextFunctions, VectorOps}
 import graft.llmops.{Dedup, SimSearch, TextAnalysis}
 import graft.ops.{AsOf, Behavior, Graph, Layout, PrefixSum, PrefixWindow, Sampling, TopK, Validate}
 import graft.recall.{Cascade, ItemCf, NeuralForward, NeuralOracle}
@@ -648,7 +648,7 @@ object SparkEntry {
     * can check. */
   private val v1NormalizeEmb: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val norm = VectorOps.l2Norm(col("embedding"))
+    val norm = sqrt(GraftFunctions.dot(col("embedding"), col("embedding")))
     emb.select(col("vec_id"),
       round(norm, 9).as("l2_norm"),
       round(element_at(col("embedding"), 1).cast("double") / norm, 9).as("u0"))
@@ -673,7 +673,7 @@ object SparkEntry {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
 
   /** LLM-D22: auto-sized embedding near-dup pairs
-    * ([[Dedup.embeddingPairsBandedAutoPlanned]]) — the band width is derived
+    * ([[SimSearch.lshPairsAutoPlanned]]) — the band width is derived
     * from the corpus count (`ceil(log2(ceil(n/target)))`, pure integer
     * bit-length math) so expected bucket size stays ≈ target as the
     * corpus grows. This is the scale path d6's FIXED 16-bit signature
@@ -685,12 +685,12 @@ object SparkEntry {
     * computation dynamically (`least(24, length(bin(m-1)))`), so the
     * query stays oracle-exact at ANY fixture size, not just the gate's. */
   private val d22EmbeddingDedupAuto: Q = (s, dir) =>
-    Dedup.embeddingPairsBandedAutoPlanned(Tables.embeddings(s, dir),
+    SimSearch.lshPairsAutoPlanned(Tables.embeddings(s, dir),
         "vec_id", "embedding", dim = 64, minCosinePct = 40,
         targetBucketSize = 50L, targetDetectPct = 80)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
 
-  /** LLM-D23: LSH capacity audit ([[SimSearch.lshBucketHistogramAuto]])
+  /** LLM-D23: LSH capacity audit ([[SimSearch.lshBucketHistogramAutoPlanned]])
     * — per-band bucket-size histogram at the width the auto-sized pair
     * stage (d22) uses. The hot-bucket cap that keeps every pair
     * generator's memory bounded fails SILENTLY when the signature is
@@ -3449,7 +3449,7 @@ object SparkEntry {
       col("embedding").as("vb"))
     a.join(b, Seq("query_id")).where(col("i") < col("j"))
       .select(col("query_id"),
-        round(VectorOps.cosine(col("va"), col("vb")), 6).as("sim"))
+        round(GraftFunctions.cosine(col("va"), col("vb")), 6).as("sim"))
       .groupBy(col("query_id"))
       .agg(round(lit(1.0) - avg(col("sim")), 6).as("ild"),
         count(lit(1)).as("n_pairs"))
@@ -4385,7 +4385,8 @@ object SparkEntry {
     * algorithm rather than their library's. */
   private val v8NormAudit: Q = (s, dir) => {
     val norms = Tables.embeddings(s, dir)
-      .select(round(VectorOps.l2Norm(col("embedding")), 6).as("nm"))
+      .select(round(sqrt(GraftFunctions.dot(col("embedding"),
+        col("embedding"))), 6).as("nm"))
     norms.agg(count(lit(1)).as("n_vecs"),
         sum(col("nm")).as("__s"), sum(col("nm") * col("nm")).as("__s2"),
         round(min(col("nm")), 6).as("min_norm"),

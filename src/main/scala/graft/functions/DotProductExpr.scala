@@ -7,13 +7,51 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+/** The `array<float|double>` shape shared by the vector kernels
+  * ([[DotProduct]], [[CosineSim]], [[RankCells]]): one element check,
+  * the element getter (widened to double) in Scala and in generated
+  * Java, and a nullable result — null comes out on a length mismatch or
+  * a null element even when the array columns themselves are
+  * non-nullable. */
+private[graft] trait FloatArrayKernel extends Expression {
+
+  override def nullable: Boolean = true
+
+  protected def elemType(e: Expression): DataType = e.dataType match {
+    case ArrayType(et, _) => et
+    case _ => NullType
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = children.forall(e => elemType(e) match {
+      case FloatType | DoubleType => true
+      case _ => false
+    })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<float|double> inputs, got " +
+        children.map(_.dataType.catalogString).mkString(" / "))
+  }
+
+  protected def get(a: ArrayData, i: Int, et: DataType): Double = et match {
+    case FloatType => a.getFloat(i).toDouble
+    case _ => a.getDouble(i)
+  }
+
+  protected def getter(et: DataType, arr: String, i: String): String = et match {
+    case FloatType => s"(double) $arr.getFloat($i)"
+    case _ => s"$arr.getDouble($i)"
+  }
+}
+
 /** Whole-stage-codegen'd Σ xᵢ·yᵢ over `array<float|double>` columns.
   *
-  * The composable form (`VectorOps.dot` = `aggregate(zip_with(...))`)
-  * allocates an intermediate array and walks lambda-bound expressions per
-  * element in interpreted mode; this native expression compiles to a tight
-  * primitive loop inside the generated code — the hot kernel of recall
-  * scoring (J7/M1) and ANN search. Semantics match `VectorOps.dot`
+  * The composable form (`aggregate(zip_with(...))`, kept as the
+  * reference `dot` beside DotProductSpec) allocates an intermediate
+  * array and walks lambda-bound expressions per element in interpreted
+  * mode; this native expression compiles to a tight primitive loop
+  * inside the generated code — the hot kernel of recall
+  * scoring (J7/M1) and ANN search. Semantics match the composed form
   * exactly, including edges: sequential fold, elements widened to double
   * before multiply, and NULL out on length mismatch or a null element
   * (`zip_with` pads the shorter side with nulls and `null * x` poisons the
@@ -21,34 +59,9 @@ import org.apache.spark.sql.types._
   * just well-formed embeddings.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatArrayKernel {
 
   override def dataType: DataType = DoubleType
-
-  // null is produced on length mismatch / null elements even when the
-  // array columns themselves are non-nullable
-  override def nullable: Boolean = true
-
-  private def elemType(e: Expression): DataType = e.dataType match {
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(e => elemType(e) match {
-      case FloatType | DoubleType => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects array<float|double> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  private def get(a: ArrayData, i: Int, et: DataType): Double = et match {
-    case FloatType => a.getFloat(i).toDouble
-    case _ => a.getDouble(i)
-  }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -67,10 +80,6 @@ case class DotProduct(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    def getter(et: DataType, arr: String, i: String): String = et match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case _ => s"$arr.getDouble($i)"
-    }
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
@@ -103,35 +112,13 @@ case class DotProduct(left: Expression, right: Expression)
   * NULL) match [[DotProduct]] / the composed form exactly, so results are
   * bit-identical. */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatArrayKernel {
 
   override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = true
-
-  private def elemType(e: Expression): DataType = e.dataType match {
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(e => elemType(e) match {
-      case FloatType | DoubleType => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects array<float|double> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    def get(x: ArrayData, i: Int, et: DataType): Double = et match {
-      case FloatType => x.getFloat(i).toDouble
-      case _ => x.getDouble(i)
-    }
     val (ta, tb) = (elemType(left), elemType(right))
     val n = a.numElements()
     if (n != b.numElements()) return null
@@ -148,10 +135,6 @@ case class CosineSim(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    def getter(et: DataType, arr: String, i: String): String = et match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case _ => s"$arr.getDouble($i)"
-    }
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val xy = ctx.freshName("xy"); val xx = ctx.freshName("xx")
@@ -211,25 +194,17 @@ case class CosineSim(left: Expression, right: Expression)
   * malformed vector (null element or length ≠ centroid dim — the
   * composed form's null-poisoned sort is undefined there anyway).
   * CodegenFallback: per-row work is an O(nCells·dim) loop, so row
-  * boxing is noise (same rationale as [[MinHashKernel]]). Pinned to the
+  * boxing is noise (same rationale as [[StringArrayKernel]]). Pinned to the
   * composed form by DotProductSpec. */
 case class RankCells(child: Expression, centroids: Seq[Seq[Double]],
     take: Int)
-    extends UnaryExpression
+    extends UnaryExpression with FloatArrayKernel
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
   require(take >= 1, s"take must be >= 1, got $take")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"rank_cells expects array<float|double>, got ${t.catalogString}")
-  }
-
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
-
-  override def nullable: Boolean = true
 
   @transient private lazy val cents: Array[Array[Double]] =
     centroids.map(_.toArray).toArray
@@ -245,15 +220,14 @@ case class RankCells(child: Expression, centroids: Seq[Seq[Double]],
 
   override def nullSafeEval(in: Any): Any = {
     val a = in.asInstanceOf[ArrayData]
-    val isFloat = child.dataType.asInstanceOf[ArrayType]
-      .elementType == FloatType
+    val et = elemType(child)
     val n = a.numElements()
     val v = new Array[Double](n)
     var xx = 0.0
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
-      val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val x = get(a, i, et)
       v(i) = x
       xx += x * x
       i += 1
@@ -304,30 +278,6 @@ case class RankCells(child: Expression, centroids: Seq[Seq[Double]],
 /** Column-API surface for the native expressions. */
 object GraftFunctions {
   import org.apache.spark.sql.graftshim.GraftSqlShim
-
-  /** Register SQL names (`graft_dot`, `graft_cosine`, `graft_quality`) in
-    * the session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftSqlShim.registerFunction(spark, "graft_dot",
-      exprs => DotProduct(exprs.head, exprs(1)))
-    GraftSqlShim.registerFunction(spark, "graft_cosine",
-      exprs => CosineSim(exprs.head, exprs(1)))
-    GraftSqlShim.registerFunction(spark, "graft_quality",
-      exprs => GraftSqlShim.eagerExpression(
-        TextFunctions.hashedClassifierScore(GraftSqlShim.column(exprs.head))))
-    GraftSqlShim.registerFunction(spark, "graft_topk", {
-      case Seq(e, org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) =>
-        TopKLargest(e, k)
-      case other => throw new IllegalArgumentException(
-        s"graft_topk expects (expr, int literal), got ${other.size} args")
-    })
-    GraftSqlShim.registerFunction(spark, "graft_kmv", {
-      case Seq(e, org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) =>
-        KmvSmallest(e, k)
-      case other => throw new IllegalArgumentException(
-        s"graft_kmv expects (hash, int literal), got ${other.size} args")
-    })
-  }
 
   def dot(x: Column, y: Column): Column =
     GraftSqlShim.column(

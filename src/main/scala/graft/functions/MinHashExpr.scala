@@ -11,9 +11,11 @@ import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native MinHash signature kernels.
+/** The input check shared by the `array<string>` kernels: the MinHash
+  * signatures below and the SimHash signatures ([[SimHashMd5]],
+  * [[SimHash64Xx]]).
   *
-  * The composed HOF forms (`transform(seeds, seed => aggregate(shingles,
+  * MinHash: the composed HOF forms (`transform(seeds, seed => aggregate(shingles,
   * MaxValue, least(acc, xxhash64(s, seed))))`) are interpreted per element
   * per seed — numHashes full passes over the shingle array, re-hashing the
   * whole string each time. These expressions make one pass: the string is
@@ -34,13 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashes, so the fallback's row-boxing overhead is noise (unlike
   * [[DotProduct]], whose per-row work is a single short loop).
   */
-private[graft] trait MinHashKernel extends UnaryExpression {
-  def numHashes: Int
-
+private[graft] trait StringArrayKernel extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"expects array<string> shingles, got ${t.catalogString}")
+      s"$prettyName expects array<string>, got ${t.catalogString}")
   }
 }
 
@@ -48,7 +48,7 @@ private[graft] trait MinHashKernel extends UnaryExpression {
   * xxhash64(shingle, k)`; empty input folds to Long.MaxValue per position
   * (callers use `sig[0] == Long.MaxValue` as the degenerate-doc filter). */
 case class MinHashSig(child: Expression, numHashes: Int)
-    extends MinHashKernel with CodegenFallback {
+    extends StringArrayKernel with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -97,7 +97,7 @@ case class MinHashSig(child: Expression, numHashes: Int)
   * ignores nulls); an empty/all-null input yields all-null signature
   * positions, matching the composed form's `array_min(empty) = null`. */
 case class MinHashSigMix(child: Expression, numHashes: Int)
-    extends MinHashKernel with CodegenFallback {
+    extends StringArrayKernel with CodegenFallback {
 
   // the ≤2^62 ANSI-safety claim above needs the multiplier
   // 2654435761 + 80906·k to stay below 2^32 for every seed k <

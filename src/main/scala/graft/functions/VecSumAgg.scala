@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions.udaf
   * Deterministic only up to float-add reorder: partial aggregation sums
   * in shuffle order, so results can differ in the last ulp across runs —
   * callers that need bit-stable output (the oracle-checked queries)
-  * round before comparing, same contract as [[VectorOps.dot]].
+  * round before comparing.
   */
 object VecSumAgg {
 

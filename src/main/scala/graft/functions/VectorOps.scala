@@ -4,27 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dense-vector column operators over `array<float|double>` embeddings
-  * (reference: matmul recall `eval_online/main/lightgcn.py:32-45`, mean-pool
-  * user features `ranknet/utils.py:102-126`).
+  * (reference: mean-pool user features `ranknet/utils.py:102-126`); the
+  * dot product and cosine of recall scoring are the native kernels in
+  * [[GraftFunctions]].
   *
   * All pure higher-order-function expressions — whole-stage-codegen'd, no
   * UDF serialization, no MLlib Vector boxing in the hot path.
   */
 object VectorOps {
-
-  /** Σ xᵢ·yᵢ. Inputs are cast to double; `aggregate` folds sequentially so
-    * the result is bit-deterministic for a given array order. */
-  def dot(x: Column, y: Column): Column =
-    aggregate(
-      zip_with(x.cast("array<double>"), y.cast("array<double>"), (a, b) => a * b),
-      lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(x: Column): Column =
-    sqrt(aggregate(x.cast("array<double>"), lit(0.0), (acc, v) => acc + v * v))
-
-  /** NaN (zero-vector 0/0) normalized to 0 — see GraftFunctions.cosine. */
-  def cosine(x: Column, y: Column): Column =
-    nanvl(dot(x, y) / (l2Norm(x) * l2Norm(y)), lit(0.0))
 
   /** Element-wise sum of two vectors (used by the SpMM propagation loop). */
   def vecAdd(x: Column, y: Column): Column =

@@ -154,12 +154,12 @@ object Dedup {
     * [[simHash64]] as the fast path where cross-engine parity is not
     * needed. Empty token streams yield signature 0.
     *
-    * Lowered to the native one-pass kernel
-    * ([[graft.functions.SimHash32Md5]]), bit-identical to the composed
+    * Lowered to the native one-pass md5 kernel at one part
+    * ([[graft.functions.SimHashMd5]]), bit-identical to the composed
     * `simHash32PortableHof` spec form (pinned by LlmOpsSpec; the HOF
     * form measured ~80% of d3's runtime — PLANS.md round 8). */
   def simHash32Portable(text: Column): Column =
-    graft.functions.SimHashFunctions.simHash32Md5(TextFunctions.tokens(text))
+    graft.functions.SimHashFunctions.simHashMd5(TextFunctions.tokens(text), 1)
 
   /** Engine-portable 64-bit SimHash fingerprint as `array<bigint>
     * [lo, hi]` — two 32-bit halves from ONE md5 per token (`lo` votes on
@@ -170,12 +170,12 @@ object Dedup {
     * band keys extracted by shift-and-mask never sign-extend — the
     * reason for two BIGINT halves instead of one 64-bit value whose top
     * bit would flip it negative under two engines' arithmetic shifts.
-    * Lowered to the native one-pass kernel
-    * ([[graft.functions.SimHash64Md5]]), bit-pinned to
+    * Lowered to the native one-pass md5 kernel at two parts
+    * ([[graft.functions.SimHashMd5]]), bit-pinned to
     * `simHash64PortableHof` by LlmOpsSpec. Empty token streams yield
     * [0, 0]. */
   def simHash64Portable(text: Column): Column =
-    graft.functions.SimHashFunctions.simHash64Md5(TextFunctions.tokens(text))
+    graft.functions.SimHashFunctions.simHashMd5(TextFunctions.tokens(text), 2)
 
   /** SimHash near-dup candidate pairs: the 64-bit signature is cut into
     * `bands` equal bit-bands; docs sharing any full band become candidates
@@ -256,14 +256,14 @@ object Dedup {
     * voting on bit (8 >> k) of each hex digit, so p0 ≡
     * [[simHash32Portable]] and (p0, p1) ≡ [[simHash64Portable]]: each
     * narrower family is a prefix of this one at the same digest cost.
-    * Native kernel [[graft.functions.SimHash128Md5]], bit-pinned to
-    * LlmOpsSpec's `simHash128PortableHof`. This is the fingerprint the d24
-    * residual-wall note names: four DISJOINT 32-bit lanes support
-    * band widths up to [[SimSearch.autoWidth]]'s 24-bit cap, moving
-    * the capacity wall from ~65k·target docs (64-bit, 16-bit lanes)
-    * to ~16M·target. */
+    * The md5 kernel at four parts ([[graft.functions.SimHashMd5]]),
+    * bit-pinned to LlmOpsSpec's `simHash128PortableHof`. This is the
+    * fingerprint the d24 residual-wall note names: four DISJOINT 32-bit
+    * lanes support band widths up to [[SimSearch.autoWidth]]'s 24-bit
+    * cap, moving the capacity wall from ~65k·target docs (64-bit,
+    * 16-bit lanes) to ~16M·target. */
   def simHash128Portable(text: Column): Column =
-    graft.functions.SimHashFunctions.simHash128Md5(TextFunctions.tokens(text))
+    graft.functions.SimHashFunctions.simHashMd5(TextFunctions.tokens(text), 4)
 
   /** The 128-bit extension of [[simHashPairsAuto]] — same auto-width
     * contract, four DISJOINT bands that are simply the four fingerprint
@@ -373,7 +373,7 @@ object Dedup {
       .distinct()
 
   /** Capacity audit for [[simHashPairsAuto]]'s banding — the simhash
-    * twin of [[SimSearch.lshBucketHistogramAuto]]: per-band bucket-size
+    * twin of [[SimSearch.lshBucketHistogramAutoPlanned]]: per-band bucket-size
     * histogram `(band, bucket_size, n_buckets)` at the exact width the
     * pair stage runs, so "rows silently lost to the hot-bucket cap" is
     * a monitoring query (bucket_size > cap rows never reach pair
@@ -1111,7 +1111,7 @@ object Dedup {
     * (declare an operating point, derive the fewest-qualifying-bands
     * layout, let the oracle replay the scan) applied to the sign-LSH
     * family's fixed-width form; growing corpora use
-    * [[embeddingPairsBandedAutoPlanned]]. */
+    * [[SimSearch.lshPairsAutoPlanned]]. */
   def embeddingPairsBandedPlanned(embs: DataFrame, id: String,
       vec: String, dim: Int, minCosinePct: Int, nBits: Int,
       targetDetectPct: Int, maxBucket: Int = 2000): DataFrame = {
@@ -1120,16 +1120,6 @@ object Dedup {
     SimSearch.lshPairs(embs, id, vec, dim, minCosinePct / 100.0, nBits,
       bands, maxBucket)
   }
-
-  /** [[SimSearch.lshPairsAuto]] pairs with the band count planned from the
-    * operating point ([[SimSearch.lshPairsAutoPlanned]]): width from
-    * the corpus count, bands from the recall target — both sizing
-    * dimensions closed. */
-  def embeddingPairsBandedAutoPlanned(embs: DataFrame, id: String,
-      vec: String, dim: Int, minCosinePct: Int, targetBucketSize: Long,
-      targetDetectPct: Int, maxBucket: Int = 2000): DataFrame =
-    SimSearch.lshPairsAutoPlanned(embs, id, vec, dim, minCosinePct,
-      targetBucketSize, targetDetectPct, maxBucket)
 
   /** [[semDedup]] with the cell count auto-sized from the corpus count
     * ([[SimSearch.autoCells]]): expected cell size stays ≈

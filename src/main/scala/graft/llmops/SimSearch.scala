@@ -476,15 +476,6 @@ object SimSearch {
       .groupBy(col("bk.band").cast("long").as("band"), col("bucket_size"))
       .agg(count(lit(1)).as("n_buckets"))
 
-  /** [[lshBucketHistogram]] at the width [[lshPairsAuto]] would pick —
-    * audit and pair stage see the same buckets. */
-  def lshBucketHistogramAuto(embs: DataFrame, id: String, vec: String,
-      dim: Int, bands: Int = 4, targetBucketSize: Long = 1000L): DataFrame = {
-    val n = math.max(1L, embs.count())
-    lshBucketHistogram(embs, id, vec, dim,
-      nBits = bands * autoWidth(n, targetBucketSize), bands = bands)
-  }
-
   /** Auto cell count for the IVF/SemDeDup family — [[autoWidth]]'s
     * integer-math discipline applied to cluster counts:
     * `ceil(n / targetCellSize)`, clamped to [1, 4096], so expected CELL
@@ -653,31 +644,18 @@ object SimSearch {
     * cheaper than top-k — the only wide op is the bucket join).
     * Recall trade is [[lshTopK]]'s, documented there; raise nBits
     * coverage via bands for high-recall ranges (the d6/d22 family).
+    * The planes are the md5-portable ones ([[lshBucketPortable]]), so
+    * the DuckDB oracle replays the buckets.
     * Output: (query_id, item_id, cosine ≥ minCosine, 6 dp). */
-  def lshRangeSearch(queries: DataFrame, corpus: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String,
-      minCosine: Double, dim: Int, nBits: Int = 8): DataFrame =
-    lshRangeImpl(queries, corpus, qId, qVec, cId, cVec, minCosine,
-      nBits, v => lshBucket(v, dim, nBits))
-
-  /** [[lshRangeSearch]] over the md5-portable planes (oracle twin). */
   def lshRangeSearchPortable(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       minCosine: Double, dim: Int, nBits: Int = 8): DataFrame =
-    lshRangeImpl(queries, corpus, qId, qVec, cId, cVec, minCosine,
-      nBits, v => lshBucketPortable(v, dim, nBits))
-
-  private def lshRangeImpl(queries: DataFrame, corpus: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String,
-      minCosine: Double, nBits: Int,
-      bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     hammingOneCandidates(queries, corpus, qId, qVec, cId, cVec, nBits,
-        bucketOf)
+        v => lshBucketPortable(v, dim, nBits))
       .withColumn("cosine", round(
         graft.functions.GraftFunctions.cosine(col("__qv"), col("__cv")), 6))
       .where(col("cosine") >= minCosine)
       .select(col("query_id"), col("item_id"), col("cosine"))
-  }
 
   /** The portable fit's order: every portable index (IVF centroids, PQ
     * codebooks, SemDeDup cells) is fitted from the first rows in it, a

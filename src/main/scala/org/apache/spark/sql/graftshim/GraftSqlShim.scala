@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge to Spark's `private[sql]` Column ↔ Expression converters and the
-  * session function registry. Spark 4 hid the classic converters behind
+/** Bridge to Spark's `private[sql]` Column ↔ Expression converters and
+  * the context's listener bus and RDD cache. Spark 4 hid the classic converters behind
   * `private[sql]`; extension libraries conventionally reach them from a
   * subpackage of `org.apache.spark.sql` (the access scope of
   * `private[sql]`). Only this file lives in Spark's namespace; everything
@@ -27,14 +27,6 @@ object GraftSqlShim {
     * still-wrapped node would reach codegen unresolved (Unevaluable). */
   def eagerExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
-
-  /** Register a native expression under a SQL function name in the
-    * session (usable from `expr("name(...)")` / `spark.sql`). */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 
   /** Block until every event posted so far has reached its listeners. */
   def drainListenerBus(spark: SparkSession): Unit =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +13,18 @@ class DotProductSpec extends AnyFunSuite {
     val pairs = emb.select($"vec_id".as("a"), $"embedding".as("x"))
       .crossJoin(emb.where($"vec_id" < 20).select($"vec_id".as("b"), $"embedding".as("y")))
     val rows = pairs.select(
-        VectorOps.dot($"x", $"y").as("hof"),
+        VectorHof.dot($"x", $"y").as("hof"),
         GraftFunctions.dot($"x", $"y").as("native"),
-        VectorOps.cosine($"x", $"y").as("hof_cos"),
-        GraftFunctions.cosine($"x", $"y").as("native_cos"))
-      .as[(Double, Double, Double, Double)].collect()
+        VectorHof.cosine($"x", $"y").as("hof_cos"),
+        GraftFunctions.cosine($"x", $"y").as("native_cos"),
+        VectorHof.l2Norm($"x").as("hof_norm"),
+        sqrt(GraftFunctions.dot($"x", $"x")).as("native_norm"))
+      .as[(Double, Double, Double, Double, Double, Double)].collect()
     assert(rows.nonEmpty)
-    rows.foreach { case (h, n, hc, nc) =>
+    rows.foreach { case (h, n, hc, nc, hn, nn) =>
       assert(h == n, s"dot mismatch $h vs $n")
       assert(hc == nc, s"cosine mismatch $hc vs $nc")
+      assert(hn == nn, s"l2 norm mismatch $hn vs $nn")
     }
   }
 
@@ -37,11 +40,46 @@ class DotProductSpec extends AnyFunSuite {
   test("double arrays and SQL registration work") {
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("x", "y")
     assert(df.select(GraftFunctions.dot($"x", $"y")).as[Double].head() == 32.0)
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("dot_test")
     assert(spark.sql("SELECT graft_dot(x, y) FROM dot_test").as[Double].head() == 32.0)
     val c = spark.sql("SELECT graft_cosine(x, x) FROM dot_test").as[Double].head()
     assert(math.abs(c - 1.0) < 1e-12)
+  }
+
+  test("native kernels fail analysis on a wrong input type, naming the expected type") {
+    import graft.functions._
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graftshim.GraftSqlShim
+    val df = Seq((Seq("a", "b"), Seq(1, 2), Seq(1.0, 2.0)))
+      .toDF("strs", "ints", "dbls")
+    def in(c: String): Expression = GraftSqlShim.expression(df(c))
+    // (kernel, its well-typed input column, the type its check names)
+    val tokens = "strs" -> "array<string>"
+    val vectors = "dbls" -> "array<float|double>"
+    val table: Seq[(String, Expression => Expression, (String, String))] = Seq(
+      ("MinHashSig", MinHashSig(_, 4), tokens),
+      ("MinHashSigMix", MinHashSigMix(_, 4), tokens),
+      ("SimHashMd5 parts 1", SimHashMd5(_, 1), tokens),
+      ("SimHashMd5 parts 2", SimHashMd5(_, 2), tokens),
+      ("SimHashMd5 parts 4", SimHashMd5(_, 4), tokens),
+      ("SimHash64Xx", SimHash64Xx(_), tokens),
+      ("DotProduct", x => DotProduct(x, x), vectors),
+      ("DotProduct, one side", x => DotProduct(in("dbls"), x), vectors),
+      ("CosineSim", x => CosineSim(x, x), vectors),
+      ("CosineSim, one side", x => CosineSim(x, in("dbls")), vectors),
+      ("RankCells", RankCells(_, Seq(Seq(1.0, 0.0)), 1), vectors))
+    table.foreach { case (name, kernel, (good, expected)) =>
+      assert(df.select(GraftSqlShim.column(kernel(in(good)))).collect().length == 1,
+        s"$name rejected its own input type")
+      val err = intercept[AnalysisException](
+        df.select(GraftSqlShim.column(kernel(in("ints")))))
+      assert(err.getMessage.contains(expected),
+        s"$name: the message does not name $expected: ${err.getMessage}")
+    }
+    Seq(0, 5, -1).foreach { p =>
+      intercept[IllegalArgumentException](SimHashMd5(in("strs"), p))
+    }
   }
 
   test("GraftExtensions injects SQL functions at session build") {
@@ -146,7 +184,7 @@ class DotProductSpec extends AnyFunSuite {
         GraftFunctions.dot($"x", $"y"), GraftFunctions.cosine($"x", $"y"))
       .as[(Option[Double], Option[Double])].collect()
     val composed = df.select(
-        VectorOps.dot($"x", $"y"), VectorOps.cosine($"x", $"y"))
+        VectorHof.dot($"x", $"y"), VectorHof.cosine($"x", $"y"))
       .as[(Option[Double], Option[Double])].collect()
     assert(native.toSeq == composed.toSeq)
     assert(native(0)._1.isEmpty && native(1)._1.isEmpty && native(2)._1.isEmpty)

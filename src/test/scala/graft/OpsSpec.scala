@@ -276,7 +276,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("randomProject: JL norm/inner-product preservation, deterministic") {
-    import graft.functions.VectorOps
+    import graft.functions.{GraftFunctions, VectorOps}
     val emb = Tables.embeddings(spark, TestSpark.sf)
     val proj = emb.select($"vec_id",
       $"embedding".cast("array<double>").as("x"),
@@ -284,7 +284,8 @@ class OpsSpec extends AnyFunSuite {
     // E[‖y‖²] = ‖x‖² under the scaled sign matrix; corpus-averaged the
     // ratio must concentrate near 1 (16 output dims → sd ≈ √(2/16))
     val ratio = proj.select(
-        (VectorOps.dot($"y", $"y") / VectorOps.dot($"x", $"x")).as("r"))
+        (GraftFunctions.dot($"y", $"y") / GraftFunctions.dot($"x", $"x"))
+          .as("r"))
       .agg(avg($"r")).as[Double].head()
     assert(ratio > 0.7 && ratio < 1.3, s"mean norm ratio $ratio")
     assert(proj.select($"y").head().getSeq[Double](0).length == 16)

@@ -11,6 +11,7 @@ object TestSpark {
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions()(_))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -61,7 +61,6 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("graft_topk is callable from SQL via the extensions registry") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((1, 3), (1, 9), (1, 5), (2, 2)).toDF("g", "v")
     df.createOrReplaceTempView("tk_in")
     val got = spark.sql(
@@ -109,7 +108,6 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("graft_kmv is callable from SQL via the extensions registry") {
-    graft.functions.GraftFunctions.register(spark)
     val df = (1L to 5L).toDF("id")
     df.createOrReplaceTempView("kmv_in")
     val got = spark.sql(
